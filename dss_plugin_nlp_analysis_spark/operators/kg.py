@@ -7,10 +7,10 @@ ontology node)` triples with full provenance.
 Canonicalization is a connected-components pass over the alias graph
 (tag ↔ keyword edges from the ontology). The ontology is broadcast-sized
 (SURVEY.md §1.4), so union-find runs on the driver and the resulting
-tag→canonical map ships as a broadcast join payload — no iterative
-distributed CC is needed (it would be for a billion-node alias graph; the
-map-side design keeps that door open by isolating the mapping behind one
-small dimension table).
+tag→canonical map ships in the extraction UDF's broadcast, applied per
+match inside the UDF — no iterative distributed CC and no join is needed
+(a billion-node alias graph would need both; ``canonical_map`` is the one
+place that would change).
 """
 
 from __future__ import annotations
@@ -185,11 +185,13 @@ def build_triples(
 ) -> DataFrame:
     """Emit the triples table (one row per mention, no-match docs dropped).
 
-    Physical plan: optional repartition by ``xxhash64(url)`` (north rule —
-    defuses hot-domain skew before the embarrassingly-parallel match
-    stage), one Arrow UDF pass, explode, then a broadcast join to the
-    canonical-node dimension. Zero non-broadcast shuffles after the
-    optional repartition.
+    Physical plan: optional repartition by ``xxhash64(url)`` (defuses
+    hot-domain skew before the embarrassingly-parallel match stage), one
+    fused Arrow UDF pass that extracts matches, resolves their sentences
+    and maps each tag to its canonical node from the same broadcast, then
+    one explode. Zero joins, and zero exchanges beyond the optional
+    repartition. ``plans.checkpoint.run_checkpointed_build`` does that
+    repartition itself before calling its ``triple_fn``.
     """
     spark = docs_df.sparkSession
     clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
@@ -230,7 +232,7 @@ def build_triples(
     lang_expr = F.col(lang_col) if lang_col else F.lit(language)
     out = docs_df.select(
         F.col(url_col).alias("subj"),
-        (F.col(lang_col) if lang_col else F.lit(language)).alias("lang"),
+        lang_expr.alias("lang"),
         (F.col(ts_col) if ts_col else F.lit(None).cast("timestamp")).alias("warc_ts"),
         F.explode(udf(F.col(text_col), lang_expr)).alias("m"),
     ).select(

@@ -4,9 +4,18 @@ North rule: "resumable from checkpoint with per-partition lineage +
 metrics". The reference has no fault tolerance at all (SURVEY.md §4.2);
 this module adds it at the partition level:
 
-- input is bucketed by ``xxhash64(url) % num_buckets`` (also the skew
-  defuser — hot domains spread across buckets)
-- each completed bucket writes its triples under ``output/bucket=<b>/``
+- input is bucketed by ``xxhash64(url) % num_buckets``; a job group
+  filters its buckets, then hash-distributes them with
+  ``repartition(n, xxhash64(url))`` before ``triple_fn`` sees them, so the
+  kernel stage runs on ``n`` balanced tasks whatever the crawl's file
+  layout (urls are distinct per page: a hot domain spreads over all
+  tasks). ``n = max(input partition count, defaultParallelism)``, fixed
+  once per build: at least one task per core, and at scale as many tasks
+  as the scan already planned. The explicit count also keeps AQE from
+  coalescing this small-in-bytes, CPU-heavy stage into one partition.
+  (The input's count is free for a file scan; an input that ends in a
+  shuffle runs that shuffle once to learn it.)
+- each completed bucket writes its triples under ``output/_bucket=<b>/``
   and appends a manifest row (bucket, input_rows, triples, group_wall_s,
   output_fingerprint, completed_at) to ``<checkpoint_dir>/manifest/``
 - a restart reads the manifest and processes only missing buckets.
@@ -17,7 +26,11 @@ so a crash mid-bucket re-runs just that bucket. (On a real lakehouse this
 manifest becomes an Iceberg snapshot/metadata table; parquet keeps the
 sandbox dependency-free — sources/catalog.py gates the Iceberg path.)
 
-Lineage fingerprint: a COMMUTATIVE per-bucket hash — sum of per-row
+Lineage: ``input_rows`` comes from an ``Observation`` on the
+repartitioned docs, so it is counted in the write job's result stage (no
+second scan; a result stage's metrics merge once per partition, unlike a
+retried shuffle-map task's). The output fingerprint is a COMMUTATIVE
+per-bucket hash of the committed output — sum of per-row
 xxhash64(subj|pred|obj) widened to decimal(38,0). Order-insensitive (rows
 arrive in any partition order), duplicate-sensitive (unlike XOR, a
 re-appended row changes the sum), and constant-memory per aggregation
@@ -38,9 +51,10 @@ violation surfaces as ValueError.
 from __future__ import annotations
 
 import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,11 +85,17 @@ class KGBuildResult:
 
 
 def read_manifest(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The manifest rows written so far; empty when no manifest exists yet.
+    Any other failure (a corrupt or unreadable manifest) raises: reading it
+    as "nothing done" would silently rebuild every bucket."""
     path = f"{checkpoint_dir}/manifest"
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    # test for the path rather than catch the failed read: once a session
+    # has used an Observation, Spark's observation listener also logs every
+    # failed query as an ERROR with its stack trace
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def _output_fingerprint() -> F.Column:
@@ -100,11 +120,19 @@ def run_checkpointed_build(
     """Run ``triple_fn(bucket_docs) -> DataFrame`` over url-hash buckets,
     skipping buckets already recorded in the manifest.
 
-    ``bucket_docs`` carries a ``_bucket`` column (the url-hash bucket);
-    ``triple_fn`` may preserve it on its output to pin each triple to its
-    input bucket for free. Outputs without ``_bucket`` must satisfy the
-    subj == url contract (the bucket is re-derived from subj and, when
+    ``bucket_docs`` is the group's docs after
+    ``repartition(n, xxhash64(url_col))`` with
+    ``n = max(docs_df partitions, defaultParallelism)``: the one exchange
+    of the write job, below ``triple_fn``'s kernel (see module doc). It
+    carries a ``_bucket`` column (the url-hash bucket); ``triple_fn`` may
+    preserve it on its output to pin each triple to its input bucket for
+    free. Outputs without ``_bucket`` must satisfy the subj == url
+    contract (the bucket is re-derived from subj and, when
     ``validate_buckets``, checked against the group before writing).
+
+    ``triple_fn`` should build its output lazily from ``bucket_docs``: an
+    action on it would run the exchange once more, and the first action
+    is the one whose rows become the manifest's ``input_rows``.
 
     ``buckets_per_job`` groups buckets into jobs: at 100 TB you want few
     large jobs (amortized scans); the manifest granularity stays per-bucket
@@ -115,12 +143,21 @@ def run_checkpointed_build(
     docs_b = docs_df.withColumn(
         "_bucket", (F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_buckets))).cast("int")
     )
+    n_tasks = max(docs_df.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism)
     total_triples = 0
     processed: list[int] = []
     for i in range(0, len(todo), buckets_per_job):
         group = todo[i:i + buckets_per_job]
         t0 = time.perf_counter()
-        part = docs_b.where(F.col("_bucket").isin(group))
+        # input rows per bucket, counted where the write job reads them
+        in_rows = [F.count(F.when(F.col("_bucket") == b, 1)).alias(str(b)) for b in group]
+        obs_name = f"kg_input_rows_{uuid.uuid4().hex}"
+        obs = Observation(obs_name)
+        part = (
+            docs_b.where(F.col("_bucket").isin(group))
+            .repartition(n_tasks, F.xxhash64(F.col(url_col)))
+            .observe(obs, *in_rows)
+        )
         triples = triple_fn(part)
         derived = "_bucket" not in triples.columns
         if derived:
@@ -139,6 +176,10 @@ def run_checkpointed_build(
                     )
                 )
             triples = triples.withColumn("_bucket", bucket)
+        # an output that no longer reads the observed docs (triple_fn
+        # ignored them, or the optimizer dropped them as empty) never
+        # reports the observation: count those inputs with their own query
+        observed = obs_name in triples._jdf.queryExecution().optimizedPlan().toString()
         # dynamic partition overwrite (writer-scoped, not session config):
         # re-running a bucket replaces exactly that bucket's directory —
         # idempotent resume, no duplicate appends
@@ -160,13 +201,12 @@ def run_checkpointed_build(
             raise
         wall = time.perf_counter() - t0
         # lineage: per-bucket input/output counts + output fingerprint
-        in_counts = {
-            r["_bucket"]: r["n"]
-            for r in part.groupBy("_bucket").agg(F.count("*").alias("n")).collect()
-        }
+        in_counts = obs.get if observed else part.agg(*in_rows).first().asDict()
+        # read back with the written schema: an output that has no rows
+        # yet has no parquet footer to infer one from
         out_stats = {
             r["_bucket"]: (r["n"], r["fp"])
-            for r in spark.read.parquet(output_dir)
+            for r in spark.read.schema(triples.schema).parquet(output_dir)
             .where(F.col("_bucket").isin(group))
             .groupBy("_bucket")
             .agg(F.count("*").alias("n"), _output_fingerprint().alias("fp"))
@@ -176,7 +216,7 @@ def run_checkpointed_build(
         now = time.time()
         for b in group:
             n_out, fp = out_stats.get(b, (0, None))
-            rows.append((b, in_counts.get(b, 0), n_out, wall, fp, now))
+            rows.append((b, in_counts[str(b)], n_out, wall, fp, now))
             total_triples += n_out
         spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
             f"{checkpoint_dir}/manifest"

@@ -15,6 +15,7 @@ import sys
 import time
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def main(argv: list[str]) -> None:
@@ -58,7 +59,15 @@ def main(argv: list[str]) -> None:
         ignore_diacritics=args.ignore_diacritics,
         link_entities=args.link_entities,
     )
-    langs = args.languages.split(",") if args.languages else None
+    if args.languages:
+        langs = args.languages.split(",")
+    elif lang_col:
+        # one pre-scan for the whole build: left to build_triples, it would
+        # run per job group, on docs already shuffled for the kernel
+        langs = [r[0] for r in docs.select(lang_col).where(F.col(lang_col).isNotNull())
+                 .distinct().collect()]
+    else:
+        langs = None
 
     def triple_fn(part):
         return build_triples(

@@ -1,6 +1,7 @@
 """KG materialization tests: triples, canonicalization, entity linking,
 checkpoint resumability (SEMANTICS.md §8, north rule)."""
 
+import pyspark.sql.functions as F
 import pytest
 
 from dss_plugin_nlp_analysis_spark.functions.html_text import extract_text
@@ -163,6 +164,131 @@ def test_checkpointed_build_resumes(spark, tmp_path):
     # output is complete and readable
     total = spark.read.parquet(out).count()
     assert total == r1.total_triples > 0
+
+
+def test_checkpointed_build_manifest_input_rows_per_bucket(spark, tmp_path):
+    # every bucket's input_rows (observed inside the write job) equals an
+    # independent count of the input by url-hash bucket, empty ones as 0
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import (
+        read_manifest,
+        run_checkpointed_build,
+    )
+
+    docs = pages_df(spark, 100, seed=42)
+    onto = demo_kg_ontology(spark)
+
+    def triple_fn(part):
+        return build_triples(part, onto, languages=["en", "fr", "es", "de"])
+
+    ckpt = str(tmp_path / "ckpt")
+    run_checkpointed_build(
+        spark, docs, triple_fn, str(tmp_path / "out"), ckpt,
+        num_buckets=8, buckets_per_job=3,
+    )
+    expected = dict.fromkeys(range(8), 0)
+    for r in docs.groupBy(F.pmod(F.xxhash64("url"), F.lit(8)).alias("b")).count().collect():
+        expected[r["b"]] = r["count"]
+    got = {r["bucket"]: r["input_rows"] for r in read_manifest(spark, ckpt).collect()}
+    assert got == expected
+
+
+def test_checkpointed_build_spreads_hot_host_over_cores(spark, tmp_path):
+    # a one-partition input from one hot host reaches triple_fn as
+    # max(1, defaultParallelism) url-hash partitions, every one non-empty
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    docs = spark.createDataFrame(
+        [(f"https://hot.example.com/page/{i}", f"text {i}") for i in range(200)],
+        "url string, text string",
+    ).coalesce(1)
+    assert docs.rdd.getNumPartitions() == 1
+    seen = []
+
+    def triple_fn(part):
+        seen.append(part)
+        return part.select(
+            "_bucket", F.col("url").alias("subj"), F.lit("p").alias("pred"),
+            F.col("text").alias("obj"),
+        )
+
+    res = run_checkpointed_build(
+        spark, docs, triple_fn, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        num_buckets=4, buckets_per_job=4,
+    )
+    assert res.total_triples == 200
+    n = max(1, spark.sparkContext.defaultParallelism)
+    assert [p.rdd.getNumPartitions() for p in seen] == [n]
+    sizes = [
+        r["count"]
+        for r in seen[0].groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    ]
+    assert len(sizes) == n and sum(sizes) == 200
+    assert max(sizes) < 2 * 200 / n
+
+
+def test_checkpointed_build_counts_inputs_the_output_drops(spark, tmp_path):
+    # an output the optimizer folds to empty no longer reads the observed
+    # docs: input_rows still comes out right, and the build does not hang
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import (
+        read_manifest,
+        run_checkpointed_build,
+    )
+
+    docs = spark.createDataFrame(
+        [(f"http://d{i}.com/x", f"text {i}") for i in range(20)],
+        "url string, text string",
+    )
+
+    def empty_triple_fn(part):
+        return part.where(F.lit(False)).select(
+            F.col("url").alias("subj"), F.lit("p").alias("pred"), F.col("text").alias("obj"),
+        )
+
+    ckpt = str(tmp_path / "ckpt")
+    res = run_checkpointed_build(
+        spark, docs, empty_triple_fn, str(tmp_path / "out"), ckpt, num_buckets=2,
+    )
+    assert res.total_triples == 0
+    m = read_manifest(spark, ckpt).collect()
+    assert sorted(r["bucket"] for r in m) == [0, 1]
+    assert sum(r["input_rows"] for r in m) == 20
+
+
+def test_checkpointed_build_refuses_corrupt_manifest(spark, tmp_path):
+    # a corrupt manifest must fail the build, never read as "nothing done"
+    # (which would silently rebuild and overwrite every bucket)
+    import os
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    docs = spark.createDataFrame(
+        [(f"http://d{i}.com/x", f"text {i}") for i in range(20)],
+        "url string, text string",
+    )
+
+    def triple_fn(part):
+        return part.select(
+            F.col("url").alias("subj"), F.lit("p").alias("pred"), F.col("text").alias("obj"),
+        )
+
+    out = tmp_path / "out"
+    ckpt = tmp_path / "ckpt"
+    run_checkpointed_build(spark, docs, triple_fn, str(out), str(ckpt), num_buckets=2)
+    (ckpt / "manifest" / "part-99999-corrupt.parquet").write_bytes(b"not a parquet file")
+    written = {p: os.path.getmtime(p) for p in out.rglob("*.parquet")}
+    with pytest.raises(Exception, match="part-99999-corrupt.parquet"):
+        run_checkpointed_build(spark, docs, triple_fn, str(out), str(ckpt), num_buckets=2)
+    assert {p: os.path.getmtime(p) for p in out.rglob("*.parquet")} == written
+
+
+def test_read_manifest_raises_unless_manifest_is_missing(spark, tmp_path):
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import read_manifest
+
+    # absent manifest: a fresh build, nothing done
+    assert read_manifest(spark, str(tmp_path / "fresh")).collect() == []
+    # an unreadable location is an error, not an empty manifest
+    with pytest.raises(Exception, match="nosuchfs"):
+        read_manifest(spark, "nosuchfs://bucket/ckpt")
 
 
 def test_canonical_map_transitive_chain():

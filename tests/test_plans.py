@@ -86,6 +86,31 @@ def test_checkpoint_fingerprint_constant_memory_plan(spark):
     assert "partial_sum" in plan or "sum(" in plan  # map-side combinable
 
 
+def test_checkpointed_triples_one_url_hash_exchange_below_kernel(spark, tmp_path):
+    # the checkpointed build hash-distributes each group's docs exactly
+    # once, and the Arrow kernel runs above that exchange (balanced tasks);
+    # build_triples itself adds no exchange and no join
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+    from dss_plugin_nlp_analysis_spark.sources.webpages import demo_kg_ontology, pages_df
+
+    onto = demo_kg_ontology(spark)
+    written = []
+
+    def triple_fn(part):
+        written.append(build_triples(part, onto, languages=["en", "fr", "es", "de"]))
+        return written[-1]
+
+    run_checkpointed_build(
+        spark, pages_df(spark, 60, seed=3), triple_fn,
+        str(tmp_path / "out"), str(tmp_path / "ckpt"), num_buckets=2, buckets_per_job=2,
+    )
+    plan = plan_of(written[0])
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(xxhash64(url") == 1, plan
+    assert "Join" not in plan, plan
+    assert plan.index("ArrowEvalPython") < plan.index("Exchange"), plan
+
+
 def test_ngram_jaccard_caps_posting_lists_in_plan(spark):
     # candidate generation must be gated by the shingle document-frequency
     # aggregate (the f^2/2 boilerplate guard), visible as a count-per-
