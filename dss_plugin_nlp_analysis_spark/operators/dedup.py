@@ -9,9 +9,12 @@ Scale notes (100 TB):
 - exact_dedup shuffles once on the 32-hex-char fingerprint (not the text).
 - minhash signatures are computed map-side per document; only
   (doc_id, band_key) pairs — a few dozen bytes/doc — reach the shuffle.
-- LSH band-bucket join is a self-equi-join on band_key; hot buckets (boiler-
-  plate) are capped via ``max_bucket_size`` to bound quadratic blowup, the
-  standard web-dedup guard.
+- LSH banding groups once on band_key, collecting each bucket's sorted id
+  array, and pairs ids by a double explode within the bucket (no
+  self-join); hot buckets (boilerplate) are capped via ``max_bucket_size``
+  before the pair step to bound quadratic blowup, the standard web-dedup
+  guard. ``incremental_minhash_pairs`` still joins the delta's band keys
+  to the capped base keys.
 """
 
 from __future__ import annotations
@@ -177,8 +180,9 @@ def _banded_small_keys(
                 *[
                     # the raw "b|s..|s.." concat IS the band key: grouping/
                     # joining on it yields exactly the md5-key buckets (the
-                    # concat is injective over the fixed-width hex windows)
-                    # while skipping the hash and shuffling 11 bytes, not 32
+                    # concat is injective: its operands are decimal ints,
+                    # digits only, so the "|" separators cannot be forged)
+                    # while skipping the hash and shuffling a short string
                     F.concat_ws(
                         "|",
                         F.lit(b),
@@ -245,8 +249,9 @@ def minhash_candidate_pairs(
                 *[
                     # the raw "b|s..|s.." concat IS the band key: grouping/
                     # joining on it yields exactly the md5-key buckets (the
-                    # concat is injective over the fixed-width hex windows)
-                    # while skipping the hash and shuffling 11 bytes, not 32
+                    # concat is injective: its operands are decimal ints,
+                    # digits only, so the "|" separators cannot be forged)
+                    # while skipping the hash and shuffling a short string
                     F.concat_ws(
                         "|",
                         F.lit(b),

@@ -24,9 +24,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
-from ..functions.langsupport import validate_languages
 from ..functions.textnorm import normalize_text
-from .ontology import CompiledOntology, TagOptions, clean_ontology, compile_ontology
+from .ontology import CompiledOntology, TagOptions, collect_ontology, compile_ontology
 from .tagger import extract_mentions, process_document, sentence_of
 
 __all__ = [
@@ -194,23 +193,10 @@ def build_triples(
     repartition itself before calling its ``triple_fn``.
     """
     spark = docs_df.sparkSession
-    clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
-    rows = [
-        (r["tag"], r["keyword"], r["category"] if category_col else None)
-        for r in clean.collect()
-    ]
-    if languages is None:
-        if lang_col:
-            languages = [
-                r[0]
-                for r in docs_df.select(lang_col)
-                .where(F.col(lang_col).isNotNull())
-                .distinct()
-                .collect()
-            ]
-        else:
-            languages = [language]
-    languages = validate_languages(languages, skip_unknown)
+    rows, languages = collect_ontology(
+        ontology_df, docs_df, tag_col, keyword_col, category_col,
+        lang_col, language, languages, skip_unknown,
+    )
     compiled = compile_ontology(rows, languages, options, category_col is not None)
 
     if repartition_by_url:

@@ -8,8 +8,9 @@ Reference semantics (SEMANTICS.md §5):
   per-language match patterns (J1/J2 build side).
 
 The ontology is broadcast-sized by design (SURVEY.md §1.4): cleaning runs
-as native Catalyst ops; compilation collects the cleaned rows to the driver
-and builds per-language token patterns to ship via ``sc.broadcast``.
+as native Catalyst ops; ``collect_ontology`` brings the cleaned rows to the
+driver as one Arrow table (no per-row pickling), and compilation builds
+per-language token patterns to ship via ``sc.broadcast``.
 """
 
 from __future__ import annotations
@@ -19,15 +20,18 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.langsupport import validate_languages
 from ..functions.lemmas import lemma_table, lemmatize_tokens
 from ..functions.textnorm import normalize_text
-from ..functions.tokenizer import tokenize
+from ..functions.tokenizer import tokenize_raw
 from .automaton import TokenAutomaton
 
 __all__ = [
     "TagOptions",
     "CompiledOntology",
     "clean_ontology",
+    "collect_ontology",
+    "document_languages",
     "compile_ontology",
     "align_ontologies",
     "keyword_match_tokens",
@@ -66,6 +70,42 @@ def clean_ontology(
             F.coalesce(F.nullif(F.col(category_col), F.lit("")), F.lit(UNCATEGORIZED)).alias("category")
         )
     return df.select(*cols).where(F.col("tag").isNotNull() & F.col("keyword").isNotNull())
+
+
+def document_languages(docs_df: DataFrame, lang_col: str) -> list[str]:
+    """The distinct non-NULL values of ``lang_col`` (the reference's
+    language pre-scan, recipe.py:14-18): one aggregate query."""
+    langs = docs_df.select(lang_col).where(F.col(lang_col).isNotNull()).distinct()
+    return langs.toArrow().column(0).to_pylist()
+
+
+def collect_ontology(
+    ontology_df: DataFrame,
+    docs_df: DataFrame,
+    tag_col: str = "tag",
+    keyword_col: str = "keyword",
+    category_col: str | None = None,
+    lang_col: str | None = "lang",
+    language: str = "en",
+    languages: list[str] | None = None,
+    skip_unknown: bool = False,
+) -> tuple[list[tuple[str, str, str | None]], list[str]]:
+    """Driver inputs of ``compile_ontology``: the cleaned ontology rows
+    ``(tag, keyword, category or None)`` and the languages to compile.
+
+    The rows arrive as one Arrow table, in the cleaned frame's row order
+    (payload order carries the dup-keyword tie rules, SEMANTICS.md §5).
+    ``languages`` defaults to the documents' distinct ``lang_col`` values
+    (``[language]`` without a language column); unsupported codes raise
+    unless ``skip_unknown`` (P8 guard, dku_plugin_config_loading.py:153-159).
+    """
+    table = clean_ontology(ontology_df, tag_col, keyword_col, category_col).toArrow()
+    tags = table.column("tag").to_pylist()
+    keywords = table.column("keyword").to_pylist()
+    categories = table.column("category").to_pylist() if category_col else [None] * len(tags)
+    if languages is None:
+        languages = document_languages(docs_df, lang_col) if lang_col else [language]
+    return list(zip(tags, keywords, categories)), validate_languages(languages, skip_unknown)
 
 
 @dataclass
@@ -113,13 +153,22 @@ def keyword_match_tokens(
 ) -> tuple[str, ...]:
     """Normalize + tokenize (+ lemmatize) one keyword into its match-key
     token tuple (ontology_tagger.py:196-232 semantics)."""
-    norm = normalize_text(
+    return _match_tokens(_normalize_keyword(keyword, options), lang, options, table)
+
+
+def _normalize_keyword(keyword: str, options: TagOptions) -> str:
+    return normalize_text(
         keyword,
         ignore_case=options.ignore_case,
         lemmatization=options.lemmatization,
         ignore_diacritics=options.ignore_diacritics,
     )
-    toks = [t.text for t in tokenize(norm, lang)]
+
+
+def _match_tokens(
+    norm: str, lang: str, options: TagOptions, table: dict[str, str]
+) -> tuple[str, ...]:
+    toks = [t[0] for t in tokenize_raw(norm, lang)]
     if options.lemmatization:
         toks = lemmatize_tokens(toks, table)
     return tuple(toks)
@@ -145,10 +194,17 @@ def compile_ontology(
         lang: (lemma_table(lang, lemma_lookup_dir) if options.lemmatization else {})
         for lang in languages
     }
-    patterns = {
-        lang: [keyword_match_tokens(kw, lang, options, tables[lang]) for _t, kw, _c in rows]
-        for lang in languages
-    }
+    # keyword_match_tokens once per DISTINCT keyword (normalization is
+    # language-independent, so once per keyword across languages): rows
+    # repeat keywords as aliases of several tags
+    norms: dict[str, str] = {}
+    for _t, kw, _c in rows:
+        if kw not in norms:
+            norms[kw] = _normalize_keyword(kw, options)
+    patterns = {}
+    for lang in languages:
+        toks = {kw: _match_tokens(norm, lang, options, tables[lang]) for kw, norm in norms.items()}
+        patterns[lang] = [toks[kw] for _t, kw, _c in rows]
     profiles: dict[str, dict[int, frozenset[str]]] = {}
     if options.link_entities:
         for lang in languages:

@@ -37,14 +37,13 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
-from ..functions.langsupport import validate_languages
 from ..functions.lemmas import lemmatize_tokens
 from ..functions.naming import ordered_with_new_after, unique_names
 from ..functions.sentencizer import sentence_token_spans
 from ..functions.textnorm import clean_linebreaks, normalize_text
 from ..functions.tokenizer import tokenize_raw
 from .automaton import filter_leftmost_longest
-from .ontology import CompiledOntology, TagOptions, clean_ontology, compile_ontology
+from .ontology import CompiledOntology, TagOptions, collect_ontology, compile_ontology
 
 __all__ = [
     "MATCH_SCHEMA",
@@ -676,20 +675,10 @@ def tag_documents(
     """
     if output_format not in OUTPUT_FORMATS:
         raise ValueError(f"unknown output_format '{output_format}'")
-    clean = clean_ontology(ontology_df, tag_col, keyword_col, category_col)
-    rows = [(r["tag"], r["keyword"], r["category"] if category_col else None)
-            for r in clean.collect()]
-    if languages is None:
-        if lang_col:
-            languages = [
-                r[0]
-                for r in docs_df.select(lang_col).where(F.col(lang_col).isNotNull()).distinct().collect()
-            ]
-        else:
-            languages = [language]
-    # P8 guard (dku_plugin_config_loading.py:153-159): unsupported codes
-    # raise, unless the caller opts into skip-and-continue
-    languages = validate_languages(languages, skip_unknown)
+    rows, languages = collect_ontology(
+        ontology_df, docs_df, tag_col, keyword_col, category_col,
+        lang_col, language, languages, skip_unknown,
+    )
     has_category = category_col is not None
     compiled = compile_ontology(
         rows, languages, options, has_category, lemma_lookup_dir

@@ -17,8 +17,20 @@ this module adds it at the partition level:
   shuffle runs that shuffle once to learn it.)
 - each completed bucket writes its triples under ``output/_bucket=<b>/``
   and appends a manifest row (bucket, input_rows, triples, group_wall_s,
-  output_fingerprint, completed_at) to ``<checkpoint_dir>/manifest/``
-- a restart reads the manifest and processes only missing buckets.
+  output_fingerprint, completed_at, num_buckets) to
+  ``<checkpoint_dir>/manifest/``
+- a restart reads the manifest and processes only missing buckets. The
+  bucket ids only mean something for the bucket count that made them: a
+  manifest row whose ``num_buckets`` differs from the current one raises
+  ValueError (skipping "done" bucket ids of another layout would leave
+  stale triples beside rewritten ones). Rows of older manifests, written
+  before the column existed, read it as NULL and resume as before.
+
+Manifest I/O is Arrow on the driver side: a missing manifest reads as a
+frame over an empty ``pyarrow.Table`` and each group's rows are appended
+from one, so both are a ``LocalRelation`` in the plan rather than a
+pickled-row RDD (``sc.parallelize``), which costs a round trip of Python
+object serialization per call.
 
 Atomicity: a bucket's output directory is written with dynamic partition
 overwrite and its manifest row is appended only after the write commits,
@@ -54,9 +66,11 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 __all__ = ["KGBuildResult", "run_checkpointed_build", "read_manifest"]
 
@@ -73,8 +87,11 @@ MANIFEST_SCHEMA = T.StructType(
         # commutative hash of this bucket's OUTPUT triples (see module doc)
         T.StructField("output_fingerprint", T.StringType()),
         T.StructField("completed_at", T.DoubleType()),
+        # the build's bucket count; NULL in manifests written before it
+        T.StructField("num_buckets", T.IntegerType()),
     ]
 )
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 @dataclass
@@ -94,7 +111,7 @@ def read_manifest(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     # failed query as an ERROR with its stack trace
     hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
     if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return spark.createDataFrame(_MANIFEST_ARROW.empty_table())
     return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
@@ -137,8 +154,21 @@ def run_checkpointed_build(
     ``buckets_per_job`` groups buckets into jobs: at 100 TB you want few
     large jobs (amortized scans); the manifest granularity stays per-bucket
     because the output is partitioned by bucket and recorded per-bucket.
+
+    A manifest recorded with another ``num_buckets`` raises ValueError
+    before any work (see module doc).
     """
-    done = {r["bucket"] for r in read_manifest(spark, checkpoint_dir).collect()}
+    manifest =read_manifest(spark, checkpoint_dir).select("bucket", "num_buckets").collect()
+    other = sorted({r["num_buckets"] for r in manifest} - {None, num_buckets})
+    if other:
+        raise ValueError(
+            f"the checkpoint at {checkpoint_dir} was built with num_buckets="
+            f"{', '.join(map(str, other))}, but this build uses num_buckets="
+            f"{num_buckets}: its bucket ids name other url sets, so resuming "
+            "would duplicate triples. Resume with the same num_buckets or "
+            "start a fresh output and checkpoint."
+        )
+    done = {r["bucket"] for r in manifest}
     todo = [b for b in range(num_buckets) if b not in done]
     docs_b = docs_df.withColumn(
         "_bucket", (F.pmod(F.xxhash64(F.col(url_col)), F.lit(num_buckets))).cast("int")
@@ -216,9 +246,14 @@ def run_checkpointed_build(
         now = time.time()
         for b in group:
             n_out, fp = out_stats.get(b, (0, None))
-            rows.append((b, in_counts[str(b)], n_out, wall, fp, now))
+            rows.append({
+                "bucket": b, "input_rows": in_counts[str(b)], "triples": n_out,
+                "group_wall_s": wall, "output_fingerprint": fp, "completed_at": now,
+                "num_buckets": num_buckets,
+            })
             total_triples += n_out
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+        appended = pa.Table.from_pylist(rows, schema=_MANIFEST_ARROW)
+        spark.createDataFrame(appended).write.mode("append").parquet(
             f"{checkpoint_dir}/manifest"
         )
         processed.extend(group)

@@ -15,7 +15,6 @@ import sys
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main(argv: list[str]) -> None:
@@ -38,7 +37,7 @@ def main(argv: list[str]) -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from dss_plugin_nlp_analysis_spark.operators.kg import build_triples
-    from dss_plugin_nlp_analysis_spark.operators.ontology import TagOptions
+    from dss_plugin_nlp_analysis_spark.operators.ontology import TagOptions, document_languages
     from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
     from dss_plugin_nlp_analysis_spark.sources.catalog import read_table
 
@@ -64,8 +63,7 @@ def main(argv: list[str]) -> None:
     elif lang_col:
         # one pre-scan for the whole build: left to build_triples, it would
         # run per job group, on docs already shuffled for the kernel
-        langs = [r[0] for r in docs.select(lang_col).where(F.col(lang_col).isNotNull())
-                 .distinct().collect()]
+        langs = document_languages(docs, lang_col)
     else:
         langs = None
 

@@ -291,6 +291,98 @@ def test_read_manifest_raises_unless_manifest_is_missing(spark, tmp_path):
         read_manifest(spark, "nosuchfs://bucket/ckpt")
 
 
+def test_checkpointed_build_empty_bucket_has_null_fingerprint(spark, tmp_path):
+    # a bucket with no triples records 0 triples and a NULL fingerprint;
+    # buckets with triples in the same append keep theirs
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import (
+        read_manifest,
+        run_checkpointed_build,
+    )
+
+    docs = spark.createDataFrame(
+        [(f"http://d{i}.com/x", f"text {i}") for i in range(40)],
+        "url string, text string",
+    )
+
+    def triple_fn(part):
+        return part.where(F.col("_bucket") != 0).select(
+            "_bucket", F.col("url").alias("subj"), F.lit("p").alias("pred"),
+            F.col("text").alias("obj"),
+        )
+
+    ckpt = str(tmp_path / "ckpt")
+    run_checkpointed_build(
+        spark, docs, triple_fn, str(tmp_path / "out"), ckpt, num_buckets=3, buckets_per_job=3,
+    )
+    m = {r["bucket"]: r for r in read_manifest(spark, ckpt).collect()}
+    assert sorted(m) == [0, 1, 2]
+    assert m[0]["triples"] == 0 and m[0]["output_fingerprint"] is None
+    for b in (1, 2):
+        assert m[b]["triples"] == m[b]["input_rows"] > 0
+        assert int(m[b]["output_fingerprint"]) != 0
+    assert {r["num_buckets"] for r in m.values()} == {3}
+
+
+def _copy_triple_fn(part):
+    return part.select(
+        F.col("url").alias("subj"), F.lit("p").alias("pred"), F.col("text").alias("obj"),
+    )
+
+
+def test_checkpointed_build_refuses_other_bucket_count(spark, tmp_path):
+    # bucket ids of a 4-bucket manifest name other urls under 8 buckets:
+    # resuming would skip 0-3 and duplicate their triples under 4-7
+    import os
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    docs = pages_df(spark, 100, seed=42)
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    first = run_checkpointed_build(spark, docs, _copy_triple_fn, str(out), str(ckpt),
+                                   num_buckets=4, buckets_per_job=2)
+    written = {p: os.path.getmtime(p) for p in out.rglob("*.parquet")}
+    with pytest.raises(ValueError, match=r"num_buckets=4\b.*num_buckets=8\b"):
+        run_checkpointed_build(spark, docs, _copy_triple_fn, str(out), str(ckpt),
+                               num_buckets=8, buckets_per_job=2)
+    assert {p: os.path.getmtime(p) for p in out.rglob("*.parquet")} == written
+    assert spark.read.parquet(str(out)).count() == first.total_triples == 100
+
+
+def test_checkpointed_build_resumes_manifest_without_bucket_count(spark, tmp_path):
+    # a manifest written before the num_buckets column reads it as NULL
+    # and resumes as before: done buckets are skipped, missing ones built
+    import shutil
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import (
+        read_manifest,
+        run_checkpointed_build,
+    )
+
+    docs = pages_df(spark, 100, seed=42)
+    out, ckpt = str(tmp_path / "out"), tmp_path / "ckpt"
+    run_checkpointed_build(spark, docs, _copy_triple_fn, out, str(ckpt),
+                           num_buckets=4, buckets_per_job=4)
+    old = spark.read.parquet(str(ckpt / "manifest")).drop("num_buckets").where("bucket < 2")
+    old.write.parquet(str(tmp_path / "old_manifest"))
+    shutil.rmtree(ckpt / "manifest")
+    shutil.move(str(tmp_path / "old_manifest"), str(ckpt / "manifest"))
+    assert {r["num_buckets"] for r in read_manifest(spark, str(ckpt)).collect()} == {None}
+
+    res = run_checkpointed_build(spark, docs, _copy_triple_fn, out, str(ckpt),
+                                 num_buckets=4, buckets_per_job=4)
+    assert res.skipped_buckets == [0, 1] and res.processed_buckets == [2, 3]
+    m = read_manifest(spark, str(ckpt)).collect()
+    assert sorted((r["bucket"], r["num_buckets"]) for r in m) == [
+        (0, None), (1, None), (2, 4), (3, 4),
+    ]
+    assert sum(r["input_rows"] for r in m) == 100
+    assert spark.read.parquet(out).count() == 100
+    # a manifest mixing NULL and matching rows is complete
+    again = run_checkpointed_build(spark, docs, _copy_triple_fn, out, str(ckpt),
+                                   num_buckets=4, buckets_per_job=4)
+    assert again.processed_buckets == [] and again.skipped_buckets == [0, 1, 2, 3]
+
+
 def test_canonical_map_transitive_chain():
     # A—kw1—B, B—kw2—C: union-find must merge the whole chain
     rows = [

@@ -1,0 +1,102 @@
+"""Driver-side ontology preparation: the Arrow collect of the cleaned
+ontology (row order carries the dup-keyword tie rules, SEMANTICS.md §5)
+and the once-per-distinct-keyword pattern compile."""
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from dss_plugin_nlp_analysis_spark.functions.lemmas import lemma_table
+from dss_plugin_nlp_analysis_spark.operators.ontology import (
+    TagOptions,
+    clean_ontology,
+    collect_ontology,
+    compile_ontology,
+    keyword_match_tokens,
+)
+from dss_plugin_nlp_analysis_spark.operators.tagger import tag_documents
+
+# "bank" is a keyword of one tag per file; rows of other shapes are dropped
+# or defaulted by the cleaning step
+_PARTS = [
+    [("river_bank", "bank", "geo"), ("money", "cash", ""), ("", "dropped", "x")],
+    [("money_bank", "bank", "finance"), ("Noël", "Noël", None), ("t", None, "x")],
+    [("bank_3", "bank", "misc"), ("money", "Cash", "finance"), ("zh", "银行", "geo")],
+]
+
+
+@pytest.fixture(scope="module")
+def ontology_dir(tmp_path_factory):
+    # one parquet file per part, of different sizes (Spark packs and
+    # orders file splits by size, not by name)
+    root = tmp_path_factory.mktemp("ontology")
+    for i, rows in enumerate(_PARTS):
+        rows = rows + [(f"pad{i}_{j}", f"pad{i} {j}", "pad") for j in range(10 * i)]
+        table = pa.table({
+            "tag": [r[0] for r in rows],
+            "keyword": [r[1] for r in rows],
+            "category": [r[2] for r in rows],
+        })
+        pq.write_table(table, root / f"part-{i:03d}.parquet")
+    return str(root)
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.createDataFrame(
+        [(1, "the bank here", "en"), (2, "a bank", "fr"), (3, "none", None)],
+        "doc_id int, text string, lang string",
+    )
+
+
+@pytest.mark.parametrize("category_col", ["category", None])
+def test_collect_ontology_rows_in_collect_order(spark, ontology_dir, docs, category_col):
+    onto = spark.read.parquet(ontology_dir)
+    clean = clean_ontology(onto, category_col=category_col)
+    expected = [tuple(r) + (() if category_col else (None,)) for r in clean.collect()]
+    rows, languages = collect_ontology(onto, docs, category_col=category_col)
+    assert rows == expected
+    assert len(rows) == 3 * 3 + 30 - 2
+    assert sorted(languages) == ["en", "fr"]
+
+
+def test_collect_ontology_languages(spark, ontology_dir, docs):
+    onto = spark.read.parquet(ontology_dir)
+    assert collect_ontology(onto, docs, languages=["zh"])[1] == ["zh"]
+    assert collect_ontology(onto, docs, lang_col=None, language="de")[1] == ["de"]
+    with pytest.raises(ValueError, match="Unsupported language"):
+        collect_ontology(onto, docs, languages=["en", "ko"])
+    assert collect_ontology(onto, docs, languages=["en", "ko"], skip_unknown=True)[1] == ["en"]
+
+
+@pytest.mark.parametrize("category_col", ["category", None])
+def test_duplicate_keyword_tie_rules_follow_collect_order(spark, ontology_dir, docs, category_col):
+    # first-added "bank" tag wins with categories, last-added without
+    onto = spark.read.parquet(ontology_dir)
+    bank_tags = [r["tag"] for r in clean_ontology(onto).collect() if r["keyword"] == "bank"]
+    assert len(bank_tags) == 3
+    out = tag_documents(docs, onto, category_col=category_col, languages=["en", "fr"])
+    got = {r["doc_id"]: r["tag"] for r in out.collect() if r["tag_keyword"] == "bank"}
+    want = bank_tags[0] if category_col else bank_tags[-1]
+    assert got == {1: want, 2: want}
+
+
+@pytest.mark.parametrize(
+    "options",
+    [
+        TagOptions(),
+        TagOptions(ignore_case=True, ignore_diacritics=True, lemmatization=True),
+        TagOptions(lemmatization=True),
+    ],
+)
+def test_compile_patterns_equal_per_row_match_tokens(options):
+    keywords = ["bank", "Banks", "new york", "New York", "Noël", "noël", "银行",
+                "bank", "running dogs", "北京大学", "café", "bank"]
+    rows = [(f"t{i}", kw, None) for i, kw in enumerate(keywords)]
+    langs = ["en", "fr", "zh"]
+    compiled = compile_ontology(rows, langs, options, False)
+    for lang in langs:
+        table = lemma_table(lang, None) if options.lemmatization else {}
+        assert compiled.patterns[lang] == [
+            keyword_match_tokens(kw, lang, options, table) for _t, kw, _c in rows
+        ]

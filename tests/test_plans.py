@@ -111,6 +111,47 @@ def test_checkpointed_triples_one_url_hash_exchange_below_kernel(spark, tmp_path
     assert plan.index("ArrowEvalPython") < plan.index("Exchange"), plan
 
 
+def test_manifest_frames_are_local_arrow_relations(spark, tmp_path, monkeypatch):
+    # manifest I/O crosses driver<->JVM as Arrow tables: a fresh manifest
+    # and every appended group are LocalRelations with the manifest
+    # schema, never a pickled-row RDD (LogicalRDD / Scan ExistingRDD)
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import (
+        MANIFEST_SCHEMA,
+        read_manifest,
+        run_checkpointed_build,
+    )
+
+    def plans(df):
+        qe = df._jdf.queryExecution()
+        return qe.analyzed().toString() + qe.executedPlan().toString()
+
+    fresh = read_manifest(spark, str(tmp_path / "fresh"))
+    assert fresh.schema == MANIFEST_SCHEMA
+    assert "LocalRelation" in plans(fresh)
+    created = []
+    create = spark.createDataFrame
+
+    def spy(*args, **kwargs):
+        created.append(create(*args, **kwargs))
+        return created[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    docs = create([(f"http://d{i}.com/x", f"text {i}") for i in range(20)],
+                  "url string, text string")
+    run_checkpointed_build(
+        spark, docs,
+        lambda part: part.select(F.col("url").alias("subj"), F.lit("p").alias("pred"),
+                                 F.col("text").alias("obj")),
+        str(tmp_path / "out"), str(tmp_path / "ckpt"), num_buckets=4, buckets_per_job=2,
+    )
+    # the empty read of the fresh checkpoint, then one append per group
+    assert len(created) == 3
+    for df in [fresh] + created:
+        assert df.schema == MANIFEST_SCHEMA
+        plan = plans(df)
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
 def test_ngram_jaccard_caps_posting_lists_in_plan(spark):
     # candidate generation must be gated by the shingle document-frequency
     # aggregate (the f^2/2 boilerplate guard), visible as a count-per-
