@@ -31,7 +31,6 @@ __all__ = [
     "latest_by_key",
     "ttl_first_seen",
     "shingles",
-    "minhash_signature",
     "minhash_candidate_pairs",
     "cluster_dedup",
     "ngram_jaccard_pairs",
@@ -123,29 +122,6 @@ def exploded_shingles(
         F.regexp_extract_all(norm, F.lit(pattern), 1),
     ).otherwise(F.array(norm))
     return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
-
-
-def minhash_signature(col: Column, num_hashes: int = 8, n: int = 3) -> Column:
-    """MinHash signature as array<string> of hex minima (b-bit MinHash).
-
-    ONE md5 per shingle; hash_i(shingle) = hex window ``md5(s)[4i : 4i+4]``
-    (16-bit minwise hashes, Li & König b-bit MinHash) — so the expensive
-    digest is not repeated per seed. num_hashes ≤ 8 (32 hex chars / 4).
-    Identical math in DuckDB (md5 + substr of the same bytes).
-
-    NOTE: as a single Column expression, Catalyst does not CSE the
-    higher-order subtrees, so prefer ``minhash_candidate_pairs`` (exploded
-    plan, digest computed exactly once) for bulk work.
-    """
-    if num_hashes > 8:
-        raise ValueError("substring scheme supports at most 8 hashes")
-    hexes = F.transform(shingles(col, n), lambda s: F.md5(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hexes, lambda h: F.substring(h, 1 + 4 * i, 4)))
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def _banded_small_keys(

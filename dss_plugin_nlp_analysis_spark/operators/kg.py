@@ -7,26 +7,21 @@ ontology node)` triples with full provenance.
 Canonicalization is a connected-components pass over the alias graph
 (tag ↔ keyword edges from the ontology). The ontology is broadcast-sized
 (SURVEY.md §1.4), so union-find runs on the driver and the resulting
-tag→canonical map ships in the extraction UDF's broadcast, applied per
-match inside the UDF — no iterative distributed CC and no join is needed
-(a billion-node alias graph would need both; ``canonical_map`` is the one
-place that would change).
+tag→canonical map ships in the ontology's broadcast, applied per match
+by the kernel UDF's triples emitter — no iterative distributed CC and no
+join is needed (a billion-node alias graph would need both;
+``canonical_map`` is the one place that would change).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.textnorm import normalize_text
-from .ontology import CompiledOntology, TagOptions, collect_ontology, compile_ontology
-from .tagger import extract_mentions, process_document, sentence_of
+from .ontology import TagOptions, collect_ontology, compile_ontology
+from .tagger import doc_udf
 
 __all__ = [
     "canonical_map",
@@ -120,49 +115,21 @@ _TRIPLE_ROWS_SCHEMA = T.ArrayType(
 )
 
 
-def _triple_rows_udf(payload_ref, default_lang: str, skip_unknown: bool):
-    """Arrow-batched fused extract+project UDF for ``build_triples``: one
-    (pred, obj, keyword, sentence, sent_idx, category) row per match,
-    sentence text resolved in Python and the tag→canonical-node map
-    applied inline (``payload_ref.value`` is ``(compiled, cmap|None)``;
-    ``obj = cmap.get(tag, tag)`` is exactly the former broadcast left
-    join + coalesce, with the join node gone from the plan)."""
-
-    arrow_type = to_arrow_type(_TRIPLE_ROWS_SCHEMA)
-
-    @arrow_udf(_TRIPLE_ROWS_SCHEMA)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled, cmap = getattr(payload_ref, "value", payload_ref)
-        if cmap is None:
-            cmap = {}
-        cget = cmap.get
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            rows_out: list[list[tuple]] = []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        rows_out.append([])
-                        continue
-                    raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                rows_out.append(
-                    [
-                        (
-                            m["tag"],
-                            cget(m["tag"], m["tag"]),
-                            m["keyword"],
-                            sentences[m["sent_idx"]],
-                            m["sent_idx"],
-                            m["category"],
-                        )
-                        for m in matches
-                    ]
-                )
-            yield pa.array(rows_out, type=arrow_type)
-
-    return fmt
+def _triple_rows(cmap: dict[str, str], sentences: list[str], matches: list[dict]) -> list[tuple]:
+    """Triples emitter: one (pred, obj, keyword, sentence, sent_idx,
+    category) row per match, ``obj = cmap.get(tag, tag)`` (the former
+    broadcast left join + coalesce onto the canonical node)."""
+    return [
+        (
+            m["tag"],
+            cmap.get(m["tag"], m["tag"]),
+            m["keyword"],
+            sentences[m["sent_idx"]],
+            m["sent_idx"],
+            m["category"],
+        )
+        for m in matches
+    ]
 
 
 def build_triples(
@@ -186,13 +153,19 @@ def build_triples(
 
     Physical plan: optional repartition by ``xxhash64(url)`` (defuses
     hot-domain skew before the embarrassingly-parallel match stage), one
-    fused Arrow UDF pass that extracts matches, resolves their sentences
-    and maps each tag to its canonical node from the same broadcast, then
-    one explode. Zero joins, and zero exchanges beyond the optional
-    repartition. ``plans.checkpoint.run_checkpointed_build`` does that
-    repartition itself before calling its ``triple_fn``.
+    ``tagger.doc_udf`` pass whose ``_triple_rows`` emitter resolves each
+    match's sentence and maps its tag to the canonical node, then one
+    codegen'd explode. The tag→canonical map (driver-computed,
+    ontology-sized) rides the ontology's broadcast instead of a
+    broadcast-join dimension, so the plan has zero joins, and zero
+    exchanges beyond the optional repartition.
+    ``plans.checkpoint.run_checkpointed_build`` does that repartition
+    itself before calling its ``triple_fn``.
+
+    A streaming ``docs_df`` runs the same plan per micro-batch; it needs
+    ``languages`` (or ``lang_col=None``), since the distinct-language
+    pre-scan cannot run on a stream.
     """
-    spark = docs_df.sparkSession
     rows, languages = collect_ontology(
         ontology_df, docs_df, tag_col, keyword_col, category_col,
         lang_col, language, languages, skip_unknown,
@@ -202,37 +175,20 @@ def build_triples(
     if repartition_by_url:
         docs_df = docs_df.repartition(repartition_by_url, F.xxhash64(F.col(url_col)))
 
-    # fused extract+project UDF: the per-match (pred, obj, keyword,
-    # sentence, sent_idx, category) rows are assembled in the same Python
-    # pass as extraction, so the JVM side is one codegen'd explode — the
-    # previous interpreted transform-over-matches (with element_at
-    # sentence resolution) is gone, the sentences array never ships back,
-    # and the tag→canonical map (driver-computed, ontology-sized) rides
-    # the same broadcast instead of a broadcast-join dimension: the
-    # triples plan has ZERO joins and zero exchanges (beyond an optional
-    # explicit repartition)
-    cmap = canonical_map(rows) if canonicalize else None
-    udf = _triple_rows_udf(
-        spark.sparkContext.broadcast((compiled, cmap)), language, skip_unknown
-    )
+    cmap = canonical_map(rows) if canonicalize else {}
+    ref = docs_df.sparkSession.sparkContext.broadcast((compiled, cmap))
+    udf = doc_udf(ref, _TRIPLE_ROWS_SCHEMA, _triple_rows, language, skip_unknown)
     lang_expr = F.col(lang_col) if lang_col else F.lit(language)
     out = docs_df.select(
         F.col(url_col).alias("subj"),
         lang_expr.alias("lang"),
         (F.col(ts_col) if ts_col else F.lit(None).cast("timestamp")).alias("warc_ts"),
         F.explode(udf(F.col(text_col), lang_expr)).alias("m"),
-    ).select(
-        "subj",
-        F.col("m")["pred"].alias("pred"),
-        F.col("m")["obj"].alias("obj"),
-        F.col("m")["keyword"].alias("keyword"),
-        F.col("m")["sentence"].alias("sentence"),
-        F.col("m")["sent_idx"].alias("sent_idx"),
-        F.col("m")["category"].alias("category"),
-        "lang",
-        "warc_ts",
     )
-    return out.select(*TRIPLE_COLUMNS)
+    return out.select(
+        "subj", *[F.col("m")[f.name].alias(f.name) for f in _TRIPLE_ROWS_SCHEMA.elementType],
+        "lang", "warc_ts",
+    )
 
 
 def triple_history(

@@ -98,7 +98,14 @@ def collect_ontology(
     ``languages`` defaults to the documents' distinct ``lang_col`` values
     (``[language]`` without a language column); unsupported codes raise
     unless ``skip_unknown`` (P8 guard, dku_plugin_config_loading.py:153-159).
+    A streaming ``docs_df`` cannot be pre-scanned: it needs ``languages``
+    (or ``lang_col=None``), and raises ``ValueError`` before any query runs.
     """
+    if languages is None and lang_col and docs_df.isStreaming:
+        raise ValueError(
+            "a streaming docs_df needs an explicit `languages` list: the "
+            f"distinct-language pre-scan of '{lang_col}' cannot run on a stream"
+        )
     table = clean_ontology(ontology_df, tag_col, keyword_col, category_col).toArrow()
     tags = table.column("tag").to_pylist()
     keywords = table.column("keyword").to_pylist()

@@ -1,18 +1,21 @@
-"""The tagging dataflow: mention extraction + output formatting, Spark-first.
+"""The tagging dataflow: one per-document kernel UDF, one emitter per format.
 
 Physical plan (SURVEY.md §3, stage boundaries):
 
-    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → AC probe]
-         → native Catalyst array ops / explode / to_json → sink
+    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → AC probe → emit]
+         → codegen'd explode_outer / struct-field projection / to_json → sink
 
-One vectorized pandas UDF does ALL per-document text work in a single pass
-(the reference tokenizes every sentence twice — SURVEY.md §4.3 pathology not
-ported) and returns ``struct<sentences, matches>``. Every output format is
-then a **per-row native transform of the matches array — zero shuffle**:
-the reference's per-document "aggregations" (A1-A4) group by the document
-itself, so keeping matches as an array column makes groupBy/pivot
-unnecessary (the A3 pivot's category universe is ontology-known and becomes
-direct column synthesis).
+``doc_udf`` holds the only batch loop. It does ALL per-document text work
+in a single pass (the reference tokenizes every sentence twice —
+SURVEY.md §4.3 pathology not ported) and hands each document's
+``(sentences, matches)`` to an *emitter* that builds that output format's
+row in the same Python pass. The reference's per-document "aggregations"
+(A1-A4) group by the document itself, so an emitter needs no
+groupBy/pivot and the plan no shuffle (the A3 pivot's category universe is
+ontology-known and becomes one tag array per category). The JVM side is an
+explode or a struct-field projection — no interpreted higher-order
+functions. ``kg.build_triples`` and ``streaming.stream_mention_rate`` run
+their own emitters through the same ``doc_udf``.
 
 Reference parity map:
 - extraction      → ontology_tagger.py:94-137, sentence_splitter.py:46-118,
@@ -27,11 +30,10 @@ from __future__ import annotations
 import json
 import re
 from collections.abc import Iterator
-from dataclasses import dataclass
+from functools import partial
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
@@ -46,38 +48,11 @@ from .automaton import filter_leftmost_longest
 from .ontology import CompiledOntology, TagOptions, collect_ontology, compile_ontology
 
 __all__ = [
-    "MATCH_SCHEMA",
-    "TAGGING_SCHEMA",
     "OUTPUT_FORMATS",
-    "extract_mentions",
+    "doc_udf",
     "tag_documents",
     "process_document",
-    "TaggerResult",
-    "format_per_doc",
-    "format_per_doc_json",
-    "format_per_match",
-    "sentence_of",
 ]
-
-MATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("sent_idx", T.IntegerType()),
-        T.StructField("tok_start", T.IntegerType()),
-        T.StructField("tok_end", T.IntegerType()),
-        T.StructField("char_start", T.IntegerType()),
-        T.StructField("char_end", T.IntegerType()),
-        T.StructField("tag", T.StringType()),
-        T.StructField("category", T.StringType()),
-        T.StructField("keyword", T.StringType()),
-    ]
-)
-
-TAGGING_SCHEMA = T.StructType(
-    [
-        T.StructField("sentences", T.ArrayType(T.StringType())),
-        T.StructField("matches", T.ArrayType(MATCH_SCHEMA)),
-    ]
-)
 
 OUTPUT_FORMATS = ("one_row_per_match", "one_row_per_doc", "one_row_per_doc_json")
 
@@ -251,276 +226,95 @@ def process_document(
     return sentences, matches
 
 
-def _tagging_udf(compiled_ref, default_lang: str, skip_unknown: bool):
-    """Arrow-batched extraction UDF. ``compiled_ref`` is a Broadcast or a
-    plain CompiledOntology (duck-typed via ``.value``)."""
+def doc_udf(ref, schema: T.DataType, emit, default_lang: str, skip_unknown: bool):
+    """The one per-document Arrow UDF: ``udf(text, lang)`` runs
+    ``process_document`` on each row and returns ``emit(sentences,
+    matches)`` as that row's ``schema`` value.
 
-    out_type = to_arrow_type(TAGGING_SCHEMA)
-    sents_type = out_type.field("sentences").type
-    matches_type = out_type.field("matches").type
-
-    @arrow_udf(TAGGING_SCHEMA)
-    def extract(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            sents_out, matches_out = [], []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        sents_out.append([])
-                        matches_out.append([])
-                        continue
-                    raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                sents_out.append(sentences)
-                matches_out.append(matches)
-            yield pa.StructArray.from_arrays(
-                [
-                    pa.array(sents_out, type=sents_type),
-                    pa.array(matches_out, type=matches_type),
-                ],
-                fields=list(out_type),
-            )
-
-    return extract
-
-
-def _per_match_rows_udf(compiled_ref, default_lang: str, skip_unknown: bool,
-                        has_category: bool):
-    """Fused extract+format UDF for ``one_row_per_match``: emits the final
-    deduped (category?, tag, keyword, sentence) rows per document so the
-    JVM side is a single codegen'd ``explode_outer`` — no interpreted
-    ``transform``/``array_distinct``/``element_at`` higher-order chain over
-    the matches array (measured ~0.8 s of the 3 s flagship wall at 500k
-    docs on local[32]). Dedup mirrors ``format_per_match`` exactly:
-    ordered keep-first over the whole projected row (SEMANTICS.md §7 DIV).
+    ``ref`` is a Broadcast of a ``CompiledOntology``, or of a
+    ``(CompiledOntology, *state)`` tuple whose state is passed to ``emit``
+    ahead of ``(sentences, matches)`` — ontology-sized emitter state (the
+    triples' canonical map) ships in the ontology's broadcast, not in the
+    UDF closure. A NULL or empty language is ``default_lang``; a language
+    the ontology was not compiled for raises, or emits ``([], [])`` under
+    ``skip_unknown``.
     """
-    fields = (["category"] if has_category else []) + ["tag", "keyword", "sentence"]
-    schema = T.ArrayType(
-        T.StructType([T.StructField(f, T.StringType()) for f in fields])
-    )
     arrow_type = to_arrow_type(schema)
 
     @arrow_udf(schema)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
+    def apply(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
+        payload = ref.value
+        compiled, *state = payload if isinstance(payload, tuple) else (payload,)
+        emit_doc = partial(emit, *state) if state else emit
         known = set(compiled.patterns)
         for text_a, lang_a in it:
-            rows_out: list[list[tuple]] = []
+            rows = []
             for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
                 lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        rows_out.append([])
-                        continue
+                if lang in known:
+                    rows.append(emit_doc(*process_document(compiled, text, lang)))
+                elif skip_unknown:
+                    rows.append(emit_doc([], []))
+                else:
                     raise ValueError(f"Unsupported language code: '{lang}'")
-                sentences, matches = process_document(compiled, text, lang)
-                if not matches:
-                    rows_out.append([])
-                    continue
-                rows: list[tuple] = []
-                seen: set[tuple] = set()
-                if has_category:
-                    for mt in matches:
-                        row = (mt["category"], mt["tag"], mt["keyword"],
-                               sentences[mt["sent_idx"]])
-                        if row not in seen:
-                            seen.add(row)
-                            rows.append(row)
-                else:
-                    for mt in matches:
-                        row = (mt["tag"], mt["keyword"], sentences[mt["sent_idx"]])
-                        if row not in seen:
-                            seen.add(row)
-                            rows.append(row)
-                rows_out.append(rows)
-            yield pa.array(rows_out, type=arrow_type)
+            yield pa.array(rows, type=arrow_type)
 
-    return fmt
+    return apply
 
 
-def _doc_json_direct_udf(compiled_ref, default_lang: str, skip_unknown: bool,
-                         has_category: bool):
-    """Fused extract+format UDF for ``one_row_per_doc_json``: builds the
-    JSON strings in the same Python pass as extraction (one JVM↔Python
-    crossing instead of two, and the sentences/matches struct never ships
-    back). Byte format identical to ``_doc_json_udf``."""
-    build_no_cat, build_cat = _doc_json_builders()
-    if not has_category:
-        schema = T.StructType([T.StructField("tag_json_full", T.StringType())])
-    else:
-        schema = T.StructType(
-            [
-                T.StructField("tag_json_categories", T.StringType()),
-                T.StructField("tag_json_full", T.StringType()),
-            ]
-        )
+# --- emitters: one output format's row from (sentences, matches) ----------
 
-    arrow_type = to_arrow_type(schema)
-
-    @arrow_udf(schema)
-    def fmt(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
-        compiled: CompiledOntology = getattr(compiled_ref, "value", compiled_ref)
-        known = set(compiled.patterns)
-        for text_a, lang_a in it:
-            cats_out: list[str | None] = []
-            full_out: list[str | None] = []
-            for text, lang in zip(text_a.to_pylist(), lang_a.to_pylist()):
-                lang = lang if isinstance(lang, str) and lang else default_lang
-                if lang not in known:
-                    if skip_unknown:
-                        matches, sentences = [], []
-                    else:
-                        raise ValueError(f"Unsupported language code: '{lang}'")
-                else:
-                    sentences, matches = process_document(compiled, text, lang)
-                if has_category:
-                    cats, full = build_cat(matches, sentences)
-                    cats_out.append(cats)
-                    full_out.append(full)
-                else:
-                    full_out.append(build_no_cat(matches, sentences))
-            cols = ([cats_out] if has_category else []) + [full_out]
-            yield pa.StructArray.from_arrays(
-                [pa.array(c, type=pa.string()) for c in cols],
-                fields=list(arrow_type),
-            )
-
-    return fmt
+def _match_rows(sentences: list[str], matches: list[dict]) -> list[tuple]:
+    """one_row_per_match: the (tag, keyword, sentence) rows, deduped
+    keep-first within the document — the reference's whole-row
+    drop_duplicates (formatting/base.py:107) without a shuffle, since input
+    rows are unique by key (SEMANTICS.md §7 DIV)."""
+    return list(dict.fromkeys(
+        [(m["tag"], m["keyword"], sentences[m["sent_idx"]]) for m in matches]
+    ))
 
 
-@dataclass
-class TaggerResult:
-    df: DataFrame
-    column_descriptions: dict[str, str]
+def _match_rows_cat(sentences: list[str], matches: list[dict]) -> list[tuple]:
+    """``_match_rows`` with the category in front."""
+    return list(dict.fromkeys(
+        [(m["category"], m["tag"], m["keyword"], sentences[m["sent_idx"]])
+         for m in matches]
+    ))
 
 
-def extract_mentions(
-    docs_df: DataFrame,
-    compiled: CompiledOntology,
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-    language: str = "en",
-    result_col: str = "_tagging",
-    skip_unknown: bool = False,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Add ``result_col: struct<sentences, matches>`` to ``docs_df``."""
-    spark = docs_df.sparkSession
-    ref = spark.sparkContext.broadcast(compiled) if broadcast else compiled
-    udf = _tagging_udf(ref, language, skip_unknown)
-    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
-    return docs_df.withColumn(result_col, udf(F.col(text_col), lang_expr))
-
-
-# --- formatters (native Catalyst ops over the matches array) -------------
-
-def _m(res: str) -> Column:
-    return F.col(res)["matches"]
-
-
-def sentence_of(res: str, m: Column) -> Column:
-    """Resolve a match's sentence from the result struct's sentences array
-    (shared by the per-match formatter, kg.build_triples, and the
-    streaming triples path — one definition of the 1-based indexing)."""
-    return F.element_at(F.col(res)["sentences"], m["sent_idx"] + 1)
-
-
-_sentence_of = sentence_of
-
-
-def _json_or_null(arr: Column) -> Column:
-    return F.when(F.size(arr) > 0, F.to_json(arr))
-
-
-def format_per_match(
-    df: DataFrame, res: str, has_category: bool, names: dict[str, str]
-) -> DataFrame:
-    """one_row_per_match: project → dedup within doc → explode_outer.
-
-    The reference's whole-row drop_duplicates (formatting/base.py:107)
-    becomes an array_distinct *within* each document — same visible rows
-    (input rows are unique by key), no shuffle (SEMANTICS.md §7 DIV).
-    No-match docs yield one all-NULL row (formatter_by_match.py:94-98).
-    """
-    fields = []
-    if has_category:
-        fields.append(("tag_category", lambda m: m["category"]))
-    fields += [
-        ("tag", lambda m: m["tag"]),
-        ("tag_keyword", lambda m: m["keyword"]),
-        ("tag_sentence", None),  # resolved against sentences array
-    ]
-    proj = F.transform(
-        _m(res),
-        lambda m: F.struct(
-            *[
-                (f(m) if f is not None else _sentence_of(res, m)).alias(names[name])
-                for name, f in fields
-            ]
-        ),
+def _doc_lists(sentences: list[str], matches: list[dict]) -> tuple:
+    """one_row_per_doc without categories (formatter_by_document.py:54-86):
+    first-appearance distinct tags and keywords, and each sentence with a
+    match (deduped by index, doc order) followed by "\\n"; NULL without a
+    match."""
+    if not matches:
+        return [], [], None
+    return (
+        list(dict.fromkeys([m["tag"] for m in matches])),
+        list(dict.fromkeys([m["keyword"] for m in matches])),
+        "".join(sentences[i] + "\n" for i in dict.fromkeys([m["sent_idx"] for m in matches])),
     )
-    out = df.withColumn("_match", F.explode_outer(F.array_distinct(proj)))
-    for name, _ in fields:
-        out = out.withColumn(names[name], F.col("_match")[names[name]])
-    return out.drop("_match", res)
 
 
-def format_per_doc(
-    df: DataFrame,
-    res: str,
-    has_category: bool,
-    names: dict[str, str],
-    categories: list[str] | None = None,
-) -> DataFrame:
-    """one_row_per_doc — per-row native aggregates, zero shuffle.
+def _doc_lists_emitter(categories: list[str]):
+    """one_row_per_doc with categories (formatter_by_document.py:143-222):
+    one first-appearance distinct tag list per ontology category, the
+    distinct keywords, and the sentences deduped by text, each followed by
+    "\\n" and joined with " " — the empty string without a match
+    (reference wart preserved)."""
+    slot = {c: i for i, c in enumerate(categories)}
 
-    No category (formatter_by_document.py:54-86): tag_list / tag_keywords =
-    JSON arrays of first-appearance distinct values; tag_sentences = concat
-    of (matched sentence + "\\n") per sentence-with-a-match, doc order.
-    With category (formatter_by_document.py:143-222): one
-    tag_list_<NFD(category)> column per ontology category (NULL when the
-    doc has none), text-deduped sentences joined with " " (empty string
-    when no match — reference wart preserved).
-    """
-    m = _m(res)
-    if not has_category:
-        tags = F.transform(m, lambda x: x["tag"])
-        kws = F.transform(m, lambda x: x["keyword"])
-        sent_idxs = F.array_distinct(F.transform(m, lambda x: x["sent_idx"]))
-        sent_texts = F.transform(
-            sent_idxs, lambda i: F.element_at(F.col(res)["sentences"], i + 1)
+    def emit(sentences: list[str], matches: list[dict]) -> tuple:
+        tags: list[dict] = [{} for _ in categories]
+        for m in matches:
+            tags[slot[m["category"]]][m["tag"]] = None
+        return (
+            *map(list, tags),
+            list(dict.fromkeys([m["keyword"] for m in matches])),
+            " ".join(dict.fromkeys([sentences[m["sent_idx"]] + "\n" for m in matches])),
         )
-        out = (
-            df.withColumn(names["tag_list"], _json_or_null(F.array_distinct(tags)))
-            .withColumn(names["tag_keywords"], _json_or_null(F.array_distinct(kws)))
-            .withColumn(
-                names["tag_sentences"],
-                F.when(
-                    F.size(sent_idxs) > 0,
-                    F.concat(F.array_join(sent_texts, "\n"), F.lit("\n")),
-                ),
-            )
-        )
-        return out.drop(res)
-    # category path
-    out = df
-    for cat in categories or []:
-        cat_tags = F.array_distinct(
-            F.transform(
-                F.filter(m, lambda x: x["category"] == F.lit(cat)), lambda x: x["tag"]
-            )
-        )
-        out = out.withColumn(names[f"tag_list_{cat}"], _json_or_null(cat_tags))
-    kws = F.array_distinct(F.transform(m, lambda x: x["keyword"]))
-    sents = F.array_distinct(F.transform(m, lambda x: _sentence_of(res, x)))
-    out = out.withColumn(names["tag_keywords"], _json_or_null(kws)).withColumn(
-        names["tag_sentences"],
-        F.array_join(F.transform(sents, lambda s: F.concat(s, F.lit("\n"))), " "),
-    )
-    return out.drop(res)
+
+    return emit
 
 
 def _slots_json(full: dict) -> str:
@@ -545,8 +339,8 @@ _esc_json = json.encoder.encode_basestring  # dumps' own ensure_ascii=False esca
 
 
 def _doc_json_builders():
-    """Per-doc JSON assembly shared by the fused and two-pass json UDFs —
-    byte format mirrors the reference (ensure_ascii=False, ", " separators)."""
+    """Per-doc JSON assembly of ``one_row_per_doc_json`` — byte format
+    mirrors the reference (ensure_ascii=False, ", " separators)."""
 
     def build_no_cat(matches, sentences) -> str | None:
         full: dict[str, dict] = {}
@@ -595,60 +389,13 @@ def _doc_json_builders():
     return build_no_cat, build_cat
 
 
-def _doc_json_udf(has_category: bool):
-    """one_row_per_doc_json over an already-extracted result struct (kept
-    for the compositional ``extract_mentions`` + formatter path; the
-    ``tag_documents`` entry uses the fused ``_doc_json_direct_udf``)."""
+def _doc_json_emitter(has_category: bool):
+    """one_row_per_doc_json (formatter_by_document.py:225-384): the
+    ``(tag_json_categories?, tag_json_full)`` strings."""
     build_no_cat, build_cat = _doc_json_builders()
-
-    if not has_category:
-        schema = T.StructType([T.StructField("tag_json_full", T.StringType())])
-    else:
-        schema = T.StructType(
-            [
-                T.StructField("tag_json_categories", T.StringType()),
-                T.StructField("tag_json_full", T.StringType()),
-            ]
-        )
-
-    def _pairs(batch):
-        # a StructType argument may arrive as a DataFrame (fields as
-        # columns) or as a Series of dicts depending on the Arrow path
-        if isinstance(batch, pd.DataFrame):
-            yield from zip(batch["matches"], batch["sentences"])
-        else:
-            for res in batch:
-                if res is None:
-                    yield None, None
-                else:
-                    yield res["matches"], res["sentences"]
-
-    @F.pandas_udf(schema)
-    def to_doc_json(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for matches, sentences in _pairs(batch):
-                matches = list(matches) if matches is not None else []
-                sentences = list(sentences) if sentences is not None else []
-                if has_category:
-                    cats, full = build_cat(matches, sentences)
-                    rows.append({"tag_json_categories": cats, "tag_json_full": full})
-                else:
-                    rows.append({"tag_json_full": build_no_cat(matches, sentences)})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return to_doc_json
-
-
-def format_per_doc_json(
-    df: DataFrame, res: str, has_category: bool, names: dict[str, str]
-) -> DataFrame:
-    udf = _doc_json_udf(has_category)
-    out = df.withColumn("_json", udf(F.col(res)))
-    cols = (["tag_json_categories"] if has_category else []) + ["tag_json_full"]
-    for c in cols:
-        out = out.withColumn(names[c], F.col("_json")[c])
-    return out.drop("_json", res)
+    if has_category:
+        return lambda sentences, matches: build_cat(matches, sentences)
+    return lambda sentences, matches: (build_no_cat(matches, sentences),)
 
 
 # --- end-to-end entry -----------------------------------------------------
@@ -683,78 +430,57 @@ def tag_documents(
     compiled = compile_ontology(
         rows, languages, options, has_category, lemma_lookup_dir
     )
-    res = "_tagging"
 
-    input_cols = docs_df.columns
-    categories = None
+    string, strings = T.StringType(), T.ArrayType(T.StringType())
+    comments = {}
     if output_format == "one_row_per_match":
         base_names = (["tag_category"] if has_category else []) + [
             "tag", "tag_keyword", "tag_sentence",
         ]
+        types = [string] * len(base_names)
+        emit = _match_rows_cat if has_category else _match_rows
+    elif output_format == "one_row_per_doc" and has_category:
+        categories = list(dict.fromkeys(c for _t, c in compiled.payloads))
+        # NFD-normalized category in the column name (the reference calls
+        # unicode_normalize_text with its default form —
+        # formatter_by_document.py:198-205); two raw categories can
+        # normalize to the same name, so columns map to categories by
+        # position, never by name
+        base_names = [f"tag_list_{normalize_text(c)}" for c in categories] + [
+            "tag_keywords", "tag_sentences",
+        ]
+        comments = {i: f"List of '{c}' tags" for i, c in enumerate(categories)}
+        types = [strings] * (len(categories) + 1) + [string]
+        emit = _doc_lists_emitter(categories)
     elif output_format == "one_row_per_doc":
-        if has_category:
-            categories = []
-            for _t, c in compiled.payloads:  # first-appearance category order
-                if c not in categories:
-                    categories.append(c)
-            # NFD-normalized category in the column name (the reference calls
-            # unicode_normalize_text with its default form — formatter_by_document.py:198-205)
-            base_names = [
-                f"tag_list_{normalize_text(c)}" for c in categories
-            ] + ["tag_keywords", "tag_sentences"]
-        else:
-            base_names = ["tag_list", "tag_keywords", "tag_sentences"]
+        base_names = ["tag_list", "tag_keywords", "tag_sentences"]
+        types = [strings, strings, string]
+        emit = _doc_lists
     else:
         base_names = (["tag_json_categories"] if has_category else []) + ["tag_json_full"]
+        types = [string] * len(base_names)
+        emit = _doc_json_emitter(has_category)
 
-    finals = unique_names(base_names, input_cols)
-    names = dict(zip(base_names, finals))
-    if output_format == "one_row_per_doc" and has_category:
-        # per-category columns keyed by raw category for the formatter —
-        # mapped POSITIONALLY (categories[i] -> finals[i]), because two raw
-        # categories can NFD-normalize to the same base name; a dict keyed
-        # by the normalized name would collapse them and orphan a column
-        for c, fin in zip(categories, finals):
-            names[f"tag_list_{c}"] = fin
-
-    # per_match and json run a FUSED extract+format UDF (formatting done in
-    # the same Python pass; JVM side is a codegen'd explode/projection with
-    # no interpreted higher-order functions and no second Python crossing);
-    # per_doc keeps the compositional extract_mentions + native formatter.
-    spark = docs_df.sparkSession
-    lang_expr = F.col(lang_col) if lang_col else F.lit(language)
-    if output_format == "one_row_per_match":
-        ref = spark.sparkContext.broadcast(compiled)
-        udf = _per_match_rows_udf(ref, language, skip_unknown, has_category)
-        out = docs_df.withColumn(
-            "_match", F.explode_outer(udf(F.col(text_col), lang_expr))
-        )
-        fields = (["category"] if has_category else []) + ["tag", "keyword", "sentence"]
-        for b, f in zip(base_names, fields):
-            out = out.withColumn(names[b], F.col("_match")[f])
-        out = out.drop("_match")
-    elif output_format == "one_row_per_doc":
-        tagged = extract_mentions(
-            docs_df, compiled, text_col, lang_col, language, res, skip_unknown
-        )
-        out = format_per_doc(tagged, res, has_category, names, categories)
-    else:
-        ref = spark.sparkContext.broadcast(compiled)
-        udf = _doc_json_direct_udf(ref, language, skip_unknown, has_category)
-        out = docs_df.withColumn("_json", udf(F.col(text_col), lang_expr))
-        for c in base_names:
-            out = out.withColumn(names[c], F.col("_json")[c])
-        out = out.drop("_json")
-    out = out.select(*ordered_with_new_after(out.columns, finals, text_col))
-    # attach human descriptions as column metadata (S5; base.py:72-77)
-    comments = {}
-    for base, final in names.items():
-        if base in COLUMN_DESCRIPTIONS:
-            comments[final] = COLUMN_DESCRIPTIONS[base]
-        elif base.startswith("tag_list_") and categories:
-            raw = base[len("tag_list_"):]
-            comments[final] = f"List of '{raw}' tags"
-    for col, comment in comments.items():
-        if col in out.columns:
-            out = out.withColumn(col, F.col(col).alias(col, metadata={"comment": comment}))
+    # one kernel pass emits this format's final values (struct fields named
+    # by the output columns); the JVM side is a codegen'd projection —
+    # explode_outer for per-match rows, to_json of the per-doc arrays —
+    # with no interpreted higher-order function and no shuffle
+    finals = unique_names(base_names, docs_df.columns)
+    schema = T.StructType([T.StructField(n, t) for n, t in zip(finals, types)])
+    per_match = output_format == "one_row_per_match"
+    ref = docs_df.sparkSession.sparkContext.broadcast(compiled)
+    udf = doc_udf(ref, T.ArrayType(schema) if per_match else schema, emit,
+                  language, skip_unknown)
+    tagged = udf(F.col(text_col), F.col(lang_col) if lang_col else F.lit(language))
+    new_cols = []
+    for i, (base, final, typ) in enumerate(zip(base_names, finals, types)):
+        col = F.col("_tagged")[final]
+        if typ == strings:
+            col = F.when(F.size(col) > 0, F.to_json(col))
+        # human descriptions as column metadata (S5; base.py:72-77)
+        comment = comments.get(i, COLUMN_DESCRIPTIONS.get(base))
+        new_cols.append(col.alias(final, metadata={"comment": comment}))
+    out = docs_df.withColumn(
+        "_tagged", F.explode_outer(tagged) if per_match else tagged
+    ).select("*", *new_cols).drop("_tagged")
     return out.select(*ordered_with_new_after(out.columns, finals, text_col))

@@ -1,24 +1,25 @@
-"""Structured Streaming variant of the tagging/KG pipeline.
+"""Structured Streaming ingestion for the tagging/KG pipeline.
 
 The reference is strictly batch (SURVEY.md §2.9); this is new surface for
-continuous crawl ingestion: a stream of web pages → the same Arrow match
-UDF → triples, with exactly-once sinks via foreachBatch + the per-batch
-manifest. The extraction UDF is stateless per document, so it drops into a
-streaming plan unchanged — watermarks/windows only matter for the optional
-rate aggregation.
+continuous crawl ingestion: a stream of web pages → ``kg.build_triples``
+(the batch triples path, unchanged: pass ``languages``, since a stream
+cannot be pre-scanned) → an exactly-once parquet sink via foreachBatch.
+The kernel UDF (``tagger.doc_udf``) is stateless per document, so it drops
+into a streaming plan unchanged, its broadcast included — watermarks and
+windows only matter for the optional rate aggregation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.ontology import CompiledOntology
-from ..operators.tagger import extract_mentions, sentence_of
+from ..operators.tagger import doc_udf
 
 __all__ = [
-    "stream_pages", "stream_triples", "stream_mention_rate",
-    "write_epoch", "run_stream_to_parquet",
+    "stream_pages", "stream_mention_rate", "write_epoch", "run_stream_to_parquet",
 ]
 
 
@@ -31,39 +32,8 @@ def stream_pages(spark: SparkSession, source_dir: str, schema) -> DataFrame:
     )
 
 
-def stream_triples(
-    pages: DataFrame,
-    compiled: CompiledOntology,
-    url_col: str = "url",
-    text_col: str = "text",
-    lang_col: str | None = "lang",
-) -> DataFrame:
-    """Streaming mention extraction → per-match triple rows."""
-    tagged = extract_mentions(
-        pages, compiled, text_col, lang_col, result_col="_t",
-        skip_unknown=True, broadcast=False,  # broadcast vars don't restart cleanly in streams
-    )
-    # sentence resolved inside the per-row transform, before exploding
-    # (same shape as kg.build_triples: never duplicate the sentences array
-    # once per match row)
-    m_structs = F.transform(
-        F.col("_t")["matches"],
-        lambda m: F.struct(
-            m["tag"].alias("pred"),
-            m["tag"].alias("obj"),
-            m["keyword"].alias("keyword"),
-            sentence_of("_t", m).alias("sentence"),
-        ),
-    )
-    return tagged.select(
-        F.col(url_col).alias("subj"), F.explode(m_structs).alias("m")
-    ).select(
-        "subj",
-        F.col("m")["pred"].alias("pred"),
-        F.col("m")["obj"].alias("obj"),
-        F.col("m")["keyword"].alias("keyword"),
-        F.col("m")["sentence"].alias("sentence"),
-    )
+def _match_count(sentences: list[str], matches: list[dict]) -> int:
+    return len(matches)
 
 
 def stream_mention_rate(
@@ -83,17 +53,13 @@ def stream_mention_rate(
     window finalized — the standard Structured Streaming pattern for
     continuous ingestion monitoring (emit to an append sink once windows
     close, or a memory/update sink for live dashboards)."""
-    tagged = extract_mentions(
-        pages, compiled, text_col, lang_col, result_col="_t",
-        skip_unknown=True, broadcast=False,
-    )
+    ref = pages.sparkSession.sparkContext.broadcast(compiled)
+    n_matches = doc_udf(ref, T.IntegerType(), _match_count, "en", True)
     return (
-        tagged.withWatermark(ts_col, watermark)
+        pages.withColumn("_n", n_matches(F.col(text_col), F.col(lang_col)))
+        .withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window), F.col(lang_col).alias("lang"))
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.sum(F.size(F.col("_t")["matches"])).alias("n_mentions"),
-        )
+        .agg(F.count("*").alias("n_pages"), F.sum("_n").alias("n_mentions"))
     )
 
 

@@ -45,6 +45,24 @@ def test_per_doc_json_zero_shuffle(spark, docs):
     assert "Exchange" not in plan_of(out)
 
 
+@pytest.mark.parametrize("with_category", [False, True])
+@pytest.mark.parametrize(
+    "fmt", ["one_row_per_match", "one_row_per_doc", "one_row_per_doc_json"]
+)
+def test_tagging_plans_one_kernel_udf_no_lambdas(spark, docs, fmt, with_category):
+    # every format is one doc_udf pass plus a codegen'd JVM projection: no
+    # interpreted higher-order function (per-doc's array dedup and sentence
+    # join run in the emitter; the JVM keeps only size/to_json)
+    out = tag_documents(
+        docs, demo_ontology_df(spark, with_category=with_category), lang_col="lang",
+        category_col="category" if with_category else None, languages=LANGS,
+        output_format=fmt,
+    )
+    plan = plan_of(out)
+    assert plan.count("lambdafunction(") == 0, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_triples_zero_shuffle_zero_join(spark, docs):
     # r6: the tag→canonical map rides the extraction UDF's broadcast and
     # is applied inline, so the triples plan has NO join of any kind and

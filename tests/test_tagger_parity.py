@@ -256,3 +256,61 @@ def test_multilingual_dispatch(spark):
     rows = tag_documents(docs, onto).orderBy("doc_id").collect()
     assert rows[0]["tag"] == "M"
     assert rows[1]["tag"] == "AUT"  # matched via fr elision d' + automne
+
+
+def test_one_row_per_doc_repeated_sentence_text(spark):
+    # two sentences with identical text, both matching: without categories
+    # sentences dedup by position (the text repeats), with categories by
+    # text (it appears once) — formatter_by_document.py:54-86 vs 143-222
+    text = ["alpha here. alpha here."]
+    plain = run(spark, text, [("A", "alpha")], fmt="one_row_per_doc")
+    assert plain[0]["tag_sentences"] == "alpha here.\nalpha here.\n"
+    cat = run(spark, text, [("A", "alpha", "c")], with_category=True, fmt="one_row_per_doc")
+    assert cat[0]["tag_sentences"] == "alpha here.\n"
+
+
+# tags, keywords and categories carrying a quote, a backslash, a control
+# character, U+2028 and CJK; the expected cells are the bytes the former
+# higher-order-function formatter produced for these documents
+_NASTY_TEXTS = [
+    'He said a"b here. Then c\\d there.',
+    "x\x01y and 東京 station. 東京 again.",
+    'plain a"b and x\x01y.',
+    "nothing matches",
+]
+_NASTY_ONTOLOGY = [
+    ('q"uote', 'a"b', 'c"at'),
+    ("back\\slash", "c\\d", "c\\at"),
+    ("ctl\x01tag", "x\x01y", 'c"at'),
+    ("東京\u2028tag", "東京", "分類"),
+]
+
+
+def test_one_row_per_doc_escapes_byte_exact(spark):
+    rows = run(spark, _NASTY_TEXTS, [r[:2] for r in _NASTY_ONTOLOGY], fmt="one_row_per_doc")
+    got = [(r["tag_list"], r["tag_keywords"], r["tag_sentences"]) for r in rows]
+    assert got == [
+        ('["q\\"uote","back\\\\slash"]', '["a\\"b","c\\\\d"]',
+         'He said a"b here.\nThen c\\d there.\n'),
+        ('["ctl\\u0001tag","東京\u2028tag"]', '["x\\u0001y","東京"]',
+         "x\x01y and 東京 station.\n東京 again.\n"),
+        ('["q\\"uote","ctl\\u0001tag"]', '["a\\"b","x\\u0001y"]',
+         'plain a"b and x\x01y.\n'),
+        (None, None, None),
+    ]
+
+
+def test_one_row_per_doc_category_escapes_byte_exact(spark):
+    rows = run(spark, _NASTY_TEXTS, _NASTY_ONTOLOGY, with_category=True, fmt="one_row_per_doc")
+    cols = ['tag_list_c"at', "tag_list_c\\at", "tag_list_分類",
+            "tag_keywords", "tag_sentences"]
+    got = [tuple(r[c] for c in cols) for r in rows]
+    assert got == [
+        ('["q\\"uote"]', '["back\\\\slash"]', None, '["a\\"b","c\\\\d"]',
+         'He said a"b here.\n Then c\\d there.\n'),
+        ('["ctl\\u0001tag"]', None, '["東京\u2028tag"]', '["x\\u0001y","東京"]',
+         "x\x01y and 東京 station.\n 東京 again.\n"),
+        ('["q\\"uote","ctl\\u0001tag"]', None, None, '["a\\"b","x\\u0001y"]',
+         'plain a"b and x\x01y.\n'),
+        (None, None, None, None, ""),
+    ]
