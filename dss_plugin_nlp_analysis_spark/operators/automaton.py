@@ -8,16 +8,20 @@ inside Arrow-batched UDFs.
 Two probe semantics, matching the reference's two physical strategies:
 - ``find_all``  — ALL matches incl. overlapping/nested (spaCy PhraseMatcher
   behavior; reference python-lib/nlp/ontology_tagging/ontology_tagger.py:288-302).
-- ``find_longest`` — leftmost-longest non-overlapping (spaCy EntityRuler /
-  filter_spans behavior; ontology_tagger.py:251-266). Ties on identical
-  spans resolve to the FIRST-added pattern; ``find_all`` consumers resolve
-  duplicate keywords to the LAST-added pattern (dict-overwrite,
-  ontology_tagger.py:225-231) — both captured at build time.
+- ``filter_leftmost_longest`` over ``find_all``'s hits — leftmost-longest
+  non-overlapping (spaCy EntityRuler / filter_spans behavior;
+  ontology_tagger.py:251-266).
+
+Duplicate keywords (one token sequence, several ontology rows) resolve to
+the FIRST-added row with categories (EntityRuler) and to the LAST-added
+without (dict overwrite, ontology_tagger.py:225-231). Both rules are
+applied at build time: ``CompiledOntology.automaton_for`` adds only the
+winning row of each sequence unless entity linking scores them all.
 
 Scale notes: tokens absent from every pattern get no vocab id and reset the
 probe state to root in O(1), so the common case (miss) is a single dict
 lookup per token. The automaton is built per executor process from the
-broadcast pattern list and memoized (see operators/tagger.py).
+broadcast pattern list and memoized (``CompiledOntology.automaton_for``).
 """
 
 from __future__ import annotations
@@ -33,8 +37,7 @@ class TokenAutomaton:
 
     Patterns are sequences of hashable tokens; ``payload`` is the pattern's
     ontology row index (or any id). Duplicate token sequences accumulate all
-    payloads in add order (consumers apply the tie rules above, or score
-    all candidates for entity linking).
+    payloads in add order (the tie rules above add only one of them).
     """
 
     __slots__ = ("_vocab", "_goto", "_fail", "_out", "_built")
@@ -95,9 +98,7 @@ class TokenAutomaton:
         self, tokens: Sequence[Hashable]
     ) -> list[tuple[int, int, tuple[int, ...]]]:
         """All matches: list of (start, end_exclusive, payload_ids) in
-        (start, end) order. ``payload_ids`` is in pattern-add order — the
-        consumer picks first (EntityRuler tie rule), last (dict-overwrite
-        rule), or scores all (entity linking)."""
+        (start, end) order. ``payload_ids`` is in pattern-add order."""
         vget = self._vocab.get
         goto = self._goto
         fail = self._fail

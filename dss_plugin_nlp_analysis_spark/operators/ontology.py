@@ -122,8 +122,8 @@ class CompiledOntology:
     ``payloads[i] = (tag, category)`` for ontology row i (post-clean order —
     order carries the dup-keyword tie rules, SEMANTICS.md §5).
     ``patterns[lang][i]`` is row i's match-key token tuple for ``lang``.
-    Automata are built lazily per process and memoized (pickling ships only
-    the compact pattern lists to executors).
+    Pickling ships only these lists; ``automaton_for`` builds each
+    language's automaton on first use in a process and memoizes it.
     """
 
     payloads: list[tuple[str, str | None]]
@@ -142,17 +142,24 @@ class CompiledOntology:
         return state
 
     def automaton_for(self, lang: str) -> TokenAutomaton:
+        """The automaton over ``patterns[lang]``, whose payloads are row
+        indices. Without entity linking the duplicate-keyword tie rule is
+        applied here, once: each distinct token tuple keeps one row — the
+        first-added with categories (EntityRuler), the last-added without
+        (dict overwrite) — so every hit carries exactly one payload. With
+        linking every row stays, in add order, for the context scorer."""
         auto = self._automata.get(lang)
         if auto is None:
+            rows = [(toks, idx) for idx, toks in enumerate(self.patterns[lang])]
+            if not self.options.link_entities:
+                # dict() keeps the last row of each tuple; reversed, the first
+                rows = dict(reversed(rows) if self.has_category else rows).items()
             auto = TokenAutomaton()
-            for idx, toks in enumerate(self.patterns[lang]):
+            for toks, idx in rows:
                 auto.add(toks, idx)
             auto.build()
             self._automata[lang] = auto
         return auto
-
-    def languages(self) -> list[str]:
-        return list(self.patterns)
 
 
 def keyword_match_tokens(

@@ -72,88 +72,41 @@ COLUMN_DESCRIPTIONS = {
 }
 
 
-# "plain words" screen for the kernel fast path: a cleaned document of
-# ASCII-alnum words joined by single spaces tokenizes to exactly
-# ``clean.split(" ")`` (no space tokens, no punctuation), contains no
-# sentence-break token (alnum is never in SENTENCE_PUNCT_CHARS and never
-# punct), and is normalization-identity for every option lattice point
-# except lowercasing (handled by the lowercase-only variant) — so the whole
-# tokenize -> sentencize -> normalize pipeline collapses to one split and
-# one automaton probe. Equivalence with the generic path is pinned by
-# tests/test_round6_fastpath.py (monkeypatched never-matching screen).
+# "plain words" screen: a cleaned document of ASCII-alnum words joined by
+# single spaces tokenizes to exactly its space-split words (no space tokens,
+# no punctuation), is one sentence (alnum is never in SENTENCE_PUNCT_CHARS
+# and never punct), and is normalization-identity for every option lattice
+# point except lowercasing (handled by the lowercase-only variant). Such a
+# document skips the tokenizer and the sentencizer only: ``_word_tokens``
+# stands in for both, and the one sentence loop of ``process_document``
+# runs as for any other document. Equivalence with the generic path is
+# pinned by tests/test_round6_fastpath.py (monkeypatched never-matching
+# screen) and tests/test_fuzz.py (``_word_tokens`` vs ``tokenize_raw``).
 _FAST_WORDS_RE = re.compile(r"[A-Za-z0-9]+(?: [A-Za-z0-9]+)*")
 _FAST_WORDS_LOWER_RE = re.compile(r"[a-z0-9]+(?: [a-z0-9]+)*")
 
 
-def _resolve_payload(
-    compiled: CompiledOntology, keys: list, ts: int, te: int,
-    payloads: tuple, lang_profiles: dict
-) -> int:
-    """Duplicate-keyword tie rule shared by both kernel paths."""
-    if compiled.options.link_entities and len(payloads) > 1:
-        # context-window scoring (SEMANTICS.md §8): overlap between the
-        # sentence's other tokens and each candidate tag's other keywords;
-        # ties keep add order
-        context = set(keys[:ts]) | set(keys[te:])
-        return max(
-            payloads,
-            key=lambda p: (len(context & lang_profiles.get(p, frozenset())), -p),
-        )
-    # dup-keyword resolution: EntityRuler keeps the first-added pattern,
-    # the no-category dict keeps the last (SEMANTICS.md §5)
-    return payloads[0] if compiled.has_category else payloads[-1]
-
-
-def _process_simple_doc(
-    compiled: CompiledOntology, clean: str, lang: str
-) -> tuple[list[str], list[dict]]:
-    """Fast path for documents that pass the plain-words screen: the doc is
-    one sentence, its tokens are ``clean.split(" ")`` verbatim, offsets are
-    prefix sums — no tokenizer, no sentencizer, no per-sentence re-scan."""
-    opts = compiled.options
-    parts = clean.split(" ")
-    keys = (
-        lemmatize_tokens(parts, compiled.lemma_tables.get(lang, {}))
-        if opts.lemmatization
-        else parts
-    )
-    hits = compiled.automaton_for(lang).find_all(keys)
-    sentences = [clean]
-    if not hits:
-        return sentences, []
-    if compiled.has_category:
-        hits = filter_leftmost_longest(hits)
-    starts: list[int] = []
-    ends: list[int] = []
+def _word_tokens(clean: str) -> list[tuple]:
+    """``tokenize_raw`` of a screened document: its space-split words as
+    ``(word, start, end, False)``."""
+    tokens = []
     pos = 0
-    for p in parts:
-        starts.append(pos)
-        pos += len(p)
-        ends.append(pos)
-        pos += 1
-    lang_profiles = compiled.profiles.get(lang, {})
-    matches: list[dict] = []
-    for ts, te, payloads in hits:
-        idx = (
-            _resolve_payload(compiled, keys, ts, te, payloads, lang_profiles)
-            if len(payloads) > 1
-            else payloads[0]
-        )
-        tag, category = compiled.payloads[idx]
-        cs, ce = starts[ts], ends[te - 1]
-        matches.append(
-            {
-                "sent_idx": 0,
-                "tok_start": ts,
-                "tok_end": te,
-                "char_start": cs,
-                "char_end": ce,
-                "tag": tag,
-                "category": category,
-                "keyword": clean[cs:ce],
-            }
-        )
-    return sentences, matches
+    for word in clean.split(" "):
+        end = pos + len(word)
+        tokens.append((word, pos, end, False))
+        pos = end + 1
+    return tokens
+
+
+def _link_entity(keys: list, ts: int, te: int, payloads: tuple, lang_profiles: dict) -> int:
+    """Entity linking (SEMANTICS.md §8) among the rows of one keyword:
+    the most overlap between the sentence's other tokens and each
+    candidate tag's other keywords; ties keep add order."""
+    context = set(keys[:ts]) | set(keys[te:])
+    return max(
+        payloads,
+        key=lambda p: (len(context & lang_profiles.get(p, frozenset())), -p),
+    )
 
 
 def process_document(
@@ -161,9 +114,14 @@ def process_document(
 ) -> tuple[list[str], list[dict]]:
     """Pure-Python per-document kernel (unit-testable without Spark).
 
-    Single pass: linebreak clean → tokenize once → sentence spans →
-    per-sentence normalize (token reuse when normalization is identity) →
-    AC probe (all-overlaps, or leftmost-longest when categories exist).
+    Linebreak clean → tokenize once and split into sentences (one split
+    and one sentence for a document that passes the plain-words screen) →
+    per sentence: normalize (token reuse when normalization is identity) →
+    lemmatize → AC probe (all-overlaps, or leftmost-longest when categories
+    exist). Duplicate-keyword ties are resolved when the automaton is built
+    (``CompiledOntology.automaton_for``); only entity linking scores
+    several rows here. Each match is ``{sent_idx, tag, category,
+    keyword}``, the keyword as it appears in the normalized sentence.
     """
     clean = clean_linebreaks(text)
     if not clean:
@@ -171,11 +129,14 @@ def process_document(
     opts = compiled.options
     fast_re = _FAST_WORDS_LOWER_RE if opts.ignore_case else _FAST_WORDS_RE
     if fast_re.fullmatch(clean):
-        return _process_simple_doc(compiled, clean, lang)
-    doc_tokens = tokenize_raw(clean, lang)  # plain (text, start, end, is_space)
-    spans = sentence_token_spans(doc_tokens)
+        doc_tokens = _word_tokens(clean)
+        spans = [(0, len(doc_tokens))]
+    else:
+        doc_tokens = tokenize_raw(clean, lang)  # plain (text, start, end, is_space)
+        spans = sentence_token_spans(doc_tokens)
     auto = compiled.automaton_for(lang)
     table = compiled.lemma_tables.get(lang, {})
+    lang_profiles = compiled.profiles.get(lang, {})
     sentences: list[str] = []
     matches: list[dict] = []
     for s_idx, (a, b) in enumerate(spans):
@@ -188,7 +149,7 @@ def process_document(
             lemmatization=opts.lemmatization,
             ignore_diacritics=opts.ignore_diacritics,
         )
-        reused = norm == sent_text  # fast path: reuse the doc-level tokens
+        reused = norm == sent_text  # reuse the doc-level tokens
         toks = doc_tokens[a:b] if reused else tokenize_raw(norm, lang)
         keys = [t[0] for t in toks]
         if opts.lemmatization:
@@ -196,33 +157,21 @@ def process_document(
         hits = auto.find_all(keys)
         if not hits:
             continue
-        # char offsets are only needed once something matched
-        shift = off if reused else 0
-        starts = [t[1] - shift for t in toks]
-        ends = [t[2] - shift for t in toks]
         if compiled.has_category:
             hits = filter_leftmost_longest(hits)
-        lang_profiles = compiled.profiles.get(lang, {})
+        shift = off if reused else 0
         for ts, te, payloads in hits:
             idx = (
-                _resolve_payload(compiled, keys, ts, te, payloads, lang_profiles)
-                if len(payloads) > 1
-                else payloads[0]
+                payloads[0] if len(payloads) == 1
+                else _link_entity(keys, ts, te, payloads, lang_profiles)
             )
             tag, category = compiled.payloads[idx]
-            cs, ce = starts[ts], ends[te - 1]
-            matches.append(
-                {
-                    "sent_idx": s_idx,
-                    "tok_start": ts,
-                    "tok_end": te,
-                    "char_start": cs,
-                    "char_end": ce,
-                    "tag": tag,
-                    "category": category,
-                    "keyword": norm[cs:ce],
-                }
-            )
+            matches.append({
+                "sent_idx": s_idx,
+                "tag": tag,
+                "category": category,
+                "keyword": norm[toks[ts][1] - shift:toks[te - 1][2] - shift],
+            })
     return sentences, matches
 
 
@@ -466,6 +415,8 @@ def tag_documents(
     # explode_outer for per-match rows, to_json of the per-doc arrays —
     # with no interpreted higher-order function and no shuffle
     finals = unique_names(base_names, docs_df.columns)
+    # the kernel's temporary column; Spark resolves names case-insensitively
+    (tmp,) = unique_names(["_tagged"], [c.lower() for c in docs_df.columns + finals])
     schema = T.StructType([T.StructField(n, t) for n, t in zip(finals, types)])
     per_match = output_format == "one_row_per_match"
     ref = docs_df.sparkSession.sparkContext.broadcast(compiled)
@@ -474,13 +425,13 @@ def tag_documents(
     tagged = udf(F.col(text_col), F.col(lang_col) if lang_col else F.lit(language))
     new_cols = []
     for i, (base, final, typ) in enumerate(zip(base_names, finals, types)):
-        col = F.col("_tagged")[final]
+        col = F.col(tmp)[final]
         if typ == strings:
             col = F.when(F.size(col) > 0, F.to_json(col))
         # human descriptions as column metadata (S5; base.py:72-77)
         comment = comments.get(i, COLUMN_DESCRIPTIONS.get(base))
         new_cols.append(col.alias(final, metadata={"comment": comment}))
     out = docs_df.withColumn(
-        "_tagged", F.explode_outer(tagged) if per_match else tagged
-    ).select("*", *new_cols).drop("_tagged")
+        tmp, F.explode_outer(tagged) if per_match else tagged
+    ).select("*", *new_cols).drop(tmp)
     return out.select(*ordered_with_new_after(out.columns, finals, text_col))

