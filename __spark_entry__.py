@@ -3592,7 +3592,7 @@ def _q_incr_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LSH candidates for a crawl update: the base corpus
     plus a delta of re-crawled (4-words-truncated) versions at id+1e6 —
     exactly the full-run pairs touching >=1 delta doc, with the pair
-    join delta-sided instead of corpus-wide."""
+    step delta-sided instead of corpus-wide."""
     from dss_plugin_nlp_analysis_spark.operators.dedup import (
         incremental_minhash_pairs,
         normalized_text,

@@ -210,16 +210,17 @@ def load_lookup_table(path: str) -> dict[str, str]:
         return json.load(f)
 
 
-def lemma_table(lang: str, lookup_dir: str | None = None) -> dict[str, str]:
+def lemma_table(lang: str) -> dict[str, str]:
     """Return the lemma lookup for ``lang``: generated regular paradigms
     (``lemmadata.generated_table`` — a few thousand high-frequency regular
     inflections for the top web languages) overridden by the vendored
-    irregular/golden table, overridden by an optional user table."""
+    irregular/golden table, overridden by an optional user table
+    ``$KG_LEMMA_LOOKUP_DIR/<lang>_lemma_lookup.json``."""
     from .lemmadata import generated_table
 
     table = dict(generated_table(lang))
     table.update(_BUILTIN.get(lang, {}))
-    lookup_dir = lookup_dir or os.environ.get("KG_LEMMA_LOOKUP_DIR")
+    lookup_dir = os.environ.get("KG_LEMMA_LOOKUP_DIR")
     if lookup_dir:
         path = os.path.join(lookup_dir, f"{lang}_lemma_lookup.json")
         if os.path.exists(path):

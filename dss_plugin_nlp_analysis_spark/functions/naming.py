@@ -10,22 +10,24 @@ from __future__ import annotations
 __all__ = ["unique_name", "unique_names", "ordered_with_new_after"]
 
 
-def unique_name(name: str, existing: list[str], prefix: str | None = None) -> str:
-    base = f"{prefix}_{name}" if prefix else name
-    if base not in existing:
-        return base
+def unique_name(name: str, existing: list[str]) -> str:
+    """``name``, or the first free ``name_1``..``name_1000``. Names compare
+    case-insensitively, as Spark resolves them."""
+    taken = {e.lower() for e in existing}
+    if name.lower() not in taken:
+        return name
     for i in range(1, 1001):
-        candidate = f"{base}_{i}"
-        if candidate not in existing:
+        candidate = f"{name}_{i}"
+        if candidate.lower() not in taken:
             return candidate
     raise RuntimeError(f"could not find a unique name for column '{name}'")
 
 
-def unique_names(names: list[str], existing: list[str], prefix: str | None = None) -> list[str]:
+def unique_names(names: list[str], existing: list[str]) -> list[str]:
     taken = list(existing)
     out = []
     for n in names:
-        u = unique_name(n, taken, prefix)
+        u = unique_name(n, taken)
         out.append(u)
         taken.append(u)
     return out

@@ -9,12 +9,14 @@ Scale notes (100 TB):
 - exact_dedup shuffles once on the 32-hex-char fingerprint (not the text).
 - minhash signatures are computed map-side per document; only
   (doc_id, band_key) pairs — a few dozen bytes/doc — reach the shuffle.
-- LSH banding groups once on band_key, collecting each bucket's sorted id
-  array, and pairs ids by a double explode within the bucket (no
+- LSH banding groups once on band_key, collecting each bucket's sorted
+  member array, and pairs ids by a double explode within the bucket (no
   self-join); hot buckets (boilerplate) are capped via ``max_bucket_size``
   before the pair step to bound quadratic blowup, the standard web-dedup
-  guard. ``incremental_minhash_pairs`` still joins the delta's band keys
-  to the capped base keys.
+  guard. ``minhash_candidate_pairs``, ``incremental_minhash_pairs`` and
+  ``multimodal.dhash_candidate_pairs`` share that one bucket step
+  (``_bucket_pairs``); the incremental operator pairs only its delta
+  members.
 """
 
 from __future__ import annotations
@@ -96,6 +98,20 @@ def shingles(col: Column, n: int = 3) -> Column:
     )
 
 
+def _shingle_array(text: Column, n: int) -> Column:
+    """The word n-gram shingles of ``text`` (array<string>) as ONE
+    codegen'd regex pass — the generator behind ``exploded_shingles``."""
+    norm = normalized_text(text)
+    pattern = r"(?:^|\s)(?=(\S+" + r"\s\S+" * (n - 1) + r"))"
+    # whole-text fallback when the doc has < n words; empty text yields
+    # size(split)==1, so the n==1 case needs the explicit empty check to
+    # still emit its whole-text ('') shingle
+    return F.when(
+        (F.size(F.split(norm, " ")) >= n) & (norm != ""),
+        F.regexp_extract_all(norm, F.lit(pattern), 1),
+    ).otherwise(F.array(norm))
+
+
 def exploded_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
@@ -112,32 +128,48 @@ def exploded_shingles(
     Long and short documents are handled in ONE projection (a CASE inside
     the explode), so the source text column is scanned and normalized
     exactly once — not once per branch of a union."""
-    norm = normalized_text(F.col(text_col))
-    pattern = r"(?:^|\s)(?=(\S+" + r"\s\S+" * (n - 1) + r"))"
-    # whole-text fallback when the doc has < n words; empty text yields
-    # size(split)==1, so the n==1 case needs the explicit empty check to
-    # still emit its whole-text ('') shingle
-    grams = F.when(
-        (F.size(F.split(norm, " ")) >= n) & (norm != ""),
-        F.regexp_extract_all(norm, F.lit(pattern), 1),
-    ).otherwise(F.array(norm))
-    return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g"))
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(_shingle_array(F.col(text_col), n)).alias("g"),
+    )
 
 
-def _banded_small_keys(
+def _minhash_band_keys(
     df: DataFrame,
     id_col: str,
     text_col: str,
     num_hashes: int,
     bands: int,
     n: int,
-    max_bucket_size: int,
+    *carry: str,
 ) -> DataFrame:
-    """(id, band_key) rows of the MinHash LSH banding with degenerate
-    buckets (> max_bucket_size members) dropped — the shared build side
-    of ``minhash_candidate_pairs`` and ``incremental_minhash_pairs``."""
+    """(id, band_key, *carry) rows of the MinHash LSH banding — the one
+    signature + band-key definition behind ``minhash_candidate_pairs``
+    and ``incremental_minhash_pairs``. ``carry`` columns of ``df`` ride
+    through the per-id signature aggregate as their max.
+
+    Seed ``i`` is the minimum, over the document's shingles, of the
+    ``i % 8``-th 4-hex-char window of digest ``i // 8``: digest 0 is
+    ``md5(g)``, digest ``k > 0`` is ``md5(g || '|k')`` — an md5 holds eight
+    windows, so seeds 8 and up need digests of their own (windows past
+    the 32nd hex char would be empty, NULL after ``conv``, and drop out
+    of the band key).
+    """
+    if bands < 1 or num_hashes < bands or num_hashes % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide num_hashes, got "
+            f"num_hashes={num_hashes}, bands={bands}"
+        )
     rows_per_band = num_hashes // bands
-    ex = exploded_shingles(df, id_col, text_col, n).withColumn("h", F.md5("g"))
+    digests = [
+        F.md5(F.col("g") if k == 0 else F.concat("g", F.lit(f"|{k}"))).alias(f"_h{k}")
+        for k in range((num_hashes + 7) // 8)
+    ]
+    ex = df.select(
+        F.col(id_col).alias("id"),
+        *carry,
+        F.explode(_shingle_array(F.col(text_col), n)).alias("g"),
+    ).select("id", *carry, *digests)
     # numeric minima: min over a STRING buffer forces SortAggregate (two
     # full sorts of the exploded shingle rows); fixed-width lowercase hex
     # sorts identically to its numeric value ('0'-'9' < 'a'-'f' in ASCII),
@@ -145,20 +177,24 @@ def _banded_small_keys(
     # while the int buffer keeps the aggregation a hash aggregate
     sig = ex.groupBy("id").agg(
         *[
-            F.min(F.conv(F.substring("h", 1 + 4 * i, 4), 16, 10).cast("int")).alias(f"s{i}")
+            F.min(
+                F.conv(F.substring(f"_h{i // 8}", 1 + 4 * (i % 8), 4), 16, 10).cast("int")
+            ).alias(f"s{i}")
             for i in range(num_hashes)
-        ]
+        ],
+        *[F.max(c).alias(c) for c in carry],
     )
-    banded = sig.select(
+    return sig.select(
         "id",
+        *carry,
         F.explode(
             F.array(
                 *[
-                    # the raw "b|s..|s.." concat IS the band key: grouping/
-                    # joining on it yields exactly the md5-key buckets (the
-                    # concat is injective: its operands are decimal ints,
-                    # digits only, so the "|" separators cannot be forged)
-                    # while skipping the hash and shuffling a short string
+                    # the raw "b|s..|s.." concat IS the band key: grouping
+                    # on it yields exactly the md5-key buckets (the concat
+                    # is injective: its operands are decimal ints, digits
+                    # only, so the "|" separators cannot be forged) while
+                    # skipping the hash and shuffling a short string
                     F.concat_ws(
                         "|",
                         F.lit(b),
@@ -169,9 +205,47 @@ def _banded_small_keys(
             )
         ).alias("band_key"),
     )
-    counts = banded.groupBy("band_key").agg(F.count("*").alias("_n"))
-    return banded.join(
-        counts.where(F.col("_n") <= max_bucket_size).select("band_key"), "band_key"
+
+
+def _bucket_pairs(
+    banded: DataFrame, max_bucket_size: int, old: Column | None = None
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, distinct, of the
+    ``(id, band_key)`` rows in ``banded`` — the one LSH bucket step.
+
+    ONE groupBy(band_key) collects each bucket's members as a sorted
+    array of ``(old, id)`` structs. A bucket's size is its number of rows
+    (a NULL id counts), and buckets of 2..``max_bucket_size`` members are
+    paired: each member whose ``old`` flag is false pairs with every later
+    member. ``old`` members sort last, so two of them never pair, and the
+    work is (non-old members) x bucket width; without ``old`` every
+    member is paired with the later ones. Equal ids and NULL ids never
+    pair. A degenerate bucket costs an O(bucket_size) collect_list buffer
+    in Spark's ObjectHashAggregate (sort-based spill fallback), while its
+    quadratic pair OUTPUT is filtered out before any explosion.
+    """
+    member = F.struct(
+        (F.lit(False) if old is None else old).alias("old"), F.col("id").alias("id")
+    )
+    buckets = (
+        banded.groupBy("band_key")
+        .agg(F.sort_array(F.collect_list(member)).alias("_m"))
+        .where((F.size("_m") >= 2) & (F.size("_m") <= max_bucket_size))
+    )
+    firsts = buckets.select(F.posexplode("_m").alias("_i", "_a"), "_m").where(
+        ~F.col("_a.old")
+    )
+    return (
+        firsts.select(
+            F.col("_a.id").alias("_x"),
+            F.explode(F.slice("_m", F.col("_i") + 2, F.size("_m"))).alias("_b"),
+        )
+        .where(F.col("_x") != F.col("_b.id"))
+        .select(
+            F.least("_x", "_b.id").alias("id_a"),
+            F.greatest("_x", "_b.id").alias("id_b"),
+        )
+        .distinct()
     )
 
 
@@ -187,76 +261,24 @@ def minhash_candidate_pairs(
     """LSH banding: docs sharing any band of the MinHash signature become a
     candidate pair (id_a < id_b, distinct).
 
-    Physical plan: explode shingles → md5 ONCE per shingle → groupBy(id)
-    with map-side partial MIN aggregation of the per-seed hex windows (the
-    shuffle carries one tiny signature row per doc per partition), then
-    band-key explode → ONE groupBy(band_key) collecting the bucket's sorted
-    id array → pairs by double-explode within each surviving bucket.
+    Physical plan: explode shingles → md5 ONCE per shingle (per eight
+    seeds) → groupBy(id) with map-side partial MIN aggregation of the
+    per-seed hex windows (the shuffle carries one tiny signature row per
+    doc per partition), then band-key explode → ONE groupBy(band_key)
+    collecting the bucket's sorted members → pairs by double-explode
+    within each surviving bucket (``_bucket_pairs``).
 
-    The bucket array formulation replaces the previous count-then-join +
+    The bucket array formulation replaces a count-then-join +
     self-equi-join shape, which executed the shingle→signature pipeline
     four times (counts side, join side, and both self-join sides — 18
     Exchanges; measured 4.3 s at 100k docs on local[32] vs 2.0 s for this
-    plan). ``max_bucket_size`` still drops degenerate buckets (boilerplate
-    text) before the quadratic pair step; the collect_list buffer for a
-    degenerate bucket is O(bucket_size × id_width) inside Spark's
-    ObjectHashAggregate (sort-based spill fallback), i.e. ~80 MB even for
-    a pathological 10M-doc bucket — bounded and spillable, while the pair
-    OUTPUT of such a bucket (the actual quadratic hazard) is still
-    filtered out before any explosion.
+    plan). ``max_bucket_size`` drops degenerate buckets (boilerplate
+    text) before the quadratic pair step; a bucket's size counts its
+    member documents, a NULL id included, and a NULL id is never paired.
+    ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
     """
-    rows_per_band = num_hashes // bands
-    ex = exploded_shingles(df, id_col, text_col, n).withColumn("h", F.md5("g"))
-    # numeric minima: min over a STRING buffer forces SortAggregate (two
-    # full sorts of the exploded shingle rows); fixed-width lowercase hex
-    # sorts identically to its numeric value ('0'-'9' < 'a'-'f' in ASCII),
-    # so min(conv(window,16,10)) selects exactly the same per-seed minima
-    # while the int buffer keeps the aggregation a hash aggregate
-    sig = ex.groupBy("id").agg(
-        *[
-            F.min(F.conv(F.substring("h", 1 + 4 * i, 4), 16, 10).cast("int")).alias(f"s{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    # the raw "b|s..|s.." concat IS the band key: grouping/
-                    # joining on it yields exactly the md5-key buckets (the
-                    # concat is injective: its operands are decimal ints,
-                    # digits only, so the "|" separators cannot be forged)
-                    # while skipping the hash and shuffling a short string
-                    F.concat_ws(
-                        "|",
-                        F.lit(b),
-                        *[F.col(f"s{b * rows_per_band + r}") for r in range(rows_per_band)],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_key"),
-    )
-    buckets = banded.groupBy("band_key").agg(
-        F.sort_array(F.collect_list("id")).alias("_ids")
-    )
-    capped = buckets.where(
-        (F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket_size)
-    )
-    # all i<j pairs of the sorted array: ids are distinct within a bucket
-    # (one signature row per doc), so position order == value order and the
-    # pair set equals the old (a.id < b.id) self-join output exactly
-    return (
-        capped.select(F.posexplode("_ids").alias("_i", "id_a"), F.col("_ids"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
-    )
+    banded = _minhash_band_keys(df, id_col, text_col, num_hashes, bands, n)
+    return _bucket_pairs(banded, max_bucket_size)
 
 
 def cross_snapshot_dedup(
@@ -888,35 +910,25 @@ def incremental_minhash_pairs(
     either interchangeably (union the new pairs with the previous pair
     archive before ``cluster_dedup``).
 
-    Scale shape: band keys are computed over the union (a production
-    deployment persists the base side's (id, band_key) table between
-    crawls and only the delta side's signatures are new work — the seam
-    is this function's ``small``/``d_keys`` split), and the pair join is
-    DELTA-SIDED: |delta band rows| x bucket width, not the corpus-wide
-    self-join — the whole point of incremental processing at 10^12
-    documents where each crawl touches a small fraction.
+    Scale shape: one left anti join drops the base rows the delta
+    replaces; base ∪ delta then runs the full operator's signature and
+    bucket steps ONCE, each member carrying a literal "old" flag
+    (base = old). ``max_bucket_size`` caps the merged bucket, exactly as
+    the full re-run would, and only delta members are paired with the
+    rest of their bucket: the pair work is |delta members| x bucket
+    width, never base×base — the whole point of incremental processing
+    at 10^12 documents where each crawl touches a small fraction. (A
+    production deployment would persist the base side's (id, band_key)
+    rows between crawls so that only the delta's signatures are new.)
     """
-    delta_ids = delta_df.select(F.col(id_col).alias("id")).distinct()
-    base_kept = base_df.join(
-        delta_ids.withColumnRenamed("id", id_col), [id_col], "left_anti"
-    )
+    delta_ids = delta_df.select(F.col(id_col))
+    base_kept = base_df.join(delta_ids, [id_col], "left_anti")
     union = base_kept.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("t")
+        F.col(id_col).alias("id"), F.col(text_col).alias("t"), F.lit(True).alias("_old")
     ).unionByName(
-        delta_df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    )
-    small = _banded_small_keys(
-        union, "id", "t", num_hashes, bands, n, max_bucket_size
-    )
-    d_keys = small.join(delta_ids, "id").select(
-        F.col("id").alias("_did"), "band_key"
-    )
-    return (
-        small.join(d_keys, "band_key")
-        .where(F.col("id") != F.col("_did"))
-        .select(
-            F.least(F.col("id"), F.col("_did")).alias("id_a"),
-            F.greatest(F.col("id"), F.col("_did")).alias("id_b"),
+        delta_df.select(
+            F.col(id_col).alias("id"), F.col(text_col).alias("t"), F.lit(False).alias("_old")
         )
-        .distinct()
     )
+    banded = _minhash_band_keys(union, "id", "t", num_hashes, bands, n, "_old")
+    return _bucket_pairs(banded, max_bucket_size, F.col("_old"))

@@ -261,6 +261,26 @@ def tag_cooccurrence(
     )
 
 
+def _distinct_facts(
+    triples: DataFrame, subj: str, pred: str, obj: str
+) -> DataFrame:
+    """The distinct ``(subj, pred, obj)`` facts of ``triples`` that have no
+    NULL component."""
+    return (
+        triples.select(
+            F.col(subj).alias("subj"),
+            F.col(pred).alias("pred"),
+            F.col(obj).alias("obj"),
+        )
+        .where(
+            F.col(subj).isNotNull()
+            & F.col(pred).isNotNull()
+            & F.col(obj).isNotNull()
+        )
+        .distinct()
+    )
+
+
 def negative_samples(
     triples: DataFrame,
     subj: str = "subj",
@@ -321,19 +341,7 @@ def negative_samples(
     ents_idx = triples.sparkSession.createDataFrame(
         [(i, e) for i, e in enumerate(ents)], ["_idx", "neg_obj"]
     )
-    base = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-        .distinct()
-    )
+    base = _distinct_facts(triples, subj, pred, obj)
     ranks = F.explode(F.array(*[F.lit(i) for i in range(n_per)])).alias(
         "neg_rank"
     )
@@ -369,6 +377,21 @@ def _embedding_component(col: Column, dim: int, kind: str, scale: int) -> Column
     key = F.concat(F.lit(f"{kind}|{dim}|"), col.cast("string"))
     raw = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
     return raw % (2 * scale + 1) - scale
+
+
+def _transe_energy(tail: Column, dims: int, scale: int) -> Column:
+    """``sum_d |E(subj,d) + R(pred,d) - E(tail,d)|`` over the ``subj`` and
+    ``pred`` columns: the L1 TransE energy of the pseudo-embeddings."""
+    total: Column | None = None
+    for d in range(dims):
+        term = F.abs(
+            _embedding_component(F.col("subj"), d, "ent", scale)
+            + _embedding_component(F.col("pred"), d, "rel", scale)
+            - _embedding_component(tail, d, "ent", scale)
+        )
+        total = term if total is None else total + term
+    assert total is not None
+    return total
 
 
 def transe_scores(
@@ -415,22 +438,10 @@ def transe_scores(
         triples, subj, pred, obj, n_per=n_neg, seed=seed
     )
 
-    def energy(tail: Column) -> Column:
-        total: Column | None = None
-        for d in range(dims):
-            term = F.abs(
-                _embedding_component(F.col("subj"), d, "ent", scale)
-                + _embedding_component(F.col("pred"), d, "rel", scale)
-                - _embedding_component(tail, d, "ent", scale)
-            )
-            total = term if total is None else total + term
-        assert total is not None
-        return total
-
     return negs.select(
         "*",
-        energy(F.col("obj")).alias("pos_energy"),
-        energy(F.col("neg_obj")).alias("neg_energy"),
+        _transe_energy(F.col("obj"), dims, scale).alias("pos_energy"),
+        _transe_energy(F.col("neg_obj"), dims, scale).alias("neg_energy"),
     ).withColumn("margin", F.col("neg_energy") - F.col("pos_energy"))
 
 
@@ -465,32 +476,8 @@ def transe_ranks(
     """
     if dims < 1:
         raise ValueError(f"dims must be >= 1, got {dims}")
-    base = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-        .distinct()
-    )
+    base = _distinct_facts(triples, subj, pred, obj)
     ents = base.select(F.col("obj").alias("cand")).distinct()
-
-    def energy(tail: Column) -> Column:
-        total: Column | None = None
-        for d in range(dims):
-            term = F.abs(
-                _embedding_component(F.col("subj"), d, "ent", scale)
-                + _embedding_component(F.col("pred"), d, "rel", scale)
-                - _embedding_component(tail, d, "ent", scale)
-            )
-            total = term if total is None else total + term
-        assert total is not None
-        return total
 
     cands = base.join(F.broadcast(ents))
     if filtered:
@@ -514,8 +501,8 @@ def transe_ranks(
         "pred",
         "obj",
         "cand",
-        energy(F.col("cand")).alias("_ce"),
-        energy(F.col("obj")).alias("_pe"),
+        _transe_energy(F.col("cand"), dims, scale).alias("_ce"),
+        _transe_energy(F.col("obj"), dims, scale).alias("_pe"),
     )
     beats = F.when(
         (F.col("cand") != F.col("obj"))
@@ -844,19 +831,7 @@ def linearize_triples(
     cap upstream if a subject fans out pathologically). The sort happens
     per-row inside ``sort_array`` after aggregation — no global or
     per-key shuffle sort."""
-    d = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-        .distinct()
-    )
+    d = _distinct_facts(triples, subj, pred, obj)
     return (
         d.groupBy("subj")
         .agg(F.sort_array(F.collect_set(F.struct("pred", "obj"))).alias("ps"))

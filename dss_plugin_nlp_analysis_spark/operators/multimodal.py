@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dss_plugin_nlp_analysis_spark.functions import imagecodec
+from dss_plugin_nlp_analysis_spark.operators.dedup import _bucket_pairs
 
 __all__ = [
     "fake_image_binary", "decode_image_meta", "resize_images",
@@ -444,7 +445,7 @@ def image_dhash(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     left-vs-right luma comparison (bit ``y*8+x`` set iff
     ``luma[y][x] > luma[y][x+1]``). Identical images — and re-encodes /
     mild recompressions of them — collide; group by ``dhash`` for exact
-    perceptual dedup, or band the 64 bits (the simhash_buckets pattern)
+    perceptual dedup, or band the 64 bits (``dhash_candidate_pairs``)
     for Hamming-tolerant candidates.
 
     Every stage is deterministic integer arithmetic over the decoded
@@ -500,18 +501,20 @@ def dhash_candidate_pairs(
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Hamming-tolerant image near-dup candidates from dHash values —
-    the LSH step after ``image_dhash``, same banding logic as
-    ``simhash_buckets``: the 64-bit hash splits into ``bands`` equal bit
-    slices; images agreeing on ANY whole slice become a candidate pair
-    (with 4 bands, any pair within Hamming distance 3 is guaranteed
-    caught; verify candidates downstream if exactness matters).
+    the LSH step after ``image_dhash``: the 64-bit hash splits into
+    ``bands`` equal bit slices; images agreeing on ANY whole slice become
+    a candidate pair (with 4 bands, any pair within Hamming distance 3 is
+    guaranteed caught; verify candidates downstream if exactness
+    matters).
 
-    Band keys are ``(shift >> 16·b) & mask`` — the mask makes arithmetic
-    and logical shifts agree even though the packed hash is signed, so
-    the keys are engine-portable. ``max_bucket_size`` drops degenerate
-    buckets (solid-color web graphics all hash to 0) before the
-    quadratic pair step — the minhash guard. Returns ``(id_a, id_b)``
-    with ``id_a < id_b``, distinct.
+    Band keys are ``b|(dhash >> width·b) & mask`` — the mask makes
+    arithmetic and logical shifts agree even though the packed hash is
+    signed, so the keys are engine-portable. The keys then go through
+    the MinHash operators' bucket step (``dedup._bucket_pairs``): one
+    groupBy(band_key), ``max_bucket_size`` dropping degenerate buckets
+    (solid-color web graphics all hash to 0; a bucket's size counts its
+    hash rows) before the quadratic pair step. Returns ``(id_a, id_b)``
+    with ``id_a < id_b``, distinct; equal and NULL ids never pair.
     """
     if bands < 1 or 64 % bands != 0:
         raise ValueError(f"bands must divide 64, got {bands}")
@@ -534,21 +537,7 @@ def dhash_candidate_pairs(
             )
         ).alias("band_key"),
     )
-    counts = banded.groupBy("band_key").agg(F.count("*").alias("_n"))
-    small = banded.join(
-        counts.where(F.col("_n") <= max_bucket_size).select("band_key"),
-        "band_key",
-    )
-    a, b = small.alias("a"), small.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return _bucket_pairs(banded, max_bucket_size)
 
 
 AUDIO_FP_SCHEMA = "id long, n_samples long, fingerprint long"

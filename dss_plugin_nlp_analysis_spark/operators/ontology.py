@@ -193,7 +193,6 @@ def compile_ontology(
     languages: list[str],
     options: TagOptions,
     has_category: bool,
-    lemma_lookup_dir: str | None = None,
 ) -> CompiledOntology:
     """Compile cleaned ontology rows ``(tag, keyword, category)`` into a
     broadcastable match spec for each document language."""
@@ -205,7 +204,7 @@ def compile_ontology(
         )
     payloads = [(tag, category) for tag, _kw, category in rows]
     tables = {
-        lang: (lemma_table(lang, lemma_lookup_dir) if options.lemmatization else {})
+        lang: (lemma_table(lang) if options.lemmatization else {})
         for lang in languages
     }
     # keyword_match_tokens once per DISTINCT keyword (normalization is

@@ -362,7 +362,6 @@ def tag_documents(
     options: TagOptions = TagOptions(),
     languages: list[str] | None = None,
     skip_unknown: bool = False,
-    lemma_lookup_dir: str | None = None,
 ) -> DataFrame:
     """Full reference-recipe equivalent (recipe.py:1-42 semantics).
 
@@ -376,9 +375,7 @@ def tag_documents(
         lang_col, language, languages, skip_unknown,
     )
     has_category = category_col is not None
-    compiled = compile_ontology(
-        rows, languages, options, has_category, lemma_lookup_dir
-    )
+    compiled = compile_ontology(rows, languages, options, has_category)
 
     string, strings = T.StringType(), T.ArrayType(T.StringType())
     comments = {}
@@ -415,8 +412,8 @@ def tag_documents(
     # explode_outer for per-match rows, to_json of the per-doc arrays —
     # with no interpreted higher-order function and no shuffle
     finals = unique_names(base_names, docs_df.columns)
-    # the kernel's temporary column; Spark resolves names case-insensitively
-    (tmp,) = unique_names(["_tagged"], [c.lower() for c in docs_df.columns + finals])
+    # the kernel's temporary column
+    (tmp,) = unique_names(["_tagged"], docs_df.columns + finals)
     schema = T.StructType([T.StructField(n, t) for n, t in zip(finals, types)])
     per_match = output_format == "one_row_per_match"
     ref = docs_df.sparkSession.sparkContext.broadcast(compiled)

@@ -349,3 +349,51 @@ def test_remove_duplicated_spans_surgery(spark):
     assert got[2] == ("z z p", 4)
     assert got[3] == ("untouched words stay whole", 0)
     assert len(got) == 3
+
+
+def test_minhash_seeds_past_the_eighth_use_their_own_digest(spark):
+    # one md5 holds eight 4-hex-char windows: seeds 8+ once read past its
+    # end, keyed every later band by its band number alone and paired
+    # every document with every other one
+    docs = spark.createDataFrame(
+        [(i, f"w{i} x{i} y{i} z{i}") for i in range(10)], "id long, t string"
+    )
+    assert minhash_candidate_pairs(docs, "id", "t", 16, 4).count() == 0
+    assert minhash_candidate_pairs(docs, "id", "t", 12, 3).count() == 0
+
+
+@pytest.mark.parametrize("num_hashes, bands", [(8, 0), (8, 16), (12, 5), (8, 3)])
+def test_minhash_bands_must_divide_num_hashes(corpus, num_hashes, bands):
+    from dss_plugin_nlp_analysis_spark.operators.dedup import (
+        incremental_minhash_pairs,
+    )
+
+    with pytest.raises(ValueError, match="bands"):
+        minhash_candidate_pairs(corpus, "id", "t", num_hashes, bands)
+    with pytest.raises(ValueError, match="bands"):
+        incremental_minhash_pairs(corpus, corpus, "id", "t", num_hashes, bands)
+
+
+def test_lsh_null_id_counts_toward_the_cap_and_never_pairs(spark):
+    # a bucket's size is its number of member rows, a NULL id included,
+    # for all three LSH operators; a NULL id is never paired
+    from dss_plugin_nlp_analysis_spark.operators.dedup import (
+        incremental_minhash_pairs,
+    )
+    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
+        dhash_candidate_pairs,
+    )
+
+    text = "same text here now"
+    docs = spark.createDataFrame([(1, text), (2, text), (None, text)], "id long, t string")
+    base = spark.createDataFrame([(1, text), (None, text)], "id long, t string")
+    delta = spark.createDataFrame([(2, text), (None, text)], "id long, t string")
+    hashes = spark.createDataFrame([(1, 5), (2, 5), (None, 5)], "id long, dhash long")
+    runs = [
+        lambda cap: minhash_candidate_pairs(docs, "id", "t", max_bucket_size=cap),
+        lambda cap: incremental_minhash_pairs(base, delta, "id", "t", max_bucket_size=cap),
+        lambda cap: dhash_candidate_pairs(hashes, max_bucket_size=cap),
+    ]
+    for run in runs:
+        assert [tuple(r) for r in run(3).collect()] == [(1, 2)]
+        assert run(2).count() == 0

@@ -97,7 +97,7 @@ def test_compile_patterns_equal_per_row_match_tokens(options):
     langs = ["en", "fr", "zh"]
     compiled = compile_ontology(rows, langs, options, False)
     for lang in langs:
-        table = lemma_table(lang, None) if options.lemmatization else {}
+        table = lemma_table(lang) if options.lemmatization else {}
         assert compiled.patterns[lang] == [
             keyword_match_tokens(kw, lang, options, table) for _t, kw, _c in rows
         ]

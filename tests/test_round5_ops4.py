@@ -738,27 +738,50 @@ def test_incremental_minhash_equals_full_run_delta_slice(spark):
         [(i, f"alpha beta gamma delta epsilon zeta doc{i % 3}") for i in range(6)],
         "id long, t string",
     )
-    delta = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta doc0"),
-         (1, "totally different words entirely here now")],  # re-crawl of id 1
-        "id long, t string",
-    )
-    # reference: full run over (base minus updated ids) union delta,
-    # keep only pairs touching a delta id
-    merged = base.where("id != 1").unionByName(delta)
-    full = {
-        (r.id_a, r.id_b)
-        for r in minhash_candidate_pairs(merged, "id", "t").collect()
+    deltas = {
+        "recrawl": [
+            (100, "alpha beta gamma delta epsilon zeta doc0"),
+            (1, "totally different words entirely here now"),  # re-crawl of id 1
+        ],
+        # every delta id is also a base id: two re-crawled in place, one
+        # moved into another cluster
+        "overlap": [
+            (0, "alpha beta gamma delta epsilon zeta doc0"),
+            (2, "alpha beta gamma delta epsilon zeta doc1"),
+            (4, "another text for the fourth document"),
+        ],
     }
-    want = {p for p in full if p[0] in (1, 100) or p[1] in (1, 100)}
-    got = {
-        (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(base, delta, "id", "t").collect()
-    }
-    assert got == want
-    # the re-crawled id 1 must be paired by its NEW content (none — it
-    # changed away from the cluster), not its old text
-    assert not any(1 in p for p in got)
+    for name, rows in deltas.items():
+        delta = spark.createDataFrame(rows, "id long, t string")
+        ids = {r[0] for r in rows}
+        # reference: full run over (base minus updated ids) union delta,
+        # keep only pairs touching a delta id. The doc0 bucket holds
+        # exactly 3 members ({0, 3, 100} / {0, 3}), so cap 3 keeps it
+        # and cap 2 drops it in the first case and keeps it in the second
+        merged = base.where(~F.col("id").isin(*ids)).unionByName(delta)
+        for cap in (1000, 3, 2):
+            full = {
+                (r.id_a, r.id_b)
+                for r in minhash_candidate_pairs(
+                    merged, "id", "t", max_bucket_size=cap
+                ).collect()
+            }
+            want = {p for p in full if p[0] in ids or p[1] in ids}
+            got = {
+                (r.id_a, r.id_b)
+                for r in incremental_minhash_pairs(
+                    base, delta, "id", "t", max_bucket_size=cap
+                ).collect()
+            }
+            assert got == want, (name, cap)
+            if name == "recrawl":
+                # the re-crawled id 1 must be paired by its NEW content
+                # (none — it changed away from the cluster), not its old text
+                assert not any(1 in p for p in got)
+                assert ((0, 100) in got) == (cap >= 3), cap
+            else:
+                assert ((0, 3) in got) and ((1, 2) in got), (cap, got)
+                assert not any(4 in p for p in got)
 
 
 # --------------------------------- weighted_pagerank / decayed_fact_scores
@@ -1075,6 +1098,27 @@ def test_dhash_pairs_hamming_band_guarantee(spark):
 
     with _pytest.raises(ValueError, match="bands"):
         dhash_candidate_pairs(df, bands=5)
+
+
+def test_dhash_pairs_duplicate_ids(spark):
+    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
+        dhash_candidate_pairs,
+    )
+
+    # an id may carry several hashes; a bucket's size counts hash rows,
+    # and an id never pairs with itself
+    df = spark.createDataFrame(
+        [(1, 0), (1, 0), (2, 0), (2, 7), (3, 7), (3, 1 << 40), (4, 1 << 40),
+         (5, -1), (5, -1), (6, -2), (7, (1 << 16) - 1)],
+        "id long, dhash long",
+    )
+    out = sorted(tuple(r) for r in dhash_candidate_pairs(df).collect())
+    assert out == [(1, 2), (1, 3), (1, 4), (1, 7), (2, 3), (2, 4), (2, 7),
+                   (3, 4), (3, 7), (4, 7), (5, 6), (5, 7)]
+    out = sorted(
+        tuple(r) for r in dhash_candidate_pairs(df, max_bucket_size=3).collect()
+    )
+    assert out == [(2, 3), (3, 4), (5, 6), (5, 7)]
 
 
 def test_dhash_pairs_negative_hash_band_keys(spark):

@@ -1,8 +1,8 @@
 """Round-6 plan-shape pins: the shuffle-removal restructures stay removed.
 
-- minhash_candidate_pairs: single pipeline execution — no self-join, no
-  count+join bucket capping (the old shape executed the shingle→signature
-  pipeline four times).
+- minhash_candidate_pairs, incremental_minhash_pairs, dhash_candidate_pairs:
+  one bucket step — no self-join, no count+join bucket capping (the old
+  shape executed the shingle→signature pipeline four times).
 - line_dedup: no join back to the exploded lines (the min-struct aggregate
   IS the survivor set); only the final per-id reassembly join remains.
 - _brute_rank_topk: norms/casts are per-row projections below the join —
@@ -29,6 +29,38 @@ def test_minhash_pairs_no_selfjoin_single_pipeline(spark):
     assert "Join" not in plan, plan
     # one signature pipeline: the shingle regex appears exactly once
     assert plan.count("regexp_extract_all") == 1, plan
+
+
+def test_incremental_minhash_pairs_single_pipeline(spark):
+    from dss_plugin_nlp_analysis_spark.operators.dedup import (
+        incremental_minhash_pairs,
+    )
+
+    base = spark.createDataFrame(
+        [(i, f"w{i % 7} common text body {i % 3}") for i in range(40)],
+        "id long, t string",
+    )
+    delta = spark.createDataFrame(
+        [(i, f"w{i % 5} common text body {i % 2}") for i in range(30, 50)],
+        "id long, t string",
+    )
+    plan = plan_of(incremental_minhash_pairs(base, delta, "id", "t"))
+    # base ∪ delta runs the signature pipeline once, and the only join is
+    # the anti join dropping the base rows the delta replaces
+    assert plan.count("regexp_extract_all") == 1, plan
+    assert plan.count("Join") == 1 and "LeftAnti" in plan, plan
+
+
+def test_dhash_pairs_no_join(spark):
+    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
+        dhash_candidate_pairs,
+    )
+
+    hashes = spark.createDataFrame(
+        [(i, (i % 5) << 20) for i in range(40)], "id long, dhash long"
+    )
+    plan = plan_of(dhash_candidate_pairs(hashes))
+    assert "Join" not in plan, plan
 
 
 def test_line_dedup_single_reassembly_join(spark):

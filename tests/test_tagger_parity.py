@@ -246,18 +246,34 @@ def test_column_collision_suffix(spark):
     assert out.columns[:3] == ["doc_id", "text", "tag_1"]
 
 
-@pytest.mark.parametrize("name", ["_tagged", "_TAGGED"])  # Spark names ignore case
+# Spark resolves names case-insensitively: an input `_TAGGED` against the
+# temporary column, `TAG` against the output `tag`, and the categories
+# `Place`/`place` against each other (`tag_list_Place`, `tag_list_place`)
+@pytest.mark.parametrize(
+    "name, categories",
+    [("_tagged", None), ("_TAGGED", None), ("TAG", None), ("_tagged", ["Place", "place"])],
+    ids=["_tagged", "_TAGGED", "TAG", "Place-place"],
+)
 @pytest.mark.parametrize("fmt", ["one_row_per_match", "one_row_per_doc", "one_row_per_doc_json"])
-def test_input_column_named_like_the_temporary_column_survives(spark, fmt, name):
+def test_input_column_named_like_the_temporary_column_survives(spark, fmt, name, categories):
     docs = spark.createDataFrame(
-        [(0, "the keyword", "en", "kept"), (1, "nothing", "en", None)],
+        [(0, "the keyword and another", "en", "kept"), (1, "nothing", "en", None)],
         f"doc_id long, text string, lang string, {name} string",
     )
-    onto = make_ontology(spark, [("t", "keyword")])
-    out = tag_documents(docs, onto, output_format=fmt)
+    if categories:
+        onto = make_ontology(
+            spark, [("t", "keyword", categories[0]), ("u", "another", categories[1])], True
+        )
+    else:
+        onto = make_ontology(spark, [("t", "keyword")])
+    out = tag_documents(
+        docs, onto, output_format=fmt, category_col="category" if categories else None
+    )
     assert out.columns.count(name) == 1
-    got = {r["doc_id"]: r[name] for r in out.collect()}
-    assert got == {0: "kept", 1: None}
+    assert len({c.lower() for c in out.columns}) == len(out.columns), out.columns
+    rows = out.collect()
+    assert {r["doc_id"]: r[name] for r in rows} == {0: "kept", 1: None}
+    assert sum(v is not None for r in rows for v in r[4:]) > 0
 
 
 def test_multilingual_dispatch(spark):
