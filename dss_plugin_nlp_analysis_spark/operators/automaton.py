@@ -20,8 +20,12 @@ winning row of each sequence unless entity linking scores them all.
 
 Scale notes: tokens absent from every pattern get no vocab id and reset the
 probe state to root in O(1), so the common case (miss) is a single dict
-lookup per token. The automaton is built per executor process from the
-broadcast pattern list and memoized (``CompiledOntology.automaton_for``).
+lookup per token. The automaton is built per Python worker from the
+broadcast pattern list and memoized on that worker's copy of the broadcast
+(``CompiledOntology.automaton_for``). ``ontology.broadcast_ontology``
+reuses one broadcast per SparkContext for identical ontology content, so
+repeat builds and the bucket groups of a checkpointed build find the
+automata already built in every reused worker.
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.textnorm import normalize_text
-from .ontology import TagOptions, collect_ontology, compile_ontology
+from .ontology import TagOptions, broadcast_ontology, collect_ontology
 from .tagger import doc_udf
 
 __all__ = [
@@ -165,18 +165,26 @@ def build_triples(
     A streaming ``docs_df`` runs the same plan per micro-batch; it needs
     ``languages`` (or ``lang_col=None``), since the distinct-language
     pre-scan cannot run on a stream.
+
+    The ontology is collected on every call, but compiled, canonicalized
+    and broadcast once per SparkContext for each distinct content
+    (``ontology.broadcast_ontology``): the bucket groups of one
+    checkpointed build, and repeat builds in a session, share one
+    broadcast, so Python workers reuse the automata they built for it.
     """
     rows, languages = collect_ontology(
         ontology_df, docs_df, tag_col, keyword_col, category_col,
         lang_col, language, languages, skip_unknown,
     )
-    compiled = compile_ontology(rows, languages, options, category_col is not None)
+    ref = broadcast_ontology(
+        docs_df.sparkSession.sparkContext, rows, languages, options,
+        category_col is not None, state_key=("canonical_map", canonicalize),
+        state=lambda: (canonical_map(rows) if canonicalize else {},),
+    )
 
     if repartition_by_url:
         docs_df = docs_df.repartition(repartition_by_url, F.xxhash64(F.col(url_col)))
 
-    cmap = canonical_map(rows) if canonicalize else {}
-    ref = docs_df.sparkSession.sparkContext.broadcast((compiled, cmap))
     udf = doc_udf(ref, _TRIPLE_ROWS_SCHEMA, _triple_rows, language, skip_unknown)
     lang_expr = F.col(lang_col) if lang_col else F.lit(language)
     out = docs_df.select(

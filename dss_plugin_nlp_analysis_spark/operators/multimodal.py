@@ -514,13 +514,15 @@ def dhash_candidate_pairs(
     groupBy(band_key), ``max_bucket_size`` dropping degenerate buckets
     (solid-color web graphics all hash to 0; a bucket's size counts its
     hash rows) before the quadratic pair step. Returns ``(id_a, id_b)``
-    with ``id_a < id_b``, distinct; equal and NULL ids never pair.
+    with ``id_a < id_b``, distinct; equal and NULL ids never pair. A row
+    with a NULL ``dhash`` has no band keys: it neither pairs nor counts
+    toward ``max_bucket_size``.
     """
     if bands < 1 or 64 % bands != 0:
         raise ValueError(f"bands must divide 64, got {bands}")
     width = 64 // bands
     mask = (1 << width) - 1
-    banded = hashes.select(
+    banded = hashes.where(F.col(dhash_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.explode(
             F.array(

@@ -11,12 +11,19 @@ The ontology is broadcast-sized by design (SURVEY.md §1.4): cleaning runs
 as native Catalyst ops; ``collect_ontology`` brings the cleaned rows to the
 driver as one Arrow table (no per-row pickling), and compilation builds
 per-language token patterns to ship via ``sc.broadcast``.
+``broadcast_ontology`` compiles and broadcasts once per SparkContext for
+each distinct content, so repeat builds reuse the broadcast.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from collections.abc import Callable, Hashable
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +40,7 @@ __all__ = [
     "collect_ontology",
     "document_languages",
     "compile_ontology",
+    "broadcast_ontology",
     "align_ontologies",
     "keyword_match_tokens",
 ]
@@ -123,7 +131,11 @@ class CompiledOntology:
     order carries the dup-keyword tie rules, SEMANTICS.md §5).
     ``patterns[lang][i]`` is row i's match-key token tuple for ``lang``.
     Pickling ships only these lists; ``automaton_for`` builds each
-    language's automaton on first use in a process and memoizes it.
+    language's automaton on first use in a process and memoizes it on the
+    unpickled object. A Python worker keeps that object for as long as it
+    keeps the broadcast, and ``broadcast_ontology`` hands repeat builds of
+    the same content the same broadcast, so their tasks find the automata
+    already built.
     """
 
     payloads: list[tuple[str, str | None]]
@@ -236,6 +248,59 @@ def compile_ontology(
         has_category=has_category,
         profiles=profiles,
     )
+
+
+# the live SparkContext's ontology broadcasts by content key, least
+# recently used first; an evicted broadcast is only forgotten, never
+# destroyed, since a lazy DataFrame may still reference it
+_BROADCASTS: OrderedDict = OrderedDict()
+_BROADCASTS_MAX = 4
+_BROADCASTS_LOCK = threading.Lock()
+
+
+def broadcast_ontology(
+    sc: SparkContext,
+    rows: list[tuple[str, str, str | None]],
+    languages: list[str],
+    options: TagOptions,
+    has_category: bool,
+    state_key: Hashable = None,
+    state: Callable[[], tuple] | None = None,
+) -> Broadcast:
+    """The Broadcast of ``compile_ontology(rows, languages, options,
+    has_category)`` — or of ``(compiled, *state())`` when ``state`` builds
+    extra emitter state (see ``tagger.doc_udf``) — memoized per live
+    SparkContext by the content it is built from.
+
+    The key holds every input of the payload: the rows in order (order
+    carries the tie rules), the languages, the options, ``has_category``,
+    the lemma tables the compile would read (``KG_LEMMA_LOOKUP_DIR`` may
+    change between calls) and ``state_key``, which must name whatever
+    ``state`` reads besides ``rows``. On a hit neither the compile nor
+    ``state`` nor ``sc.broadcast`` runs; the broadcast id stays the same,
+    so each reused Python worker keeps its unpickled ontology and the
+    automata ``CompiledOntology.automaton_for`` built on it. Entries of a
+    stopped or replaced context are dropped, never returned.
+    """
+    lemmas = tuple(
+        frozenset(lemma_table(lang).items()) for lang in languages
+    ) if options.lemmatization else ()
+    key = (tuple(rows), tuple(languages), options, has_category, lemmas,
+           state is None, state_key)
+    with _BROADCASTS_LOCK:
+        for k in [k for k, (owner, _b) in _BROADCASTS.items()
+                  if owner is not sc or owner._jsc is None]:
+            del _BROADCASTS[k]
+        hit = _BROADCASTS.get(key)
+        if hit is not None:
+            _BROADCASTS.move_to_end(key)
+            return hit[1]
+        compiled = compile_ontology(rows, languages, options, has_category)
+        ref = sc.broadcast(compiled if state is None else (compiled, *state()))
+        _BROADCASTS[key] = (sc, ref)
+        while len(_BROADCASTS) > _BROADCASTS_MAX:
+            _BROADCASTS.popitem(last=False)
+        return ref
 
 
 def align_ontologies(

@@ -45,7 +45,7 @@ from ..functions.sentencizer import sentence_token_spans
 from ..functions.textnorm import clean_linebreaks, normalize_text
 from ..functions.tokenizer import tokenize_raw
 from .automaton import filter_leftmost_longest
-from .ontology import CompiledOntology, TagOptions, collect_ontology, compile_ontology
+from .ontology import CompiledOntology, TagOptions, broadcast_ontology, collect_ontology
 
 __all__ = [
     "OUTPUT_FORMATS",
@@ -367,6 +367,10 @@ def tag_documents(
 
     ``languages``: pass explicitly at scale to avoid the distinct-languages
     pre-scan (the reference derives it from the data, recipe.py:14-18).
+    The ontology is collected on every call but compiled and broadcast
+    once per SparkContext for each distinct content
+    (``ontology.broadcast_ontology``), so a repeat call reuses the
+    broadcast and the automata Python workers built for it.
     """
     if output_format not in OUTPUT_FORMATS:
         raise ValueError(f"unknown output_format '{output_format}'")
@@ -375,7 +379,9 @@ def tag_documents(
         lang_col, language, languages, skip_unknown,
     )
     has_category = category_col is not None
-    compiled = compile_ontology(rows, languages, options, has_category)
+    ref = broadcast_ontology(
+        docs_df.sparkSession.sparkContext, rows, languages, options, has_category
+    )
 
     string, strings = T.StringType(), T.ArrayType(T.StringType())
     comments = {}
@@ -386,7 +392,7 @@ def tag_documents(
         types = [string] * len(base_names)
         emit = _match_rows_cat if has_category else _match_rows
     elif output_format == "one_row_per_doc" and has_category:
-        categories = list(dict.fromkeys(c for _t, c in compiled.payloads))
+        categories = list(dict.fromkeys(c for _t, _kw, c in rows))
         # NFD-normalized category in the column name (the reference calls
         # unicode_normalize_text with its default form —
         # formatter_by_document.py:198-205); two raw categories can
@@ -416,7 +422,6 @@ def tag_documents(
     (tmp,) = unique_names(["_tagged"], docs_df.columns + finals)
     schema = T.StructType([T.StructField(n, t) for n, t in zip(finals, types)])
     per_match = output_format == "one_row_per_match"
-    ref = docs_df.sparkSession.sparkContext.broadcast(compiled)
     udf = doc_udf(ref, T.ArrayType(schema) if per_match else schema, emit,
                   language, skip_unknown)
     tagged = udf(F.col(text_col), F.col(lang_col) if lang_col else F.lit(language))

@@ -652,3 +652,83 @@ def test_ntriples_escaping_and_null_exclusion(spark):
         obj_namespace="http://ex.org/node/",
     ).collect()[0]["line"]
     assert iri == '<s> <http://example.org/pred/p> <http://ex.org/node/node%201> .'
+
+
+def test_checkpointed_build_compiles_and_broadcasts_once(spark, tmp_path, ontology_calls):
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    docs = pages_df(spark, 100, seed=42)
+    onto = demo_kg_ontology(spark)
+    langs = ["en", "fr", "es", "de"]
+    groups = []
+
+    def triple_fn(part):
+        groups.append(part)
+        return build_triples(part, onto, languages=langs)
+
+    out = str(tmp_path / "out")
+    r = run_checkpointed_build(
+        spark, docs, triple_fn, out, str(tmp_path / "ckpt"), num_buckets=4, buckets_per_job=2
+    )
+    assert len(groups) == 2 and sorted(r.processed_buckets) == [0, 1, 2, 3]
+    assert ontology_calls == {"compile": 1, "canonical_map": 1, "broadcast": 1}
+    # a second build in the session: no compile, canonical map or broadcast
+    direct = build_triples(docs, demo_kg_ontology(spark), languages=langs)
+    cols = direct.columns
+    want = sorted(tuple(r) for r in direct.collect())
+    assert ontology_calls == {"compile": 1, "canonical_map": 1, "broadcast": 1}
+    got = sorted(tuple(r) for r in spark.read.parquet(out).select(*cols).collect())
+    assert got == want and len(got) == r.total_triples > 0
+
+
+_NEW_SESSION_SCRIPT = """
+import sys
+from pyspark.sql import SparkSession
+from dss_plugin_nlp_analysis_spark.operators import ontology
+from dss_plugin_nlp_analysis_spark.operators.kg import build_triples
+from dss_plugin_nlp_analysis_spark.sources.webpages import demo_kg_ontology, pages_df
+
+compiles = []
+compile_ontology = ontology.compile_ontology
+ontology.compile_ontology = lambda *a: compiles.append(1) or compile_ontology(*a)
+
+
+def triples():
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "1").getOrCreate())
+    out = build_triples(pages_df(spark, 60, seed=7), demo_kg_ontology(spark))
+    return spark, sorted(map(tuple, out.collect()))
+
+
+spark, first = triples()
+[(old_sc, old_ref)] = ontology._BROADCASTS.values()
+spark.stop()
+spark, second = triples()
+[(sc, ref)] = ontology._BROADCASTS.values()
+assert sc is spark.sparkContext and sc is not old_sc, "memo kept the old context"
+assert ref is not old_ref, "new context received the old broadcast"
+assert len(compiles) == 2, compiles
+assert second == first and first, "triples differ across sessions"
+spark.stop()
+print("ok")
+"""
+
+
+def test_new_session_never_receives_the_old_broadcast(tmp_path):
+    # stopping the shared test session would break every later test, so
+    # the stop/restart runs in its own process
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (str(root), os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NEW_SESSION_SCRIPT], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().endswith("ok")

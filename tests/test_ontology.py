@@ -1,7 +1,9 @@
 """Driver-side ontology preparation: the Arrow collect of the cleaned
 ontology (row order carries the dup-keyword tie rules, SEMANTICS.md §5),
-the once-per-distinct-keyword pattern compile, and the tie rules applied
-when the automaton is built."""
+the once-per-distinct-keyword pattern compile, the tie rules applied
+when the automaton is built, and the per-session broadcast memo."""
+
+import json
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -134,3 +136,141 @@ def test_automaton_resolves_duplicate_keyword_ties(has_category, link_entities):
             (tags[0], "engine"), (tags[1], "new york")
         ]
         assert all(set(m) == {"sent_idx", "tag", "category", "keyword"} for m in matches)
+
+
+# --- the per-session broadcast memo (broadcast_ontology) -------------------
+
+# "bank" under two tags (its winner follows row order), a case-sensitive
+# keyword, a keyword whose lemma matches a doc token, and a zh keyword
+_MEMO_ROWS = [
+    ("river_bank", "bank", "geo"),
+    ("money_bank", "bank", "finance"),
+    ("nyc", "New York", "place"),
+    ("runner", "ran", "sport"),
+    ("zh_bank", "银行", "finance"),
+]
+_MEMO_DOCS = [
+    ("u1", "the bank by the river", "en"),
+    ("u2", "I was running in new york", "en"),
+    ("u3", "New York bank", "fr"),
+    ("u4", "银行", "zh"),
+]
+_BASE = {"options": TagOptions(), "languages": ["en", "fr", "zh"], "category_col": "category"}
+
+
+def _memo_triples(spark, rows=_MEMO_ROWS, **kwargs):
+    from dss_plugin_nlp_analysis_spark.operators.kg import build_triples
+
+    onto = spark.createDataFrame(rows, "tag string, keyword string, category string")
+    docs = spark.createDataFrame(_MEMO_DOCS, "url string, text string, lang string")
+    out = build_triples(docs, onto, ts_col=None, **{**_BASE, **kwargs})
+    return sorted(tuple(r) for r in out.collect())
+
+
+def _swapped(rows, i, j):
+    rows = list(rows)
+    rows[i], rows[j] = rows[j], rows[i]
+    return rows
+
+
+@pytest.mark.parametrize(
+    "base, variant",
+    [
+        ({}, {"rows": [r if r[0] != "nyc" else ("new_york_city",) + r[1:] for r in _MEMO_ROWS]}),
+        ({}, {"rows": _swapped(_MEMO_ROWS, 0, 1)}),  # the tie winner changes
+        ({}, {"options": TagOptions(ignore_case=True)}),
+        ({}, {"languages": ["en", "fr"]}),
+        ({}, {"category_col": None}),
+        ({}, {"canonicalize": False}),
+        ({"options": TagOptions(lemmatization=True)},
+         {"options": TagOptions(lemmatization=True), "lemma_dir": {"ran": "ran"}}),
+    ],
+    ids=["tag", "tie_order", "options", "languages", "category", "canonicalize",
+         "lemma_lookup_dir"],
+)
+def test_broadcast_memo_misses_on_any_content_change(
+    spark, ontology_calls, monkeypatch, tmp_path, base, variant
+):
+    from collections import OrderedDict
+
+    from dss_plugin_nlp_analysis_spark.operators import ontology
+
+    variant = dict(variant)
+    lemma_dir = variant.pop("lemma_dir", None)
+    before = _memo_triples(spark, **base)
+    assert _memo_triples(spark, **base) == before
+    assert ontology_calls["compile"] == ontology_calls["broadcast"] == 1
+    if lemma_dir is not None:
+        (tmp_path / "en_lemma_lookup.json").write_text(json.dumps(lemma_dir))
+        monkeypatch.setenv("KG_LEMMA_LOOKUP_DIR", str(tmp_path))
+    after = _memo_triples(spark, **variant)
+    assert ontology_calls["compile"] == ontology_calls["broadcast"] == 2
+    assert after != before
+    # a cold memo (what a fresh session starts with) gives the same triples
+    monkeypatch.setattr(ontology, "_BROADCASTS", OrderedDict())
+    assert _memo_triples(spark, **variant) == after
+    assert ontology_calls["compile"] == 3
+
+
+def test_repeat_tag_documents_reuses_the_broadcast(spark, ontology_calls, ontology_dir, docs):
+    first = tag_documents(docs, spark.read.parquet(ontology_dir), languages=["en", "fr"])
+    first = sorted(map(tuple, first.collect()))
+    # a new DataFrame over the same content is a hit
+    again = tag_documents(docs, spark.read.parquet(ontology_dir), languages=["en", "fr"])
+    assert sorted(map(tuple, again.collect())) == first
+    assert ontology_calls["compile"] == ontology_calls["broadcast"] == 1
+    # the same ontology with categories is other content
+    tag_documents(docs, spark.read.parquet(ontology_dir), category_col="category",
+                  languages=["en", "fr"]).collect()
+    assert ontology_calls["compile"] == 2
+
+
+def test_broadcast_memo_is_bounded(spark, ontology_calls):
+    from dss_plugin_nlp_analysis_spark.operators import ontology
+
+    sc = spark.sparkContext
+    refs = [
+        ontology.broadcast_ontology(sc, [(f"t{i}", "kw", None)], ["en"], TagOptions(), False)
+        for i in range(ontology._BROADCASTS_MAX + 1)
+    ]
+    assert len(ontology._BROADCASTS) == ontology._BROADCASTS_MAX
+    # the newest entries hit; the oldest was evicted and compiles again
+    last = ontology.broadcast_ontology(sc, [(f"t{len(refs) - 1}", "kw", None)], ["en"],
+                                       TagOptions(), False)
+    assert last is refs[-1]
+    assert ontology_calls["compile"] == len(refs)
+    first = ontology.broadcast_ontology(sc, [("t0", "kw", None)], ["en"], TagOptions(), False)
+    assert first is not refs[0]
+    assert first.value.payloads == refs[0].value.payloads
+    assert ontology_calls["compile"] == len(refs) + 1
+
+
+def test_broadcast_memo_concurrent_callers_share_one_broadcast(spark, ontology_calls):
+    import sys
+    import threading
+
+    from dss_plugin_nlp_analysis_spark.operators import ontology
+
+    sc = spark.sparkContext
+    refs, errors = [], []
+
+    def call():
+        try:
+            refs.append(ontology.broadcast_ontology(
+                sc, _MEMO_ROWS, ["en", "fr"], TagOptions(), True))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=call) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(refs) == 16 and all(r is refs[0] for r in refs)
+    assert ontology_calls["compile"] == ontology_calls["broadcast"] == 1

@@ -1121,6 +1121,17 @@ def test_dhash_pairs_duplicate_ids(spark):
     assert out == [(2, 3), (3, 4), (5, 6), (5, 7)]
 
 
+def test_dhash_pairs_null_hashes_never_pair(spark):
+    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
+        dhash_candidate_pairs,
+    )
+
+    # a NULL hash has no band keys, so NULL-hash rows never pair with
+    # each other (a NULL slice used to leave every band key as "b" alone)
+    df = spark.createDataFrame([(1, None), (2, None), (3, 0)], "id long, dhash long")
+    assert dhash_candidate_pairs(df).collect() == []
+
+
 def test_dhash_pairs_negative_hash_band_keys(spark):
     from dss_plugin_nlp_analysis_spark.operators.multimodal import (
         dhash_candidate_pairs,
