@@ -12,7 +12,7 @@ Divergence (documented): sentence text excludes trailing whitespace tokens.
 
 from __future__ import annotations
 
-from .tokenizer import Token, is_punct_token, tokenize_raw
+from .tokenizer import is_punct_token, tokenize_raw
 
 __all__ = ["DEFAULT_PUNCT_CHARS", "SENTENCE_PUNCT_CHARS", "split_sentences", "sentence_token_spans"]
 

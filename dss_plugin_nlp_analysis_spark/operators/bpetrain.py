@@ -144,37 +144,3 @@ def bpe_train(df: DataFrame, text_col: str, *, n_merges: int) -> DataFrame:
         merges, "merge_rank int, left string, right string, pair_count long"
     )
 
-
-def bpe_encode(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]],
-) -> DataFrame:
-    """Apply a learned merge list to a corpus: per doc, per word, replay
-    the merges IN LEARNING ORDER (BPE encode is order-sensitive), then
-    flatten. Returns (id, tokens array<string>, n_tokens). Pure
-    expressions — merges ship as plan literals, zero shuffle."""
-    toks = F.filter(word_tokens(F.col(text_col)), lambda x: x != "")
-    staged = df.select(F.col(id_col).alias("id"), toks.alias("_w"))
-    sym_of_word = "transform(sequence(1, length(x)), i -> substring(x, i, 1))"
-    enc = F.transform(F.col("_w"), lambda x: x)
-    # build per-word symbol arrays, then fold each merge over them
-    staged = staged.select(
-        "id",
-        F.expr(
-            f"transform(_w, x -> {sym_of_word})"
-        ).alias("_syms"),
-    )
-    col = F.col("_syms")
-    for l, r in merges:
-        col = F.transform(col, lambda s: _apply_merge(s, l, r))
-        # materialize between folds: HOF lambdas re-evaluate referenced
-        # subtrees per element (the chunk_docs/winnow O(n^2) lesson)
-        staged = staged.select("id", col.alias("_syms"))
-        col = F.col("_syms")
-    return staged.select(
-        "id",
-        F.flatten("_syms").alias("tokens"),
-        F.size(F.flatten("_syms")).cast("long").alias("n_tokens"),
-    )

@@ -130,11 +130,12 @@ class CompiledOntology:
     ``payloads[i] = (tag, category)`` for ontology row i (post-clean order —
     order carries the dup-keyword tie rules, SEMANTICS.md §5).
     ``patterns[lang][i]`` is row i's match-key token tuple for ``lang``.
-    Pickling ships only these lists; ``automaton_for`` builds each
-    language's automaton on first use in a process and memoizes it on the
-    unpickled object. A Python worker keeps that object for as long as it
-    keeps the broadcast, and ``broadcast_ontology`` hands repeat builds of
-    the same content the same broadcast, so their tasks find the automata
+    Pickling ships only these lists; ``automaton_for`` fills each
+    language's prefix trie (``TokenAutomaton``: one insert per pattern
+    token, no second pass) on first use in a process and memoizes it on
+    the unpickled object. A Python worker keeps that object for as long as
+    it keeps the broadcast, and ``broadcast_ontology`` hands repeat builds
+    of the same content the same broadcast, so their tasks find the tries
     already built.
     """
 
@@ -154,7 +155,7 @@ class CompiledOntology:
         return state
 
     def automaton_for(self, lang: str) -> TokenAutomaton:
-        """The automaton over ``patterns[lang]``, whose payloads are row
+        """The trie over ``patterns[lang]``, whose payloads are row
         indices. Without entity linking the duplicate-keyword tie rule is
         applied here, once: each distinct token tuple keeps one row — the
         first-added with categories (EntityRuler), the last-added without
@@ -169,7 +170,6 @@ class CompiledOntology:
             auto = TokenAutomaton()
             for toks, idx in rows:
                 auto.add(toks, idx)
-            auto.build()
             self._automata[lang] = auto
         return auto
 

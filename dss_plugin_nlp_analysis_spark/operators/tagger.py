@@ -2,7 +2,7 @@
 
 Physical plan (SURVEY.md §3, stage boundaries):
 
-    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → AC probe → emit]
+    scan → [Arrow UDF: clean → sentencize → normalize → tokenize → trie probe → emit]
          → codegen'd explode_outer / struct-field projection / to_json → sink
 
 ``doc_udf`` holds the only batch loop. It does ALL per-document text work
@@ -117,8 +117,8 @@ def process_document(
     Linebreak clean → tokenize once and split into sentences (one split
     and one sentence for a document that passes the plain-words screen) →
     per sentence: normalize (token reuse when normalization is identity) →
-    lemmatize → AC probe (all-overlaps, or leftmost-longest when categories
-    exist). Duplicate-keyword ties are resolved when the automaton is built
+    lemmatize → trie probe (all-overlaps, or leftmost-longest when categories
+    exist). Duplicate-keyword ties are resolved when the trie is filled
     (``CompiledOntology.automaton_for``); only entity linking scores
     several rows here. Each match is ``{sent_idx, tag, category,
     keyword}``, the keyword as it appears in the normalized sentence.
@@ -291,44 +291,36 @@ def _doc_json_builders():
     """Per-doc JSON assembly of ``one_row_per_doc_json`` — byte format
     mirrors the reference (ensure_ascii=False, ", " separators)."""
 
-    def build_no_cat(matches, sentences) -> str | None:
-        full: dict[str, dict] = {}
+    def slots(matches, sentences, by_category: bool) -> dict[str | None, dict]:
+        """``{category: {tag: slot}}`` in first-seen order; every category
+        is ``None`` without categories."""
+        full: dict[str | None, dict] = {}
         for mt in matches:
             tag, kw = mt["tag"], mt["keyword"]
             sent = sentences[mt["sent_idx"]]
-            slot = full.get(tag)
-            if slot is None:
-                full[tag] = {"count": 1, "sentences": [sent], "keywords": [kw]}
-            else:
-                slot["count"] += 1
-                if sent not in slot["sentences"]:
-                    slot["sentences"].append(sent)
-                if kw not in slot["keywords"]:
-                    slot["keywords"].append(kw)
-        return _slots_json(full) if full else None
-
-    def build_cat(matches, sentences) -> tuple[str | None, str | None]:
-        cats: dict[str, list] = {}
-        full: dict[str, dict] = {}
-        for mt in matches:
-            tag, kw, cat = mt["tag"], mt["keyword"], mt["category"]
-            sent = sentences[mt["sent_idx"]]
-            by_tag = full.setdefault(cat, {})
+            by_tag = full.setdefault(mt["category"] if by_category else None, {})
             slot = by_tag.get(tag)
             if slot is None:
                 by_tag[tag] = {"count": 1, "sentences": [sent], "keywords": [kw]}
-                cats.setdefault(cat, []).append(tag)
             else:
                 slot["count"] += 1
                 if sent not in slot["sentences"]:
                     slot["sentences"].append(sent)
                 if kw not in slot["keywords"]:
                     slot["keywords"].append(kw)
+        return full
+
+    def build_no_cat(matches, sentences) -> str | None:
+        full = slots(matches, sentences, False)
+        return _slots_json(full[None]) if full else None
+
+    def build_cat(matches, sentences) -> tuple[str | None, str | None]:
+        full = slots(matches, sentences, True)
         if not full:
             return None, None
         cats_parts = ", ".join(
-            f'{_esc_json(c)}: [{", ".join(map(_esc_json, tags))}]'
-            for c, tags in cats.items()
+            f'{_esc_json(c)}: [{", ".join(map(_esc_json, by_tag))}]'
+            for c, by_tag in full.items()
         )
         full_parts = ", ".join(
             f"{_esc_json(c)}: {_slots_json(by_tag)}" for c, by_tag in full.items()

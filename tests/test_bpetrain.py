@@ -1,11 +1,10 @@
 """BPE trainer: the classic low/lower/newest/widest corpus (Sennrich et
-al. 2016 running example), greedy-overlap semantics, tie-breaks, encode
-replay, early stop."""
+al. 2016 running example), greedy-overlap semantics, tie-breaks, early
+stop."""
 
 import pytest
 
 from dss_plugin_nlp_analysis_spark.operators.bpetrain import (
-    bpe_encode,
     bpe_train,
     word_counts,
 )
@@ -42,27 +41,6 @@ def test_greedy_leftmost_overlap(spark):
     m = bpe_train(df, "text", n_merges=2).collect()
     assert (m[0]["left"], m[0]["right"], m[0]["pair_count"]) == ("a", "a", 9)
     assert (m[1]["left"], m[1]["right"], m[1]["pair_count"]) == ("aa", "aa", 3)
-
-
-def test_encode_replays_merges_in_order(spark):
-    df = _fixture(spark)
-    merges = [
-        (r["left"], r["right"])
-        for r in bpe_train(df, "text", n_merges=4).collect()
-    ]
-    enc = {
-        r["id"]: (list(r["tokens"]), r["n_tokens"])
-        for r in bpe_encode(df, "id", "text", merges).collect()
-    }
-    assert enc[1] == (["low"] * 5, 5)
-    assert enc[2][0][:3] == ["low", "e", "r"]
-    assert enc[3][0][-3:] == ["a", "a", "a"]  # untouched word
-
-
-def test_encode_null_and_empty(spark):
-    df = spark.createDataFrame([(1, None), (2, ""), (3, "ab")], "id long, text string")
-    enc = {r["id"]: r["n_tokens"] for r in bpe_encode(df, "id", "text", [("a", "b")]).collect()}
-    assert enc == {1: 0, 2: 0, 3: 1}
 
 
 def test_early_stop_when_fully_merged(spark):

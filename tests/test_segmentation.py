@@ -126,7 +126,6 @@ def test_korean_keyword_matches_inside_inflected_eojeol():
 
     auto = TokenAutomaton()
     auto.add([t[0] for t in tokenize_raw("서울", "ko")], payload=0)
-    auto.build()
     doc_keys = [t[0] for t in tokenize_raw("우리는 서울에서 일해요", "ko")]
     hits = auto.find_all(doc_keys)
     assert len(hits) == 1
