@@ -38,8 +38,8 @@ SENTENCE_PUNCT_CHARS = frozenset(DEFAULT_PUNCT_CHARS) | {"\n"}
 
 def sentence_token_spans(tokens: list) -> list[tuple[int, int]]:
     """Return [start_token, end_token) spans of sentences, trailing
-    whitespace tokens trimmed from each span. Accepts Token or the plain
-    (text, start, end, is_space) tuples from ``tokenize_raw``."""
+    whitespace tokens trimmed from each span, over the
+    (text, start, end, is_space) tuples of ``tokenize_raw``."""
     if not tokens:
         return []
     starts = [0]

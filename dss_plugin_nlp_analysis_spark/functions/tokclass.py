@@ -13,7 +13,7 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .tokenizer import _is_emoji  # noqa: F401  (shared emoji ranges)
+from .tokenizer import _is_emoji
 
 __all__ = [
     "is_hashtag", "is_username", "is_emoji_token", "is_symbol",

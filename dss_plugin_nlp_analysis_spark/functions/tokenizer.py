@@ -32,22 +32,13 @@ All tables are module-level so executor processes compile them once.
 from __future__ import annotations
 
 import re
-from typing import NamedTuple
 
-__all__ = ["Token", "tokenize", "tokenize_raw", "is_punct_token"]
-
-
-class Token(NamedTuple):
-    text: str
-    start: int  # char offset in the input string
-    end: int
-    is_space: bool
+__all__ = ["tokenize_raw", "is_punct_token"]
 
 
-# Internally tokens are PLAIN tuples (text, start, end, is_space) — 12x
-# cheaper to construct than the NamedTuple; ``tokenize`` wraps them into
-# Token at the public boundary, ``tokenize_raw`` exposes them for hot paths
-# (field order is frozen; index access == Token attribute access).
+# A token is a PLAIN tuple (text, start, end, is_space) — 12x cheaper to
+# construct than a NamedTuple; ``start``/``end`` are char offsets in the
+# input string. Callers read the fields by index, so their order is frozen.
 def _tok(text, start, end, is_space):
     return (text, start, end, is_space)
 
@@ -418,7 +409,7 @@ def is_punct_token(text: str) -> bool:
     return bool(text) and all(_ud.category(c).startswith("P") for c in text)
 
 
-def _split_word_run(run: str, base: int, lang: str, out: list[Token]) -> None:
+def _split_word_run(run: str, base: int, lang: str, out: list[tuple]) -> None:
     """Split a letters/digits run on elision, English clitics, and hyphens."""
     # hyphen infixes first: well-known → well | - | known
     if "-" in run or "–" in run or "—" in run:
@@ -458,7 +449,7 @@ def _split_word_run(run: str, base: int, lang: str, out: list[Token]) -> None:
         out.append(_tok(piece, start, start + len(piece), False))
 
 
-def _split_core(core: str, base: int, lang: str, out: list[Token]) -> None:
+def _split_core(core: str, base: int, lang: str, out: list[tuple]) -> None:
     """Emit tokens for a chunk core: CJK chars and emoji sequences become
     their own tokens; remaining runs go through word-level rules."""
     if core.isascii():  # fast path: ASCII has no CJK/emoji codepoints
@@ -501,18 +492,18 @@ def _split_core(core: str, base: int, lang: str, out: list[Token]) -> None:
         _split_word_run(core[run_start:], base + run_start, lang, out)
 
 
-def _refine_chunk(chunk: str, base: int, lang: str, out: list[Token]) -> None:
+def _refine_chunk(chunk: str, base: int, lang: str, out: list[tuple]) -> None:
     if _TOKEN_MATCH_RE.match(chunk):
         out.append(_tok(chunk, base, base + len(chunk), False))
         return
     start, end = 0, len(chunk)
-    prefix_tokens: list[Token] = []
+    prefix_tokens: list[tuple] = []
     while end - start > 1 and chunk[start] in _OPEN_PUNCT:
         if chunk[start] in "#@" and _TOKEN_MATCH_RE.match(chunk[start:end]):
             break
         prefix_tokens.append(_tok(chunk[start], base + start, base + start + 1, False))
         start += 1
-    suffix_tokens: list[Token] = []
+    suffix_tokens: list[tuple] = []
     while end - start > 1:
         seg = chunk[start:end]
         m = _ELLIPSIS_RE.search(seg)
@@ -538,8 +529,8 @@ def _refine_chunk(chunk: str, base: int, lang: str, out: list[Token]) -> None:
 
 
 def tokenize_raw(text: str, lang: str = "en") -> list[tuple]:
-    """Hot-path tokenizer: plain ``(text, start, end, is_space)`` tuples
-    (same algorithm as ``tokenize``; construction cost only).
+    """Tokenize ``text`` with char offsets (SEMANTICS.md §3), as plain
+    ``(text, start, end, is_space)`` tuples.
 
     Whitespace runs other than a single ``" "`` are emitted as space
     tokens (``is_space=True``); a single space is a silent separator.
@@ -570,10 +561,3 @@ def tokenize_raw(text: str, lang: str = "en") -> list[tuple]:
     if gap and (gap > 1 or text[prev] != " "):  # trailing whitespace
         out.append((text[prev:n], prev, n, True))
     return out
-
-
-def tokenize(text: str, lang: str = "en") -> list[Token]:
-    """Tokenize ``text`` with char offsets (SEMANTICS.md §3) — public API
-    with named fields; see ``tokenize_raw`` for the allocation-light form."""
-    new = tuple.__new__
-    return [new(Token, t) for t in tokenize_raw(text, lang)]

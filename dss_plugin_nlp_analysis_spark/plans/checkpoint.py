@@ -15,8 +15,9 @@ this module adds it at the partition level:
   coalescing this small-in-bytes, CPU-heavy stage into one partition.
   (The input's count is free for a file scan; an input that ends in a
   shuffle runs that shuffle once to learn it.)
-- each completed bucket writes its triples under ``output/_bucket=<b>/``
-  and appends a manifest row (bucket, input_rows, triples, group_wall_s,
+- each completed bucket writes its triples under ``output/bucket=<b>/``
+  (no ``_`` prefix: ``pyarrow.parquet.read_table`` skips such paths) and
+  appends a manifest row (bucket, input_rows, triples, group_wall_s,
   output_fingerprint, completed_at, num_buckets) to
   ``<checkpoint_dir>/manifest/``
 - a restart reads the manifest and processes only missing buckets. The
@@ -24,7 +25,9 @@ this module adds it at the partition level:
   manifest row whose ``num_buckets`` differs from the current one raises
   ValueError (skipping "done" bucket ids of another layout would leave
   stale triples beside rewritten ones). Rows of older manifests, written
-  before the column existed, read it as NULL and resume as before.
+  before the column existed, read it as NULL and resume as before. An
+  output in the old ``output/_bucket=<b>/`` layout raises ValueError:
+  the two layouts are never mixed.
 
 Manifest I/O is Arrow on the driver side: a missing manifest reads as a
 frame over an empty ``pyarrow.Table`` and each group's rows are appended
@@ -38,16 +41,16 @@ so a crash mid-bucket re-runs just that bucket. (On a real lakehouse this
 manifest becomes an Iceberg snapshot/metadata table; parquet keeps the
 sandbox dependency-free — sources/catalog.py gates the Iceberg path.)
 
-Lineage: ``input_rows`` comes from an ``Observation`` on the
-repartitioned docs, so it is counted in the write job's result stage (no
-second scan; a result stage's metrics merge once per partition, unlike a
-retried shuffle-map task's). The output fingerprint is a COMMUTATIVE
-per-bucket hash of the committed output — sum of per-row
-xxhash64(subj|pred|obj) widened to decimal(38,0). Order-insensitive (rows
-arrive in any partition order), duplicate-sensitive (unlike XOR, a
-re-appended row changes the sum), and constant-memory per aggregation
-buffer — a sort_array(collect_list(...)) fingerprint would materialize
-every triple string of a bucket in one buffer and OOM at 100 TB.
+Lineage: each group runs one data job, the write, and observes its
+manifest rows in that job's result stage (whose metrics merge once per
+partition, unlike a retried shuffle-map task's), one
+``when(_bucket == b, …)`` aggregate per bucket: ``input_rows`` on the
+repartitioned docs, ``triples`` and ``output_fingerprint`` on the rows
+written. The output is never read back. The fingerprint is a COMMUTATIVE
+sum of per-row xxhash64(subj|pred|obj) in decimal(38,0): insensitive to
+row order, sensitive to duplicates (unlike XOR, a re-appended row changes
+the sum), and constant-memory — a sort_array(collect_list(...))
+fingerprint would hold every triple string of a bucket in one buffer.
 
 Bucket-partition safety: ``triple_fn`` may keep the input ``_bucket``
 column on its output — then the write partitions by the *input* bucket
@@ -114,11 +117,14 @@ def read_manifest(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
-def _output_fingerprint() -> F.Column:
+def _output_fingerprint(where: F.Column | None = None) -> F.Column:
     """Commutative, duplicate-sensitive, constant-memory bucket fingerprint:
     sum of per-row xxhash64 in decimal(38,0) (no overflow below ~10^19 rows
-    per bucket, far past any real partition)."""
+    per bucket, far past any real partition) over the rows ``where`` holds
+    (all rows when omitted); NULL over no rows."""
     row_hash = F.xxhash64(F.concat_ws("|", "subj", "pred", "obj"))
+    if where is not None:
+        row_hash = F.when(where, row_hash)
     return F.sum(row_hash.cast("decimal(38,0)")).cast("string")
 
 
@@ -143,19 +149,29 @@ def run_checkpointed_build(
     preserve it on its output to pin each triple to its input bucket for
     free. Outputs without ``_bucket`` must satisfy the subj == url
     contract: the bucket is re-derived from subj, and a subj outside the
-    group raises ValueError before the write commits.
+    group raises ValueError before the write commits. The bucket is
+    written as the partition column ``bucket``, so an output with a
+    ``bucket`` column of its own raises ValueError.
 
-    ``triple_fn`` should build its output lazily from ``bucket_docs``: an
-    action on it would run the exchange once more, and the first action
-    is the one whose rows become the manifest's ``input_rows``.
+    ``triple_fn`` should build its output lazily from ``bucket_docs``: the
+    write is the group's one data job and observes its manifest rows (see
+    module doc). An action on ``bucket_docs`` would run the exchange once
+    more, and the first action is the one whose rows become ``input_rows``.
 
     ``buckets_per_job`` groups buckets into jobs: at 100 TB you want few
     large jobs (amortized scans); the manifest granularity stays per-bucket
     because the output is partitioned by bucket and recorded per-bucket.
 
-    A manifest recorded with another ``num_buckets`` raises ValueError
-    before any work (see module doc).
+    A manifest recorded with another ``num_buckets``, or an output in the
+    old ``_bucket=<b>`` layout, raises ValueError before any work.
     """
+    old = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{output_dir}/_bucket=*")
+    if old.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(old):
+        raise ValueError(
+            f"{output_dir} holds triples in the old _bucket=<b> layout, and this "
+            "build writes bucket=<b>: mixing the two would duplicate triples. "
+            "Start a fresh output and checkpoint."
+        )
     manifest = read_manifest(spark, checkpoint_dir).select("bucket", "num_buckets").collect()
     other = sorted({r["num_buckets"] for r in manifest} - {None, num_buckets})
     if other:
@@ -177,16 +193,19 @@ def run_checkpointed_build(
     for i in range(0, len(todo), buckets_per_job):
         group = todo[i:i + buckets_per_job]
         t0 = time.perf_counter()
-        # input rows per bucket, counted where the write job reads them
-        in_rows = [F.count(F.when(F.col("_bucket") == b, 1)).alias(str(b)) for b in group]
+        # rows per bucket: the docs read and the triples written
+        counts = [F.count(F.when(F.col("_bucket") == b, 1)).alias(str(b)) for b in group]
         obs_name = f"kg_input_rows_{uuid.uuid4().hex}"
-        obs = Observation(obs_name)
+        obs, out_obs = Observation(obs_name), Observation()
         part = (
             docs_b.where(F.col("_bucket").isin(group))
             .repartition(n_tasks, F.xxhash64(F.col(url_col)))
-            .observe(obs, *in_rows)
+            .observe(obs, *counts)
         )
         triples = triple_fn(part)
+        if any(c.lower() == "bucket" for c in triples.columns):
+            raise ValueError("triple_fn's output has a column named bucket, the "
+                             "partition column of the url-hash bucket. Rename it.")
         derived = "_bucket" not in triples.columns
         if derived:
             bucket = (F.pmod(F.xxhash64(F.col("subj")), F.lit(num_buckets))).cast("int")
@@ -207,13 +226,16 @@ def run_checkpointed_build(
         # ignored them, or the optimizer dropped them as empty) never
         # reports the observation: count those inputs with their own query
         observed = obs_name in triples._jdf.queryExecution().optimizedPlan().toString()
+        fingerprints = [_output_fingerprint(F.col("_bucket") == b).alias(f"fp{b}") for b in group]
         # dynamic partition overwrite (writer-scoped, not session config):
         # re-running a bucket replaces exactly that bucket's directory —
         # idempotent resume, no duplicate appends
         writer = (
-            triples.write.mode("overwrite")
+            triples.observe(out_obs, *counts, *fingerprints)
+            .withColumnRenamed("_bucket", "bucket")
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
+            .partitionBy("bucket")
         )
         try:
             writer.parquet(output_dir)
@@ -227,32 +249,18 @@ def run_checkpointed_build(
                 ) from exc
             raise
         wall = time.perf_counter() - t0
-        # lineage: per-bucket input/output counts + output fingerprint
-        in_counts = obs.get if observed else part.agg(*in_rows).first().asDict()
-        # read back with the written schema: an output that has no rows
-        # yet has no parquet footer to infer one from
-        out_stats = {
-            r["_bucket"]: (r["n"], r["fp"])
-            for r in spark.read.schema(triples.schema).parquet(output_dir)
-            .where(F.col("_bucket").isin(group))
-            .groupBy("_bucket")
-            .agg(F.count("*").alias("n"), _output_fingerprint().alias("fp"))
-            .collect()
-        }
-        rows = []
-        now = time.time()
-        for b in group:
-            n_out, fp = out_stats.get(b, (0, None))
-            rows.append({
-                "bucket": b, "input_rows": in_counts[str(b)], "triples": n_out,
-                "group_wall_s": wall, "output_fingerprint": fp, "completed_at": now,
-                "num_buckets": num_buckets,
-            })
-            total_triples += n_out
-        appended = pa.Table.from_pylist(rows, schema=_MANIFEST_ARROW)
+        in_rows = obs.get if observed else part.agg(*counts).first().asDict()
+        out, now = out_obs.get, time.time()
+        appended = pa.Table.from_pylist([
+            {"bucket": b, "input_rows": in_rows[str(b)], "triples": out[str(b)],
+             "group_wall_s": wall, "output_fingerprint": out[f"fp{b}"],
+             "completed_at": now, "num_buckets": num_buckets}
+            for b in group
+        ], schema=_MANIFEST_ARROW)
         spark.createDataFrame(appended).write.mode("append").parquet(
             f"{checkpoint_dir}/manifest"
         )
+        total_triples += sum(out[str(b)] for b in group)
         processed.extend(group)
     return KGBuildResult(
         processed_buckets=processed,

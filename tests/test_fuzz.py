@@ -10,7 +10,7 @@ from dss_plugin_nlp_analysis_spark.functions.sentencizer import (
 )
 from dss_plugin_nlp_analysis_spark.functions.textnorm import clean_linebreaks, normalize_text
 from dss_plugin_nlp_analysis_spark.functions.langsupport import SUPPORTED_LANGUAGES
-from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize, tokenize_raw
+from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize_raw
 from dss_plugin_nlp_analysis_spark.operators import tagger
 from dss_plugin_nlp_analysis_spark.operators.ontology import TagOptions, compile_ontology
 from dss_plugin_nlp_analysis_spark.operators.tagger import process_document
@@ -22,16 +22,16 @@ LANG = st.sampled_from(["en", "fr", "zh", "de", "ja", "th"])
 @given(TEXT, LANG)
 @settings(max_examples=300, deadline=None)
 def test_tokenize_offsets_and_coverage(text, lang):
-    toks = tokenize(text, lang)
+    toks = tokenize_raw(text, lang)
     prev_end = 0
     for t in toks:
-        assert text[t.start:t.end] == t.text
-        assert t.start >= prev_end  # ordered, non-overlapping
-        prev_end = t.end
+        assert text[t[1]:t[2]] == t[0]
+        assert t[1] >= prev_end  # ordered, non-overlapping
+        prev_end = t[2]
     # every non-space char is covered by some token
     covered = [False] * len(text)
     for t in toks:
-        for i in range(t.start, t.end):
+        for i in range(t[1], t[2]):
             covered[i] = True
     for i, ch in enumerate(text):
         if not ch.isspace():

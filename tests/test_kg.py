@@ -14,6 +14,34 @@ from dss_plugin_nlp_analysis_spark.sources.webpages import (
 )
 
 
+def read_back(spark, out):
+    """Per-bucket ``(triples, fingerprint)`` of the committed output: the
+    query the build no longer runs, kept as the manifest's reference."""
+    import pathlib
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import _output_fingerprint
+
+    if not any(pathlib.Path(out).rglob("*.parquet")):  # no rows, no footer to read
+        return {}
+    return {
+        r["bucket"]: (r["n"], r["fp"])
+        for r in spark.read.parquet(out).groupBy("bucket")
+        .agg(F.count("*").alias("n"), _output_fingerprint().alias("fp")).collect()
+    }
+
+
+def assert_manifest_matches_output(spark, out, ckpt):
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import read_manifest
+
+    manifest = {
+        r["bucket"]: (r["triples"], r["output_fingerprint"])
+        for r in read_manifest(spark, ckpt).collect()
+    }
+    back = read_back(spark, out)
+    assert set(back) <= set(manifest)
+    assert manifest == {b: back.get(b, (0, None)) for b in manifest}
+
+
 def test_canonical_map_unions_by_shared_keyword():
     rows = [
         ("nyc", "new york", None),
@@ -161,9 +189,13 @@ def test_checkpointed_build_resumes(spark, tmp_path):
     )
     assert r2.processed_buckets == []
     assert r2.skipped_buckets == [0, 1, 2, 3]
-    # output is complete and readable
+    # output is complete, readable outside Spark, and equals its manifest
+    import pyarrow.parquet as pq
+
     total = spark.read.parquet(out).count()
     assert total == r1.total_triples > 0
+    assert pq.read_table(out).num_rows == r1.total_triples
+    assert_manifest_matches_output(spark, out, ckpt)
 
 
 def test_checkpointed_build_manifest_input_rows_per_bucket(spark, tmp_path):
@@ -244,14 +276,15 @@ def test_checkpointed_build_counts_inputs_the_output_drops(spark, tmp_path):
             F.col("url").alias("subj"), F.lit("p").alias("pred"), F.col("text").alias("obj"),
         )
 
-    ckpt = str(tmp_path / "ckpt")
-    res = run_checkpointed_build(
-        spark, docs, empty_triple_fn, str(tmp_path / "out"), ckpt, num_buckets=2,
-    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    res = run_checkpointed_build(spark, docs, empty_triple_fn, out, ckpt, num_buckets=2)
     assert res.total_triples == 0
     m = read_manifest(spark, ckpt).collect()
     assert sorted(r["bucket"] for r in m) == [0, 1]
     assert sum(r["input_rows"] for r in m) == 20
+    # the folded output still reports its observation: 0 triples, NULL fingerprints
+    assert {(r["triples"], r["output_fingerprint"]) for r in m} == {(0, None)}
+    assert_manifest_matches_output(spark, out, ckpt)
 
 
 def test_checkpointed_build_refuses_corrupt_manifest(spark, tmp_path):
@@ -310,10 +343,11 @@ def test_checkpointed_build_empty_bucket_has_null_fingerprint(spark, tmp_path):
             F.col("text").alias("obj"),
         )
 
-    ckpt = str(tmp_path / "ckpt")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
     run_checkpointed_build(
-        spark, docs, triple_fn, str(tmp_path / "out"), ckpt, num_buckets=3, buckets_per_job=3,
+        spark, docs, triple_fn, out, ckpt, num_buckets=3, buckets_per_job=3,
     )
+    assert_manifest_matches_output(spark, out, ckpt)
     m = {r["bucket"]: r for r in read_manifest(spark, ckpt).collect()}
     assert sorted(m) == [0, 1, 2]
     assert m[0]["triples"] == 0 and m[0]["output_fingerprint"] is None
@@ -381,6 +415,152 @@ def test_checkpointed_build_resumes_manifest_without_bucket_count(spark, tmp_pat
     again = run_checkpointed_build(spark, docs, _copy_triple_fn, out, str(ckpt),
                                    num_buckets=4, buckets_per_job=4)
     assert again.processed_buckets == [] and again.skipped_buckets == [0, 1, 2, 3]
+
+
+def test_checkpointed_build_never_reads_its_output(spark, tmp_path, monkeypatch):
+    # one data job per group: the manifest comes from the write itself, so
+    # neither a build nor its resume reads output_dir back
+    from pyspark.sql import DataFrameReader
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def refusing(read):
+        def guarded(self, *args, **kwargs):
+            paths = [a for a in (*args, *kwargs.values()) if isinstance(a, str)]
+            if any(p.startswith(out) for p in paths):
+                raise AssertionError(f"the build read its output: {paths}")
+            return read(self, *args, **kwargs)
+        return guarded
+
+    for name in ("parquet", "load"):
+        monkeypatch.setattr(DataFrameReader, name, refusing(getattr(DataFrameReader, name)))
+    docs = pages_df(spark, 100, seed=42)
+    onto = demo_kg_ontology(spark)
+
+    def triple_fn(part):
+        return build_triples(part, onto, languages=["en", "fr", "es", "de"])
+
+    first = run_checkpointed_build(spark, docs, triple_fn, out, ckpt,
+                                   num_buckets=4, buckets_per_job=2)
+    again = run_checkpointed_build(spark, docs, triple_fn, out, ckpt,
+                                   num_buckets=4, buckets_per_job=2)
+    assert first.total_triples > 0 and again.processed_buckets == []
+    monkeypatch.undo()
+    assert_manifest_matches_output(spark, out, ckpt)
+
+
+def test_checkpointed_build_refuses_old_bucket_layout(spark, tmp_path):
+    # an output written as _bucket=<b>/ raises before any work: resuming
+    # into it would put bucket=<b>/ copies of the same triples beside it
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    spark.createDataFrame(
+        [("http://d0.com/x", "p", "o", 0)], "subj string, pred string, obj string, _bucket int"
+    ).write.partitionBy("_bucket").parquet(str(out))
+    before = sorted(p.relative_to(out) for p in out.rglob("*"))
+    docs = pages_df(spark, 20, seed=42)
+    with pytest.raises(ValueError, match="old _bucket=<b> layout"):
+        run_checkpointed_build(spark, docs, _copy_triple_fn, str(out), str(ckpt), num_buckets=2)
+    assert sorted(p.relative_to(out) for p in out.rglob("*")) == before
+    assert not ckpt.exists()
+
+
+def test_checkpointed_build_bucket_column_names(spark, tmp_path):
+    # input docs may carry their own bucket column (the in-flight column is
+    # _bucket); an OUTPUT bucket column would clash with the partition column
+    import pyarrow.parquet as pq
+
+    from dss_plugin_nlp_analysis_spark.plans.checkpoint import run_checkpointed_build
+
+    docs = spark.createDataFrame(
+        [(f"http://d{i}.com/x", f"text {i}", "shelf-9") for i in range(30)],
+        "url string, text string, bucket string",
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    res = run_checkpointed_build(spark, docs, _copy_triple_fn, out, ckpt, num_buckets=3)
+    assert res.total_triples == pq.read_table(out).num_rows == 30
+    assert_manifest_matches_output(spark, out, ckpt)
+
+    def clashing(part):
+        return _copy_triple_fn(part).withColumn("Bucket", F.lit(1))
+
+    with pytest.raises(ValueError, match="column named bucket"):
+        run_checkpointed_build(spark, docs, clashing, str(tmp_path / "out2"),
+                               str(tmp_path / "ckpt2"), num_buckets=3)
+    assert not (tmp_path / "out2").exists()
+
+
+_RETRY_SCRIPT = """
+import os
+import sys
+
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from dss_plugin_nlp_analysis_spark.plans.checkpoint import read_manifest, run_checkpointed_build
+from test_kg import assert_manifest_matches_output
+
+out, ckpt, marker = sys.argv[1:]
+# 4-row Arrow batches: the failing attempt has already passed rows on to
+# the observation and the writer when it fails
+spark = (SparkSession.builder.master("local[4,2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+batches = {}
+
+
+@F.pandas_udf("string")
+def fail_first_attempt(text):
+    ctx = TaskContext.get()
+    task = (ctx.stageId(), ctx.partitionId(), ctx.attemptNumber())
+    batches[task] = batches.get(task, 0) + 1
+    if ctx.partitionId() == 1 and ctx.attemptNumber() == 0 and batches[task] == 3:
+        open(marker, "a").close()
+        raise RuntimeError("injected failure of attempt 0")
+    return text.str.upper()
+
+
+def triple_fn(part):
+    return part.select("_bucket", F.col("url").alias("subj"), F.lit("p").alias("pred"),
+                       fail_first_attempt("text").alias("obj"))
+
+
+docs = spark.createDataFrame([(f"http://d{i}.com/x", f"text {i}") for i in range(200)],
+                             "url string, text string")
+res = run_checkpointed_build(spark, docs, triple_fn, out, ckpt, num_buckets=4, buckets_per_job=2)
+assert os.path.exists(marker), "no task attempt failed"
+assert res.total_triples == 200, res
+assert sum(r["input_rows"] for r in read_manifest(spark, ckpt).collect()) == 200
+assert_manifest_matches_output(spark, out, ckpt)
+spark.stop()
+print("ok")
+"""
+
+
+def test_checkpointed_build_manifest_survives_task_retry(tmp_path):
+    # local[4,2] allows one retry per task: attempt 0 of one partition
+    # fails mid-write, and the observed counts and fingerprints still
+    # equal the read-back (the failed attempt's metrics do not merge)
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    here = pathlib.Path(__file__).resolve().parent
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (str(here.parent), str(here), os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT,
+         str(tmp_path / "out"), str(tmp_path / "ckpt"), str(tmp_path / "failed")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().endswith("ok")
 
 
 def test_canonical_map_transitive_chain():

@@ -5,11 +5,11 @@ multi-character CJK ontology keywords now match as token sequences."""
 
 import pytest
 
-from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize
+from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize_raw
 
 
 def texts(s, lang):
-    return [t.text for t in tokenize(s, lang)]
+    return [t[0] for t in tokenize_raw(s, lang)]
 
 
 def test_japanese_reference_golden_token_count():
@@ -70,11 +70,11 @@ def test_user_dictionary_frequencies_reweight_the_lattice(tmp_path, monkeypatch)
 
 def test_offsets_cover_run_exactly():
     s = "期一会。異体同心"
-    toks = tokenize(s, "ja")
-    assert toks[0].start == 0
-    assert all(a.end == b.start for a, b in zip(toks, toks[1:]))
-    assert toks[-1].end == len(s)
-    assert "".join(t.text for t in toks) == s
+    toks = tokenize_raw(s, "ja")
+    assert toks[0][1] == 0
+    assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
+    assert toks[-1][2] == len(s)
+    assert "".join(t[0] for t in toks) == s
 
 
 def test_langs_without_dict_keep_char_fallback():
@@ -163,10 +163,10 @@ def test_oov_hmm_leaves_unknown_chars_single(monkeypatch):
 def test_oov_hmm_offsets_stay_contiguous(monkeypatch):
     monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
     s = "网民热议人工智能。期一会"
-    toks = tokenize(s, "zh")
-    assert toks[0].start == 0 and toks[-1].end == len(s)
-    assert all(a.end == b.start for a, b in zip(toks, toks[1:]))
-    assert "".join(t.text for t in toks) == s
+    toks = tokenize_raw(s, "zh")
+    assert toks[0][1] == 0 and toks[-1][2] == len(s)
+    assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
+    assert "".join(t[0] for t in toks) == s
 
 
 def test_oov_hmm_dict_words_unchanged(monkeypatch):
@@ -185,10 +185,10 @@ def test_oov_hmm_ja_th_runs_stay_wellformed(monkeypatch):
     # segmentations are untouched
     monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
     for s, lang in (("期一会。異体同心そうです", "ja"), ("ผมชอบกินข้าว", "th")):
-        toks = tokenize(s, lang)
-        assert toks[0].start == 0 and toks[-1].end == len(s)
-        assert all(a.end == b.start for a, b in zip(toks, toks[1:]))
-        assert "".join(t.text for t in toks) == s
+        toks = tokenize_raw(s, lang)
+        assert toks[0][1] == 0 and toks[-1][2] == len(s)
+        assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
+        assert "".join(t[0] for t in toks) == s
     assert texts("ผมชอบกินข้าว", "th") == ["ผม", "ชอบ", "กิน", "ข้าว"]
 
 
@@ -247,8 +247,8 @@ def test_trained_hmm_malformed_lines_ignored(tmp_path, monkeypatch):
     monkeypatch.setenv("KG_SEGMENT_DICT_DIR", str(tmp_path))
     monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
     monkeypatch.setattr(tok, "_SEG_DICT_CACHE", {})
-    toks = tokenize("网民热议。", "zh")
-    assert "".join(t.text for t in toks) == "网民热议。"
+    toks = tokenize_raw("网民热议。", "zh")
+    assert "".join(t[0] for t in toks) == "网民热议。"
     emit, trans, start = tok._load_trained_hmm(str(tmp_path / "zh_hmm.tsv"))
     assert emit["B"]["网"] == -1.0 and ("E", "M") not in trans
     assert start["B"] == -0.5

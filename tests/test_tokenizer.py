@@ -5,11 +5,11 @@ Pinned cases from reference tests: test_ontology_tagger.py:43-65 (N.Y,
 hashtag/emoji), spacy_tokenizer.py:316-327 (hashtag token).
 """
 
-from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize
+from dss_plugin_nlp_analysis_spark.functions.tokenizer import tokenize_raw
 
 
 def texts(s, lang="en"):
-    return [t.text for t in tokenize(s, lang)]
+    return [t[0] for t in tokenize_raw(s, lang)]
 
 
 def test_simple_sentence_tokens():
@@ -41,19 +41,19 @@ def test_emoji_adjacent_to_word_splits():
 
 def test_offsets_roundtrip():
     s = "Hello, world! (test)"
-    for t in tokenize(s):
-        assert s[t.start:t.end] == t.text
+    for t in tokenize_raw(s):
+        assert s[t[1]:t[2]] == t[0]
 
 
 def test_newline_is_space_token():
-    toks = tokenize("a\nb")
-    assert [t.text for t in toks] == ["a", "\n", "b"]
-    assert toks[1].is_space
+    toks = tokenize_raw("a\nb")
+    assert [t[0] for t in toks] == ["a", "\n", "b"]
+    assert toks[1][3]
 
 
 def test_single_space_absorbed_double_space_token():
-    assert [t.text for t in tokenize("a b")] == ["a", "b"]
-    assert [t.text for t in tokenize("a  b")] == ["a", "  ", "b"]
+    assert [t[0] for t in tokenize_raw("a b")] == ["a", "b"]
+    assert [t[0] for t in tokenize_raw("a  b")] == ["a", "  ", "b"]
 
 
 def test_english_clitics():
