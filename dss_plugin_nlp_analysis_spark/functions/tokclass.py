@@ -13,13 +13,14 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .tokenizer import _is_emoji
+from .tokenizer import _EMOJI_CLASS
 
 __all__ = [
     "is_hashtag", "is_username", "is_emoji_token", "is_symbol",
     "is_datetime_token", "is_measure", "is_space_token", "classify_token_col",
 ]
 
+_EMOJI_START_RE = re.compile(f"[{_EMOJI_CLASS}]")
 _HASHTAG_RE = re.compile(r"#\w+$")
 _USERNAME_RE = re.compile(r"@\w+$")
 _SYMBOL_RE = re.compile(r"[$€£¥%©®™§±×÷=+<>^~|]+$")
@@ -38,7 +39,7 @@ def is_username(tok: str) -> bool:
 
 
 def is_emoji_token(tok: str) -> bool:
-    return bool(tok) and _is_emoji(tok[0])
+    return bool(_EMOJI_START_RE.match(tok))
 
 
 def is_symbol(tok: str) -> bool:

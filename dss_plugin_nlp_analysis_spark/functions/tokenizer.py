@@ -19,19 +19,24 @@ SURVEY.md preamble). Pinned behaviors and their reference evidence:
   extras (code-env/python/spec/requirements.txt:1-13). Out-of-dictionary
   CJK and other no-space scripts fall back to char-level tokens, which
   matches the reference's classical-zh golden exactly
-  (test_spacy_tokenizer.py:33-47) and is absorbed by the P/R bar
-  elsewhere (SEMANTICS.md §3). ``KG_SEGMENT_OOV_HMM=1`` additionally
-  groups OOV spans with a dictionary-derived BMES Viterbi (jieba's
-  ``HMM=True`` analog — see ``_derive_hmm``); off by default to keep
-  golden parity.
+  (test_spacy_tokenizer.py:33-47); jieba's OOV HMM is not replicated
+  (SEMANTICS.md §3).
 
-Design: regex pre-segmentation (C speed) + cheap per-chunk refinement.
-All tables are module-level so executor processes compile them once.
+Design: every step is a compiled regex or an index walk, so a chunk costs
+linear time in its length. ``\\S+`` cuts the text into chunks; a chunk
+that is not a whole-token pattern (URL, email, hashtag, dotted number)
+loses its open/close punctuation by index; one scan (``_RUN_RE``) splits
+the remaining core into CJK/Thai runs (to the lattice), emoji sequences
+(one token each) and word runs (elision, clitic and hyphen rules). All
+tables are module-level so executor processes compile them once.
 """
 
 from __future__ import annotations
 
+import math as _math
+import os as _os
 import re
+import unicodedata as _ud
 
 __all__ = ["tokenize_raw", "is_punct_token"]
 
@@ -61,44 +66,40 @@ _TOKEN_MATCH_RE = re.compile(
 
 _OPEN_PUNCT = set("([{<\"'`«‹„“‘¿¡$€£¥§#@*")
 _CLOSE_PUNCT = set(")]}>\"'`»›”’!?,;:%…&*")
-_ELLIPSIS_RE = re.compile(r"\.{2,}$")
 
-# CJK + fullwidth punctuation → char-level tokens
-_CJK_RANGES = (
-    (0x1100, 0x11FF),   # Hangul Jamo
-    (0x2E80, 0x2EFF),   # CJK radicals
-    (0x3000, 0x303F),   # CJK symbols & punctuation
-    (0x3040, 0x30FF),   # Hiragana + Katakana
-    (0x3130, 0x318F),   # Hangul compat Jamo
-    (0x3400, 0x4DBF),   # CJK ext A
-    (0x4E00, 0x9FFF),   # CJK unified
-    (0xAC00, 0xD7AF),   # Hangul syllables
-    (0xF900, 0xFAFF),   # CJK compat
-    (0xFF00, 0xFFEF),   # full/half-width forms
-    (0x0E00, 0x0E7F),   # Thai (no-space script; char fallback)
+# No-space scripts (CJK, Hangul, Thai) and fullwidth punctuation: their
+# runs go to the segmentation lattice.
+_CJK_CLASS = (
+    r"\u0e00-\u0e7f"  # Thai (no-space script)
+    r"\u1100-\u11ff"  # Hangul Jamo
+    r"\u2e80-\u2eff"  # CJK radicals
+    r"\u3000-\u303f"  # CJK symbols & punctuation
+    r"\u3040-\u30ff"  # Hiragana + Katakana
+    r"\u3130-\u318f"  # Hangul compat Jamo
+    r"\u3400-\u4dbf"  # CJK ext A
+    r"\u4e00-\u9fff"  # CJK unified
+    r"\uac00-\ud7af"  # Hangul syllables
+    r"\uf900-\ufaff"  # CJK compat
+    r"\uff00-\uffef"  # full/half-width forms
 )
+# chars that start an emoji token
+_EMOJI_CLASS = r"\u2600-\u27bf\u2b00-\u2bff\ufe00-\ufe0f\U0001f000-\U0001faff"
+# absorbed anywhere in an emoji sequence: skin tones, variation
+# selectors, keycap
+_MODIFIER_CLASS = r"\U0001f3fb-\U0001f3ff\ufe0e\ufe0f\u20e3"
+# regional indicators: absorbed only right after the start char (a flag)
+_REGIONAL_CLASS = r"\U0001f1e6-\U0001f1ff"
+_ZWJ_EMOJI = rf"\u200d[{_EMOJI_CLASS}]"  # zero-width joiner + emoji
 
-_EMOJI_RANGES = (
-    (0x1F000, 0x1FAFF),
-    (0x2600, 0x27BF),
-    (0x2B00, 0x2BFF),
-    (0x1F900, 0x1F9FF),
-    (0xFE00, 0xFE0F),
+# One scan of a chunk core: group 1 a CJK run, group 2 an emoji sequence,
+# group 3 a word run (everything else). The groups cover every char.
+_RUN_RE = re.compile(
+    rf"([{_CJK_CLASS}]+)"
+    rf"|([{_EMOJI_CLASS}]"
+    rf"(?:[{_MODIFIER_CLASS}{_REGIONAL_CLASS}]|{_ZWJ_EMOJI})?"
+    rf"(?:[{_MODIFIER_CLASS}]|{_ZWJ_EMOJI})*)"
+    rf"|([^{_CJK_CLASS}{_EMOJI_CLASS}]+)"
 )
-_EMOJI_MODIFIERS = frozenset(
-    list(range(0x1F3FB, 0x1F400))  # skin tones
-    + [0xFE0F, 0xFE0E, 0x20E3]     # variation selectors, keycap
-)
-_ZWJ = 0x200D
-_REGIONAL = (0x1F1E6, 0x1F1FF)
-
-
-def _is_cjk(ch: str) -> bool:
-    cp = ord(ch)
-    for lo, hi in _CJK_RANGES:
-        if lo <= cp <= hi:
-            return True
-    return False
 
 
 # --- dictionary segmentation for no-space scripts (zh/ja/th) -----------
@@ -113,14 +114,11 @@ def _is_cjk(ch: str) -> bool:
 # (its HMM extension for multi-char OOV words is not replicated — OOV
 # spans fall to char-level tokens, SEMANTICS.md §3).
 
-import math as _math
-import os as _os
-
 _MISSING = object()
 
-# lang -> (word -> logprob, max word length, single-char OOV logprob,
-#          derived BMES HMM params — see _derive_hmm) | None (no dict)
-_SEG_DICT_CACHE: dict[str, tuple[dict, int, float, tuple] | None] = {}
+# lang -> (word -> logprob, max word length, single-char OOV logprob)
+#         | None (no dict)
+_SEG_DICT_CACHE: dict[str, tuple[dict, int, float] | None] = {}
 
 
 def _seg_dict(lang: str):
@@ -155,181 +153,9 @@ def _seg_dict(lang: str):
         return None
     log_total = _math.log(sum(freqs.values()))
     logp = {w: _math.log(f) - log_total for w, f in freqs.items()}
-    # BMES OOV parameters: corpus-trained table when provided
-    # ($KG_SEGMENT_DICT_DIR/<lang>_hmm.tsv — see _load_trained_hmm),
-    # else derived from the dictionary's positional char statistics
-    hmm = None
-    if user_dir:
-        hmm_path = _os.path.join(user_dir, f"{lang}_hmm.tsv")
-        if _os.path.exists(hmm_path):
-            hmm = _load_trained_hmm(hmm_path)
-    if hmm is None:
-        hmm = _derive_hmm(freqs)
-    entry = (logp, max(len(w) for w in logp), -log_total, hmm)
+    entry = (logp, max(len(w) for w in logp), -log_total)
     _SEG_DICT_CACHE[lang] = entry
     return entry
-
-
-# --- dictionary-derived BMES HMM for out-of-dictionary spans -----------
-#
-# jieba extends its lattice with a corpus-trained BMES HMM that groups
-# spans no dictionary word covers (multi-char OOV words — names, new
-# compounds). No training corpus ships here, so the parameters are
-# derived FROM THE DICTIONARY itself: emission stats from each char's
-# positions inside dictionary words (begin/middle/end, frequency-
-# weighted), the B→M/M→M continuation probability from the dictionary's
-# word-length mass. Chars the dictionary has never seen smooth to a
-# count below the single-state floor, so fully-unknown text (e.g. the
-# classical-zh golden's traditional characters) stays char-level.
-#
-# OFF by default — the reference goldens pin char-level OOV behavior —
-# and enabled with ``KG_SEGMENT_OOV_HMM=1`` (the crawl mode), mirroring
-# jieba's public ``cut(..., HMM=True)`` switch.
-
-_HMM_STATES = ("B", "M", "E", "S")  # begin / middle / end / single
-
-
-def _load_trained_hmm(path: str):
-    """Corpus-trained BMES parameters from a plain-text table — the hook
-    for real training data (jieba ships corpus-trained ``prob_emit``/
-    ``prob_trans`` tables; this accepts the same information re-serialized
-    line-per-entry so no Python import of third-party data files is
-    needed). Lines (``#`` comments and blanks ignored)::
-
-        emit  <B|M|E|S> <char|*> <logprob>   # '*' = unseen-char floor
-        trans <src> <dst> <logprob>          # only legal BMES edges kept
-        start <B|S> <logprob>
-
-    Legal transitions are B→{M,E}, M→{M,E}, E→{B,S}, S→{B,S} (word-
-    structural constraints); others are ignored. Missing floors default
-    to -20 (effectively never emitted), missing transitions/starts to the
-    dictionary-derived defaults' shape with log(0.5). Returns the same
-    ``(emit, trans, start)`` triple ``_derive_hmm`` produces, so the two
-    sources are interchangeable in ``_hmm_group``."""
-    legal = {
-        ("B", "M"), ("B", "E"), ("M", "M"), ("M", "E"),
-        ("E", "B"), ("E", "S"), ("S", "B"), ("S", "S"),
-    }
-    emit: dict[str, dict] = {s: {} for s in _HMM_STATES}
-    trans = {edge: _math.log(0.5) for edge in legal}
-    start = {"B": _math.log(0.5), "S": _math.log(0.5)}
-    with open(path, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip()
-            if not line or line.startswith("#"):
-                continue
-            parts = line.split()
-            if len(parts) != 4 and not (parts[0] == "start" and len(parts) == 3):
-                continue
-            kind = parts[0]
-            if kind == "emit" and parts[1] in _HMM_STATES:
-                ch = None if parts[2] == "*" else parts[2]
-                emit[parts[1]][ch] = float(parts[3])
-            elif kind == "trans" and (parts[1], parts[2]) in legal:
-                trans[(parts[1], parts[2])] = float(parts[3])
-            elif kind == "start" and parts[1] in ("B", "S"):
-                start[parts[1]] = float(parts[2])
-    for s in _HMM_STATES:
-        emit[s].setdefault(None, -20.0)
-    return emit, trans, start
-
-
-def _derive_hmm(freqs: dict[str, int]):
-    """(emit, trans, start) from dictionary stats.
-
-    ``emit[state][char]`` is a smoothed log-probability; lookups for
-    unseen chars use the add-one floor ``emit[state][None]``. ``trans``
-    maps the 8 legal BMES edges to log-probabilities, ``start`` the B/S
-    sentence-initial states — the same shape ``_load_trained_hmm``
-    produces for corpus-trained tables."""
-    counts = {s: {} for s in ("B", "M", "E")}
-    len_mass_3plus = 0
-    total_mass = 0
-    for w, f in freqs.items():
-        counts["B"][w[0]] = counts["B"].get(w[0], 0) + f
-        counts["E"][w[-1]] = counts["E"].get(w[-1], 0) + f
-        for ch in w[1:-1]:
-            counts["M"][ch] = counts["M"].get(ch, 0) + f
-        total_mass += f
-        if len(w) >= 3:
-            len_mass_3plus += f
-    vocab = set()
-    for c in counts.values():
-        vocab.update(c)
-    v = max(len(vocab), 1)
-    emit: dict[str, dict] = {}
-    for state, c in counts.items():
-        total = sum(c.values()) + v + 1  # add-one over vocab (+1 floor)
-        emit[state] = {ch: _math.log(n + 1) - _math.log(total) for ch, n in c.items()}
-        emit[state][None] = -_math.log(total)
-    # S has no dictionary evidence (single chars are filtered out): uniform
-    # over the char vocab — ABOVE the unseen-char floor of B/M/E, so chars
-    # the dictionary never saw prefer staying single
-    emit["S"] = {None: -_math.log(v)}
-    # inside a word: continue (→M) with the dictionary's len≥3 mass
-    p_cont = min(max(len_mass_3plus / total_mass, 1e-6), 1 - 1e-6)
-    log_cont = _math.log(p_cont)
-    log_end = _math.log(1.0 - p_cont)
-    log_half = _math.log(0.5)  # E/S → B vs S: no inter-word evidence
-    trans = {
-        ("B", "M"): log_cont, ("M", "M"): log_cont,
-        ("B", "E"): log_end, ("M", "E"): log_end,
-        ("E", "B"): log_half, ("E", "S"): log_half,
-        ("S", "B"): log_half, ("S", "S"): log_half,
-    }
-    return emit, trans, {"B": log_half, "S": log_half}
-
-
-def _hmm_group(run: str, hmm) -> list[int]:
-    """Viterbi over BMES; returns word-end indices (exclusive) covering
-    ``run``. Transitions: B→{M,E}, M→{M,E}, E→{B,S}, S→{B,S}. ``hmm``
-    is the (emit, trans, start) triple from ``_derive_hmm``
-    (dictionary-derived) or ``_load_trained_hmm`` (corpus-trained)."""
-    emit, trans, start = hmm
-    n = len(run)
-
-    def e(state: str, ch: str) -> float:
-        table = emit[state]
-        return table.get(ch, table[None])
-
-    NEG = float("-inf")
-    # scores[state] for position i; backpointers per position
-    prev = {
-        "B": start["B"] + e("B", run[0]),
-        "S": start["S"] + e("S", run[0]),
-        "M": NEG,
-        "E": NEG,
-    }
-    back: list[dict[str, str]] = [{}]
-    for i in range(1, n):
-        ch = run[i]
-        cur: dict[str, float] = {}
-        bp: dict[str, str] = {}
-        for state, sources in (
-            ("B", (("E", trans[("E", "B")]), ("S", trans[("S", "B")]))),
-            ("M", (("B", trans[("B", "M")]), ("M", trans[("M", "M")]))),
-            ("E", (("B", trans[("B", "E")]), ("M", trans[("M", "E")]))),
-            ("S", (("E", trans[("E", "S")]), ("S", trans[("S", "S")]))),
-        ):
-            best, best_src = NEG, None
-            for src, t in sources:
-                score = prev[src] + t
-                if score > best:
-                    best, best_src = score, src
-            cur[state] = best + e(state, ch)
-            bp[state] = best_src
-        prev = cur
-        back.append(bp)
-    # path must end a word: final state E or S
-    state = "E" if prev["E"] >= prev["S"] else "S"
-    if prev[state] == NEG:
-        return list(range(1, n + 1))
-    states = [state]
-    for i in range(n - 1, 0, -1):
-        state = back[i][state]
-        states.append(state)
-    states.reverse()
-    return [i + 1 for i, s in enumerate(states) if s in ("E", "S")]
 
 
 def _emit_cjk_run(run: str, base: int, lang: str, out: list) -> None:
@@ -345,7 +171,7 @@ def _emit_cjk_run(run: str, base: int, lang: str, out: list) -> None:
         for k, ch in enumerate(run):
             out.append(_tok(ch, base + k, base + k + 1, False))
         return
-    logp, max_len, oov_logp, hmm = d
+    logp, max_len, oov_logp = d
     n = len(run)
     route = [0.0] * (n + 1)   # route[i] = best log-prob of run[i:]
     ends = [0] * n            # ends[i] = end of the first word on that path
@@ -361,37 +187,11 @@ def _emit_cjk_run(run: str, base: int, lang: str, out: list) -> None:
                 best, bestj = score, j
         route[i] = best
         ends[i] = bestj
-    use_hmm = _os.environ.get("KG_SEGMENT_OOV_HMM") == "1"
     i = 0
     while i < n:
         j = ends[i]
-        if use_hmm and j == i + 1 and not _ud.category(run[i]).startswith("P"):
-            # maximal span of single-char fallbacks (an OOV span no
-            # dictionary word covers): regroup with the BMES Viterbi
-            k = i
-            while (
-                k < n and ends[k] == k + 1
-                and not _ud.category(run[k]).startswith("P")
-            ):
-                k += 1
-            if k - i >= 2:
-                s = i
-                for rel_end in _hmm_group(run[i:k], hmm):
-                    e = i + rel_end
-                    out.append(_tok(run[s:e], base + s, base + e, False))
-                    s = e
-                i = k
-                continue
         out.append(_tok(run[i:j], base + i, base + j, False))
         i = j
-
-
-def _is_emoji(ch: str) -> bool:
-    cp = ord(ch)
-    for lo, hi in _EMOJI_RANGES:
-        if lo <= cp <= hi:
-            return True
-    return False
 
 
 # English clitic suffixes (spaCy-style exceptions, lowercased compare)
@@ -400,8 +200,6 @@ _EN_CLITICS = ("n't", "n’t", "'s", "’s", "'re", "’re", "'ve", "’ve",
 _ELISION_RE = re.compile(r"^([djlmnstc]['’]|qu['’])(?=\w)", re.IGNORECASE)
 _ELISION_LANGS = frozenset({"fr", "it", "ca", "lb"})
 _HYPHEN_SPLIT_RE = re.compile(r"(?<=[^\W\d_])(-|–|—)(?=[^\W\d_])")
-
-import unicodedata as _ud
 
 
 def is_punct_token(text: str) -> bool:
@@ -450,81 +248,59 @@ def _split_word_run(run: str, base: int, lang: str, out: list[tuple]) -> None:
 
 
 def _split_core(core: str, base: int, lang: str, out: list[tuple]) -> None:
-    """Emit tokens for a chunk core: CJK chars and emoji sequences become
-    their own tokens; remaining runs go through word-level rules."""
+    """Emit tokens for a chunk core: CJK runs go to the lattice, each
+    emoji sequence is one token, word runs go through word-level rules."""
     if core.isascii():  # fast path: ASCII has no CJK/emoji codepoints
         _split_word_run(core, base, lang, out)
         return
-    i, n = 0, len(core)
-    run_start = -1
-    while i < n:
-        ch = core[i]
-        if _is_cjk(ch):
-            if run_start >= 0:
-                _split_word_run(core[run_start:i], base + run_start, lang, out)
-                run_start = -1
-            j = i + 1
-            while j < n and _is_cjk(core[j]):
-                j += 1
-            _emit_cjk_run(core[i:j], base + i, lang, out)
-            i = j
-        elif _is_emoji(ch):
-            if run_start >= 0:
-                _split_word_run(core[run_start:i], base + run_start, lang, out)
-                run_start = -1
-            j = i + 1
-            # absorb modifiers / ZWJ-joined continuation
-            while j < n:
-                cp = ord(core[j])
-                if cp in _EMOJI_MODIFIERS or (_REGIONAL[0] <= cp <= _REGIONAL[1] and i == j - 1):
-                    j += 1
-                elif cp == _ZWJ and j + 1 < n and _is_emoji(core[j + 1]):
-                    j += 2
-                else:
-                    break
-            out.append(_tok(core[i:j], base + i, base + j, False))
-            i = j
+    for m in _RUN_RE.finditer(core):
+        s = m.start()
+        kind = m.lastindex
+        if kind == 1:
+            _emit_cjk_run(m[0], base + s, lang, out)
+        elif kind == 2:
+            out.append(_tok(m[0], base + s, base + m.end(), False))
         else:
-            if run_start < 0:
-                run_start = i
-            i += 1
-    if run_start >= 0:
-        _split_word_run(core[run_start:], base + run_start, lang, out)
+            _split_word_run(m[0], base + s, lang, out)
 
 
 def _refine_chunk(chunk: str, base: int, lang: str, out: list[tuple]) -> None:
+    """Tokens of one ``\\S+`` chunk. Open punctuation comes off the front
+    and close punctuation, a lone final ``.`` or a trailing dot run
+    (``...``) off the back, one token each; the core goes to
+    ``_split_core``. Walks indices, so a long affix run is linear."""
+    end = len(chunk)
     if _TOKEN_MATCH_RE.match(chunk):
-        out.append(_tok(chunk, base, base + len(chunk), False))
+        out.append(_tok(chunk, base, base + end, False))
         return
-    start, end = 0, len(chunk)
-    prefix_tokens: list[tuple] = []
+    start = 0
     while end - start > 1 and chunk[start] in _OPEN_PUNCT:
-        if chunk[start] in "#@" and _TOKEN_MATCH_RE.match(chunk[start:end]):
+        if chunk[start] in "#@" and _TOKEN_MATCH_RE.match(chunk, start, end):
             break
-        prefix_tokens.append(_tok(chunk[start], base + start, base + start + 1, False))
         start += 1
     suffix_tokens: list[tuple] = []
     while end - start > 1:
-        seg = chunk[start:end]
-        m = _ELLIPSIS_RE.search(seg)
-        if m and m.start() > 0:
-            s = start + m.start()
-            suffix_tokens.append(_tok(seg[m.start():], base + s, base + end, False))
-            end = s
-        elif chunk[end - 1] in _CLOSE_PUNCT:
-            suffix_tokens.append(_tok(chunk[end - 1], base + end - 1, base + end, False))
-            end -= 1
-        elif chunk[end - 1] == "." and "." not in chunk[start:end - 1]:
-            suffix_tokens.append(_tok(".", base + end - 1, base + end, False))
-            end -= 1
+        ch = chunk[end - 1]
+        if ch in _CLOSE_PUNCT:
+            cut = end - 1
+        elif ch == ".":
+            cut = end - 1
+            while cut > start and chunk[cut - 1] == ".":
+                cut -= 1
+            # a dot run of 2+ after the core is one token; a lone final
+            # dot splits off only when the core has no other dot (N.Y.)
+            if cut == start or (cut == end - 1 and chunk.find(".", start, cut) >= 0):
+                break
         else:
             break
-    core = chunk[start:end]
-    out.extend(prefix_tokens)
-    if _TOKEN_MATCH_RE.match(core):
-        out.append(_tok(core, base + start, base + end, False))
-    elif core:
-        _split_core(core, base + start, lang, out)
+        suffix_tokens.append(_tok(chunk[cut:end], base + cut, base + end, False))
+        end = cut
+    for i in range(start):
+        out.append(_tok(chunk[i], base + i, base + i + 1, False))
+    if _TOKEN_MATCH_RE.match(chunk, start, end):
+        out.append(_tok(chunk[start:end], base + start, base + end, False))
+    else:
+        _split_core(chunk[start:end], base + start, lang, out)
     out.extend(reversed(suffix_tokens))
 
 

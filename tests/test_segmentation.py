@@ -133,122 +133,8 @@ def test_korean_keyword_matches_inside_inflected_eojeol():
     assert "".join(doc_keys[ts:te]) == "서울"
 
 
-# --- dictionary-derived BMES HMM for OOV spans (KG_SEGMENT_OOV_HMM) ------
-
-def test_oov_hmm_off_by_default():
-    # 网民 ("netizen") is not a dictionary word: without the HMM the OOV
-    # span falls to char-level (reference-golden behavior)
+def test_oov_span_stays_char_level():
+    # 网民 ("netizen") is not a dictionary word: the OOV span falls to
+    # char-level (reference-golden behavior; jieba's OOV HMM is not
+    # replicated, SEMANTICS.md §3)
     assert texts("网民", "zh") == ["网", "民"]
-
-
-def test_oov_hmm_groups_dict_supported_compound(monkeypatch):
-    # with the crawl-mode flag, the BMES Viterbi groups 网民 because 网 is
-    # a strong word-BEGIN char (网络) and 民 a strong word-END char (人民)
-    # in the dictionary's positional statistics
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    assert texts("网民", "zh") == ["网民"]
-    # embedded in a sentence: dictionary words still win around the OOV span
-    toks = texts("网民都喜欢人工智能", "zh")
-    assert "网民" in toks and "人工智能" in toks
-
-
-def test_oov_hmm_leaves_unknown_chars_single(monkeypatch):
-    # chars the dictionary has never seen smooth BELOW the single-state
-    # floor: the classical-zh golden (traditional script, 19 tokens) is
-    # preserved even with the HMM enabled
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    assert len(texts("子曰：“學而不思則罔，思而不學則殆。”", "zh")) == 19
-
-
-def test_oov_hmm_offsets_stay_contiguous(monkeypatch):
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    s = "网民热议人工智能。期一会"
-    toks = tokenize_raw(s, "zh")
-    assert toks[0][1] == 0 and toks[-1][2] == len(s)
-    assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
-    assert "".join(t[0] for t in toks) == s
-
-
-def test_oov_hmm_dict_words_unchanged(monkeypatch):
-    # the HMM only touches spans the lattice left as single-char runs:
-    # dictionary segmentations are identical with the flag on
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    assert texts("我们在北京研究人工智能和互联网技术。", "zh") == [
-        "我们", "在", "北京", "研究", "人工智能", "和", "互联网", "技术", "。"
-    ]
-    assert texts("研究生命的起源", "zh") == ["研究", "生命", "的", "起源"]
-
-
-def test_oov_hmm_ja_th_runs_stay_wellformed(monkeypatch):
-    # the HMM is language-generic: ja/th OOV spans regroup from their own
-    # dicts' positional stats; offsets stay contiguous and dictionary
-    # segmentations are untouched
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    for s, lang in (("期一会。異体同心そうです", "ja"), ("ผมชอบกินข้าว", "th")):
-        toks = tokenize_raw(s, lang)
-        assert toks[0][1] == 0 and toks[-1][2] == len(s)
-        assert all(a[2] == b[1] for a, b in zip(toks, toks[1:]))
-        assert "".join(t[0] for t in toks) == s
-    assert texts("ผมชอบกินข้าว", "th") == ["ผม", "ชอบ", "กิน", "ข้าว"]
-
-
-# --- corpus-trained BMES parameter hook (KG_SEGMENT_DICT_DIR/<lang>_hmm.tsv)
-
-def test_trained_hmm_params_beat_derived(tmp_path, monkeypatch):
-    """The loadable-trained-params hook: 小红书 (a product name jieba's
-    corpus-trained HMM groups as one word) stays CHAR-LEVEL under the
-    dictionary-derived parameters (none of its chars carry positional
-    dictionary evidence), and groups once a trained emission table marks
-    小 as word-begin, 红 as middle, 书 as end — real corpus-trained
-    tables slot in where the derived fallback stops."""
-    import dss_plugin_nlp_analysis_spark.functions.tokenizer as tok
-
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-
-    # derived parameters: char-level (the 'beat' baseline)
-    monkeypatch.setattr(tok, "_SEG_DICT_CACHE", {})
-    assert texts("小红书", "zh") == ["小", "红", "书"]
-
-    (tmp_path / "zh_hmm.tsv").write_text(
-        "# corpus-trained BMES table (fixture)\n"
-        "emit B 小 -1.0\n"
-        "emit M 红 -1.0\n"
-        "emit E 书 -1.0\n"
-        "emit B * -12.0\n"
-        "emit M * -12.0\n"
-        "emit E * -12.0\n"
-        "emit S * -12.0\n"
-        "trans B M -0.2\n"
-        "trans M E -0.2\n",
-        encoding="utf-8",
-    )
-    monkeypatch.setenv("KG_SEGMENT_DICT_DIR", str(tmp_path))
-    monkeypatch.setattr(tok, "_SEG_DICT_CACHE", {})
-    assert texts("小红书", "zh") == ["小红书"]
-    # dictionary words are untouched: the lattice still wins where the
-    # dictionary has coverage; only OOV spans consult the trained table
-    assert texts("我们研究人工智能。", "zh") == ["我们", "研究", "人工智能", "。"]
-
-
-def test_trained_hmm_malformed_lines_ignored(tmp_path, monkeypatch):
-    # junk lines, illegal transitions and unknown states must not crash
-    # the loader or corrupt legal entries
-    import dss_plugin_nlp_analysis_spark.functions.tokenizer as tok
-
-    (tmp_path / "zh_hmm.tsv").write_text(
-        "emit B 网 -1.0\n"
-        "trans E M -0.1\n"        # illegal edge: ignored
-        "trans B M\n"             # too few fields: ignored
-        "emit X 网 -1.0\n"        # unknown state: ignored
-        "bogus line here\n"
-        "start B -0.5\n",
-        encoding="utf-8",
-    )
-    monkeypatch.setenv("KG_SEGMENT_DICT_DIR", str(tmp_path))
-    monkeypatch.setenv("KG_SEGMENT_OOV_HMM", "1")
-    monkeypatch.setattr(tok, "_SEG_DICT_CACHE", {})
-    toks = tokenize_raw("网民热议。", "zh")
-    assert "".join(t[0] for t in toks) == "网民热议。"
-    emit, trans, start = tok._load_trained_hmm(str(tmp_path / "zh_hmm.tsv"))
-    assert emit["B"]["网"] == -1.0 and ("E", "M") not in trans
-    assert start["B"] == -0.5
