@@ -12,9 +12,10 @@ is implementable from format specs alone, in pure Python + numpy:
   five scanline filters — stdlib zlib inflates IDAT) and GIF87a/89a
   first frames (pure-Python LZW, interlace supported) — returning an
   ``(h, w, 3)`` uint8 array.
-- ``resize_nearest`` + ``encode_ppm``/``encode_bmp``: deterministic
-  nearest-neighbor resampling and re-encode, so ``resize_images`` is a
-  real transform for decodable payloads.
+- ``resize_nearest``: deterministic nearest-neighbor resampling (the
+  ``image_dhash`` downscale).
+- ``encode_png``/``encode_ppm``/``encode_pgm``/``encode_bmp``: encoders
+  that build decoder inputs (test fixtures).
 
 JPEG is now decoded here too: a pure-Python ITU-T.81 baseline /
 extended-sequential implementation (canonical Huffman entropy decode,

@@ -350,15 +350,12 @@ def ttl_first_seen(
     key_col: str,
     gap: str = "1 hour",
 ) -> DataFrame:
-    """Batch replication of the streaming TTL-dedup horizon semantics
-    (``streaming/stateful_dedup.streaming_exact_dedup`` with a watermark):
-    one emitted row per (key, activity session), where a session extends
-    while consecutive same-key sightings are within ``gap`` of each other
-    and a sighting arriving more than ``gap`` after the previous one
-    starts a new session — exactly the stream's "fingerprint evicted
-    after the horizon, re-emits" behavior, with the stream's sliding TTL
-    (every suppressed duplicate extends retention) mapping to the session
-    extending on every event.
+    """TTL dedup horizon in batch: one emitted row per (key, activity
+    session), where a session extends while consecutive same-key
+    sightings are within ``gap`` of each other and a sighting arriving
+    more than ``gap`` after the previous one starts a new session — a
+    fingerprint is forgotten after the horizon and re-emits, and every
+    suppressed duplicate extends its retention (a sliding TTL).
 
     Implemented with Spark's NATIVE ``session_window`` aggregation —
     sessions merge via partial aggregation (UpdatingSessions /

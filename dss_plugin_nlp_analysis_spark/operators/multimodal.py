@@ -7,13 +7,12 @@ the sandbox (functions/imagecodec.py, dependency-free):
 
 - metadata (``decode_image_meta``): REAL header parsing for PNG, GIF,
   JPEG, BMP and PPM/PGM, plus the deterministic fake wire format;
-- pixels (``resize_images``/``extract_features``/``decode_channel_sums``):
+- pixels (``extract_features``/``decode_channel_sums``/``image_dhash``):
   REAL decode for every container — BMP 24/32-bit BI_RGB, PPM/PGM
   (binary and ASCII), PNG (stdlib-zlib inflate + spec un-filtering),
   GIF (pure-Python LZW) and baseline/extended-sequential JPEG
   (pure-Python ITU-T.81 Huffman + IDCT, 4:4:4/4:2:2/4:2:0, restart
-  markers) — plus nearest-neighbor resample and same-container
-  re-encode where an encoder exists (BMP/PPM/PGM/PNG).
+  markers).
 
 No library seam remains for the mainstream web-image path. The only
 shapes that still raise by name are genuinely rarer container variants
@@ -46,8 +45,8 @@ from dss_plugin_nlp_analysis_spark.functions import imagecodec
 from dss_plugin_nlp_analysis_spark.operators.dedup import _bucket_pairs
 
 __all__ = [
-    "fake_image_binary", "decode_image_meta", "resize_images",
-    "extract_features", "frame_sample_plan", "decode_channel_sums",
+    "fake_image_binary", "decode_image_meta",
+    "extract_features", "decode_channel_sums",
     "decode_audio_meta", "audio_features", "decode_video_meta",
     "sample_video_frames",
     "image_dhash",
@@ -109,59 +108,6 @@ def decode_image_meta(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
             )
 
     return df.select(id_col, bin_col).mapInPandas(decode, META_SCHEMA)
-
-
-def _resize_one(buf: bytes, w: int, h: int) -> bytes:
-    """The resize seam. Fake wire format: header rewrite + proportional
-    payload scaling (area ratio, min 1 byte for non-empty payloads).
-    Real containers: actual decode (imagecodec.decode_rgb — all six
-    formats) + nearest-neighbor resample, re-encoded in the same
-    container where an encoder exists (BMP/PPM/PGM/PNG; GIF/JPEG
-    re-encode as PNG, lossless and dimension-preserving)."""
-    b = bytes(buf)
-    if b.startswith(b"IMG|"):
-        ow, oh, fmt, _n = _decode_header(b)
-        payload = b.split(b"|", 4)[4]
-        if not payload or not ow * oh:
-            resized = payload
-        else:
-            new_len = max(1, (len(payload) * w * h) // (ow * oh))
-            resized = (payload * (new_len // len(payload) + 1))[:new_len]
-        return b"IMG|%d|%d|%s|" % (w, h, fmt.encode()) + resized
-    fmt = (imagecodec.sniff(b) or ("?",))[0]
-    arr = imagecodec.resize_nearest(imagecodec.decode_rgb(b), w, h)
-    if fmt == "bmp":
-        return imagecodec.encode_bmp(arr)
-    if fmt == "pgm":
-        return imagecodec.encode_pgm(arr)
-    if fmt in ("png", "gif", "jpeg"):
-        # same container for PNG; GIF/JPEG re-encode lossless as PNG (no
-        # palette/entropy encoder here — dimensions and pixels preserved)
-        return imagecodec.encode_png(arr)
-    return imagecodec.encode_ppm(arr)
-
-
-def resize_images(
-    df: DataFrame, id_col: str, bin_col: str, width: int, height: int
-) -> DataFrame:
-    """mapInPandas resize: binary → binary at the target dimensions.
-
-    Real nearest-neighbor pixel resampling for every decodable container
-    (``_resize_one`` — all six formats) and the deterministic
-    header/payload rewrite for the fake format. Returns (id, image)
-    with the same column names so resize stages chain.
-    """
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].values,
-                    "image": [_resize_one(b, width, height) for b in pdf[bin_col]],
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(resize, "id long, image binary")
 
 
 def extract_features(
@@ -252,17 +198,6 @@ def decode_channel_sums(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
             )
 
     return df.select(id_col, bin_col).mapInPandas(sums, CHANNEL_SUMS_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, id_col: str, n_frames_col: str, every: int = 10) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled frame index —
-    pure Catalyst (sequence + explode), no decode needed for planning."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col(n_frames_col) - 1, F.lit(0)), F.lit(every))
-        ).alias("frame_idx"),
-    )
 
 
 # ------------------------------------------------------------ audio/video
@@ -390,9 +325,8 @@ def sample_video_frames(
     stream (functions/audiocodec.iter_avi_frames), keep every
     ``every``-th frame, entropy-decode its MJPEG payload with the
     pure-Python JPEG decoder and emit integer per-channel pixel sums —
-    one output row per sampled frame. This is ``frame_sample_plan``
-    upgraded from a plan to an execution: container walk → frame select
-    → pixel decode, all inside one mapInPandas pass (decode cost stays
+    one output row per sampled frame. Container walk → frame select
+    → pixel decode run inside one mapInPandas pass (decode cost stays
     on the executors, proportional to frames KEPT, not frames stored —
     the property that matters when the stored stream is hours long).
     Non-MJPEG payloads raise inside decode_rgb, by name."""

@@ -33,7 +33,7 @@ argmax. No collects, no cross joins, no per-URL Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 

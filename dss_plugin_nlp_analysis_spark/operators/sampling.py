@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["sample_hash", "deterministic_sample", "stratified_sample", "group_capped_sample", "corpus_mixture", "assign_splits"]
+__all__ = ["sample_hash", "stratified_sample", "group_capped_sample", "corpus_mixture", "assign_splits"]
 
 _SPACE = 1 << 60
 
@@ -34,13 +34,6 @@ def _threshold(fraction: float) -> int:
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return int(fraction * _SPACE)
-
-
-def deterministic_sample(
-    df: DataFrame, id_col: str, fraction: float, seed: str = ""
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, decided per row by ``md5(seed|id)``."""
-    return df.where(sample_hash(F.col(id_col), seed) < F.lit(_threshold(fraction)))
 
 
 def stratified_sample(
@@ -242,7 +235,7 @@ def assign_splits(
     """Deterministic train/validation/test assignment: every row gets
     exactly one split label, decided by where ``md5(seed|id)`` lands in
     [0, 2^60) partitioned by cumulative fraction thresholds — the same
-    engine-portable hash as ``deterministic_sample``, so the assignment
+    engine-portable hash as ``sample_hash``, so the assignment
     is reproducible on any engine, stable under repartitioning/retries,
     and (critically for decontamination) a pure function of the id: the
     same document can never drift between train and test across runs or

@@ -14,8 +14,8 @@ row in the same Python pass. The reference's per-document "aggregations"
 groupBy/pivot and the plan no shuffle (the A3 pivot's category universe is
 ontology-known and becomes one tag array per category). The JVM side is an
 explode or a struct-field projection — no interpreted higher-order
-functions. ``kg.build_triples`` and ``streaming.stream_mention_rate`` run
-their own emitters through the same ``doc_udf``.
+functions. ``kg.build_triples`` runs its own emitter through the same
+``doc_udf``, for batch and streaming input alike.
 
 Reference parity map:
 - extraction      → ontology_tagger.py:94-137, sentence_splitter.py:46-118,

@@ -22,25 +22,10 @@ from ..functions.textnorm import clean_linebreaks
 
 __all__ = [
     "clean_linebreaks_col",
-    "clean_text_rows",
     "split_sentences_udf",
     "extract_text_udf",
     "chunk_documents",
 ]
-
-
-def clean_text_rows(df, columns: list[str]):
-    """P7 — generic text-column cleaner (reference
-    utils/cleaning_utils.py:43-57, unused by the recipe path): strip each
-    column, empty → NULL, drop rows where any cleaned column is NULL."""
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.nullif(F.trim(F.col(c)), F.lit("")))
-    cond = None
-    for c in columns:
-        cnd = F.col(c).isNotNull()
-        cond = cnd if cond is None else (cond & cnd)
-    return out.where(cond)
 
 
 def clean_linebreaks_col(col: Column) -> Column:

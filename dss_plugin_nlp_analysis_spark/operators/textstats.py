@@ -2,9 +2,8 @@
 scoring, language-marker ID, document fingerprints.
 
 All native Catalyst expressions (SQL-reproducible for the DuckDB oracle).
-A richer char-trigram language identifier lives in ``functions.langid``
-(UDF path, pytest-verified); the marker-word variant here is the
-shuffle-free native approximation that scales to 100 TB as a pure map.
+Language ID is the marker-word variant: a shuffle-free native map that
+scales to 100 TB.
 """
 
 from __future__ import annotations

@@ -5,10 +5,6 @@ their jars on the classpath"), so the Iceberg path is config-gated, not
 import-gated: pass ``format='iceberg'`` only on a cluster whose session has
 ``spark.sql.catalog.*`` configured. Everything else in the engine talks to
 this module, so swapping the storage layer is a one-line change.
-
-Column descriptions (reference S5, utils/dkulib_io_utils.py:5-37) are
-attached as StructField metadata ``{"comment": ...}`` — the parquet/Iceberg
-writers both persist it.
 """
 
 from __future__ import annotations
@@ -16,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["read_table", "write_table", "with_column_comments"]
+__all__ = ["read_table", "write_table"]
 
 
 def read_table(spark: SparkSession, location: str, fmt: str = "parquet") -> DataFrame:
@@ -42,13 +38,3 @@ def write_table(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(location)
-
-
-def with_column_comments(df: DataFrame, comments: dict[str, str]) -> DataFrame:
-    """Attach per-column descriptions as schema metadata (reference writes
-    them as dataset metadata after the data — recipe.py:39-42)."""
-    out = df
-    for col, comment in comments.items():
-        if col in out.columns:
-            out = out.withColumn(col, F.col(col).alias(col, metadata={"comment": comment}))
-    return out

@@ -18,7 +18,7 @@ Extraction contract (frozen; Java-regex ∩ RE2 like sources/warc.py):
   ``<lastmod>…</lastmod>`` body or NULL (kept as the raw string; date
   typing is downstream — kg.normalize_literals).
 - ``<sitemap>`` index entries are intentionally NOT matched by the
-  ``<url>`` island regex; run ``parse_sitemap_index`` for those.
+  ``<url>`` island regex.
 
 Pure per-row map + explode: zero shuffle at any corpus size.
 """
@@ -28,19 +28,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["parse_sitemap", "parse_sitemap_index"]
+__all__ = ["parse_sitemap"]
 
 _URL_ENTRY = r"(?s)<url>(.*?)</url>"
-_SITEMAP_ENTRY = r"(?s)<sitemap>(.*?)</sitemap>"
 _LOC = r"(?s)<loc>(.*?)</loc>"
 _LASTMOD = r"(?s)<lastmod>(.*?)</lastmod>"
 
 
-def _parse_entries(
-    df: DataFrame, id_col: str, xml_col: str, entry_re: str
-) -> DataFrame:
+def parse_sitemap(df: DataFrame, id_col: str, xml_col: str) -> DataFrame:
+    """(id, loc, lastmod) per ``<url>`` entry; see module contract."""
     ent = F.regexp_extract_all(
-        F.coalesce(F.col(xml_col), F.lit("")), F.lit(entry_re), 1
+        F.coalesce(F.col(xml_col), F.lit("")), F.lit(_URL_ENTRY), 1
     )
     loc = F.regexp_extract(F.col("entry"), _LOC, 1)
     lastmod = F.regexp_extract(F.col("entry"), _LASTMOD, 1)
@@ -53,13 +51,3 @@ def _parse_entries(
         )
         .where(F.col("loc") != "")
     )
-
-
-def parse_sitemap(df: DataFrame, id_col: str, xml_col: str) -> DataFrame:
-    """(id, loc, lastmod) per ``<url>`` entry; see module contract."""
-    return _parse_entries(df, id_col, xml_col, _URL_ENTRY)
-
-
-def parse_sitemap_index(df: DataFrame, id_col: str, xml_col: str) -> DataFrame:
-    """(id, loc, lastmod) per ``<sitemap>`` child-sitemap entry."""
-    return _parse_entries(df, id_col, xml_col, _SITEMAP_ENTRY)

@@ -1,9 +1,9 @@
-"""Config/validation surface (S6) + column-metadata sink (S5) +
-lemmatization golden pairs (reference test_lemmatization.py)."""
+"""Job parameter checks of ``tag_documents`` (S6) + table IO (S1/S4) +
+tagging column metadata (S5) + lemmatization golden pairs (reference
+test_lemmatization.py)."""
 
 import pytest
 
-from dss_plugin_nlp_analysis_spark.config import ConfigError, KGJobConfig
 from dss_plugin_nlp_analysis_spark.operators.ontology import TagOptions
 
 
@@ -16,49 +16,20 @@ def frames(spark):
     return docs, onto
 
 
-def test_valid_config_runs(frames):
-    docs, onto = frames
-    out = KGJobConfig(language_column="lang").run(docs, onto)
-    assert out.count() == 1
-
-
-def test_missing_text_column(frames):
-    docs, onto = frames
-    with pytest.raises(ConfigError, match="column 'body' does not exist"):
-        KGJobConfig(text_column="body").validate(docs, onto)
-
-
-def test_missing_ontology_column(frames):
-    docs, onto = frames
-    with pytest.raises(ConfigError, match="ontology dataset"):
-        KGJobConfig(keyword_column="kw").validate(docs, onto)
-
-
-def test_no_language_at_all(frames):
-    docs, onto = frames
-    with pytest.raises(ConfigError, match="language"):
-        KGJobConfig(language=None, language_column=None).validate(docs, onto)
-
-
 def test_unsupported_language(frames):
+    from dss_plugin_nlp_analysis_spark.operators.tagger import tag_documents
+
     docs, onto = frames
-    with pytest.raises(ConfigError, match="Unsupported language"):
-        KGJobConfig(language="xx", language_column=None).validate(docs, onto)
+    with pytest.raises(ValueError, match="Unsupported language"):
+        tag_documents(docs, onto, lang_col=None, language="xx")
 
 
 def test_bad_output_format(frames):
+    from dss_plugin_nlp_analysis_spark.operators.tagger import tag_documents
+
     docs, onto = frames
-    with pytest.raises(ConfigError, match="Invalid output format"):
-        KGJobConfig(output_format="three_rows").validate(docs, onto)
-
-
-def test_column_comments_metadata(spark):
-    from dss_plugin_nlp_analysis_spark.sources.catalog import with_column_comments
-
-    df = spark.createDataFrame([(1, "x")], "id long, tag string")
-    out = with_column_comments(df, {"tag": "Assigned tag"})
-    field = [f for f in out.schema.fields if f.name == "tag"][0]
-    assert field.metadata["comment"] == "Assigned tag"
+    with pytest.raises(ValueError, match="output_format 'three_rows'"):
+        tag_documents(docs, onto, output_format="three_rows")
 
 
 def test_catalog_roundtrip(spark, tmp_path):

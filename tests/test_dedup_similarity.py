@@ -14,7 +14,6 @@ from dss_plugin_nlp_analysis_spark.operators.dedup import (
 from dss_plugin_nlp_analysis_spark.operators.multimodal import (
     decode_image_meta,
     fake_image_binary,
-    frame_sample_plan,
 )
 from dss_plugin_nlp_analysis_spark.operators.similarity import cosine_topk, lsh_ann_topk
 from dss_plugin_nlp_analysis_spark.operators.textstats import marker_langid, quality_features
@@ -136,15 +135,6 @@ def test_marker_langid(spark):
     assert rows == {1: "en", 2: "fr", 3: "es", 4: "de", 5: "xx"}
 
 
-def test_trigram_langid_kernel():
-    from dss_plugin_nlp_analysis_spark.functions.langid import detect_language
-
-    assert detect_language("the engine is running and the data is flowing") == "en"
-    assert detect_language("le moteur de la machine est dans les données") == "fr"
-    assert detect_language("子曰學而不思則罔思而不學則殆") == "zh"
-    assert detect_language("") == "xx"
-
-
 def test_multimodal_decode_roundtrip(spark):
     docs = spark.createDataFrame([(1, 320, "payload-bytes-here")], "id long, w int, p string")
     df = docs.select("id", fake_image_binary(F.col("w"), F.lit(240), F.col("p")).alias("img"))
@@ -158,13 +148,6 @@ def test_multimodal_decode_stub_raises_on_real_data(spark):
 
     with pytest.raises(Exception, match="NotImplementedError|stubbed"):
         decode_image_meta(df, "id", "img").collect()
-
-
-def test_frame_sample_plan(spark):
-    vids = spark.createDataFrame([(1, 25), (2, 3)], "id long, n_frames int")
-    rows = frame_sample_plan(vids, "id", "n_frames", every=10).collect()
-    got = sorted((r["id"], r["frame_idx"]) for r in rows)
-    assert got == [(1, 0), (1, 10), (1, 20), (2, 0)]
 
 
 def test_cosine_dup_pairs_exact_and_lsh(spark):
@@ -187,11 +170,8 @@ def test_cosine_dup_pairs_exact_and_lsh(spark):
     assert lsh == exact
 
 
-def test_resize_and_feature_extract_plumbing(spark):
-    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
-        extract_features,
-        resize_images,
-    )
+def test_feature_extract_plumbing(spark):
+    from dss_plugin_nlp_analysis_spark.operators.multimodal import extract_features
     from dss_plugin_nlp_analysis_spark.operators.similarity import cosine_dup_pairs
 
     imgs = spark.range(8).select(
@@ -204,11 +184,6 @@ def test_resize_and_feature_extract_plumbing(spark):
             ),
         ).alias("image"),
     )
-    # resize: header dims rewritten, payload scaled by area ratio, chainable
-    small = resize_images(imgs, "id", "image", 320, 240)
-    meta = {r["id"]: (r["width"], r["height"]) for r in
-            decode_image_meta(small, "id", "image").collect()}
-    assert all(wh == (320, 240) for wh in meta.values())
     # feature extraction: deterministic embeddings; duplicate payloads give
     # identical vectors, which the embedding dedup path then finds
     feats = extract_features(imgs, "id", "image", dim=16)
@@ -217,10 +192,6 @@ def test_resize_and_feature_extract_plumbing(spark):
         use_lsh=False,
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in dups} == {(0, 1)}
-    # real-codec seam still raises for non-fake payloads
-    bad = spark.createDataFrame([(1, bytearray(b"JPEGnotfake"))], "id long, image binary")
-    with pytest.raises(Exception, match="NotImplementedError|stubbed"):
-        resize_images(bad, "id", "image", 10, 10).collect()
 
 
 def test_cluster_dedup_collapses_transitive_chains(spark):

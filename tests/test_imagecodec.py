@@ -165,21 +165,6 @@ def test_decode_image_meta_real_formats(spark):
     assert (rows[4]["width"], rows[4]["fmt"], rows[4]["payload_bytes"]) == (10, "raw", 3)
 
 
-def test_resize_images_real_bmp(spark):
-    from dss_plugin_nlp_analysis_spark.operators.multimodal import (
-        decode_image_meta,
-        resize_images,
-    )
-
-    a = _arr(8, 8, seed=5)
-    df = spark.createDataFrame([(1, encode_bmp(a))], "id long, img binary")
-    out = resize_images(df, "id", "img", 4, 2)
-    meta = decode_image_meta(out, "id", "image").collect()[0]
-    assert (meta["width"], meta["height"], meta["fmt"]) == (4, 2, "bmp")
-    got = decode_rgb(out.collect()[0]["image"])
-    assert np.array_equal(got, resize_nearest(a, 4, 2))
-
-
 def test_extract_features_real_pixels(spark):
     from dss_plugin_nlp_analysis_spark.operators.multimodal import extract_features
 
@@ -549,15 +534,6 @@ def test_jpeg_422_sampling_decodes():
 def test_jpeg_sniff_encoder_output():
     buf = encode_jpeg(_arr(9, 14), quality=80)
     assert sniff(buf) == ("jpeg", 14, 9)
-
-
-def test_jpeg_resize_reencodes_as_png():
-    from dss_plugin_nlp_analysis_spark.operators.multimodal import _resize_one
-
-    a = np.full((8, 8, 3), 90, np.uint8)
-    resized = _resize_one(encode_jpeg(a, quality=50), 4, 4)
-    assert sniff(resized) == ("png", 4, 4)
-    assert (decode_rgb(resized) == _solid_expected(90)).all()
 
 
 def test_jpeg_forged_dimensions_fail_fast():

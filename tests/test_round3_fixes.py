@@ -4,8 +4,6 @@
   superseded round files deleted) — durability on a real cluster.
 - convergence detected without an extra old-vs-new label join.
 - exploded_shingles is one projection (no union → source scanned once).
-- streaming dedup with event-time TTL: state bounded by the watermark
-  horizon; fingerprints re-appearing past the horizon re-emit.
 """
 
 from __future__ import annotations
@@ -158,115 +156,6 @@ def test_exploded_shingles_single_scan(spark):
     assert rows == [(1, "a b c"), (1, "b c d"), (2, "x y"), (3, ""), (4, "")]
 
 
-def test_streaming_dedup_ttl_bounds_state(spark, tmp_path):
-    """Micro-batches with advancing event time and a 5-minute watermark
-    delay. The watermark lags one batch (it is derived from the PREVIOUS
-    batch's max event time), so the past-horizon repeat arrives two batches
-    after the event time has moved on:
-
-    - an in-horizon repeat stays suppressed (exact within the horizon)
-    - a repeat arriving after the watermark passed its first sighting
-      re-emits — proof the fingerprint was EVICTED from state (TTL), which
-      the unbounded NoTimeout mode would have suppressed forever
-    """
-    from dss_plugin_nlp_analysis_spark.streaming.stateful_dedup import (
-        streaming_exact_dedup,
-    )
-
-    src = str(tmp_path / "src")
-    schema = "id long, text string, ts timestamp"
-    for batch in (
-        [(1, "alpha beta", "2026-01-01 10:00:00"), (2, "gamma delta", "2026-01-01 10:00:00")],
-        # in-horizon repeat of id 2's text (wm = 09:55): suppressed
-        [(3, "gamma delta", "2026-01-01 10:03:00")],
-        # advances max event time to 10:40 (wm while processing = 09:58)
-        [(5, "epsilon", "2026-01-01 10:40:00")],
-        # wm is now 10:35 > 10:00 -> id 1's fingerprint was evicted, so the
-        # repeat re-emits; id 6 is plain new data
-        [(4, "alpha beta", "2026-01-01 10:45:00"), (6, "zeta", "2026-01-01 10:45:00")],
-        # wm is now 10:40: id 7 is late-beyond-horizon — Spark's stateful
-        # late-event filter discards it before the state function runs
-        # (the documented late-data contract); the raw compactor recovers
-        # it in the follow-up test below
-        [(7, "omega unique", "2026-01-01 10:00:00")],
-    ):
-        spark.createDataFrame(
-            [(i, t, __import__("datetime").datetime.fromisoformat(s)) for i, t, s in batch],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    deduped = streaming_exact_dedup(
-        stream, "id", "text", ts_col="ts", watermark="5 minutes"
-    )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_ttl_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    ids = sorted(
-        r["id"] for r in spark.sql("SELECT id FROM dedup_ttl_out").collect()
-    )
-    # 1,2 first-seen; 3 suppressed (in-horizon dup of 2); 5 new; 4 re-emitted
-    # (dup of 1 but past the watermark horizon -> state was evicted); 6 new;
-    # 7 late-beyond-horizon -> DISCARDED by Spark's stateful late-event
-    # filter (the documented contract — recovery belongs to the raw-archive
-    # compactor, exercised in test_late_rows_..._recovered_by_raw_compactor)
-    assert ids == [1, 2, 4, 5, 6], ids
-
-    # the unique late document really is absent from the stream sink even
-    # though its text never appeared before — the data-loss mode the raw
-    # compactor exists to close
-    assert 7 not in ids
-
-
-def test_late_rows_are_dropped_by_spark_and_recovered_by_raw_compactor(
-    spark, tmp_path
-):
-    """The lambda split's completeness half: a late-beyond-horizon UNIQUE
-    document is discarded by the stream (Spark's stateful late-event
-    filter), but compact_raw_snapshot over the durable raw archive
-    recovers it — exact first-seen including late arrivals."""
-    import datetime
-
-    from dss_plugin_nlp_analysis_spark.operators.dedup import fingerprint
-    from dss_plugin_nlp_analysis_spark.streaming.compaction import (
-        compact_raw_snapshot,
-        latest_snapshot,
-    )
-
-    raw, snaps = str(tmp_path / "raw"), str(tmp_path / "snaps")
-    schema = "id long, text string, ts timestamp"
-    rows = [
-        (1, "alpha beta", "2026-01-01 10:00:00"),
-        (5, "epsilon", "2026-01-01 10:40:00"),
-        (4, "alpha beta", "2026-01-01 10:45:00"),   # dup of 1
-        (7, "omega unique", "2026-01-01 10:00:00"), # late in the stream
-    ]
-    spark.createDataFrame(
-        [(i, t, datetime.datetime.fromisoformat(s)) for i, t, s in rows], schema
-    ).write.mode("overwrite").parquet(raw)
-
-    path = compact_raw_snapshot(spark, raw, snaps, "id", "text", as_of=1)
-    snap = {r["id"]: r["fingerprint"] for r in latest_snapshot(spark, snaps).collect()}
-    # one row per distinct text, smallest id wins — and 7 IS present
-    assert sorted(snap) == [1, 5, 7]
-    want_fp = spark.createDataFrame([("omega unique",)], "t string").select(
-        fingerprint(F.col("t")).alias("fp")
-    ).first()["fp"]
-    assert snap[7] == want_fp
-    # idempotent re-run: same as_of -> same path
-    assert compact_raw_snapshot(spark, raw, snaps, "id", "text", as_of=1) == path
-
-
 def test_repetition_features_values_and_maponly_plan(spark):
     from dss_plugin_nlp_analysis_spark.operators.textstats import (
         repetition_features,
@@ -387,84 +276,3 @@ def test_lemmatized_tagging_matches_regular_inflection_end_to_end(spark):
     out2 = tag_documents(docs, onto, languages=["es"]).collect()
     by_doc2 = {r["doc_id"]: r["tag"] for r in out2}
     assert by_doc2[0] is None and by_doc2[1] == "song_tag"
-
-
-def test_streaming_dedup_ttl_eviction_is_exact_within_horizon():
-    """Pure-function check of the eviction rule the stateful op applies."""
-    from dss_plugin_nlp_analysis_spark.streaming.stateful_dedup import (
-        _evict_expired,
-    )
-
-    seen = {"a": 100_000, "b": 200_000, "c": 300_000}
-    kept = _evict_expired(seen, watermark_ms=200_000)
-    # strictly-older-than-watermark entries go; the boundary entry stays
-    assert kept == {"b": 200_000, "c": 300_000}
-
-
-def test_stream_dedup_compactor_end_to_end(spark, tmp_path):
-    """Lambda-split wiring: TTL stream (bounded state, may re-emit past the
-    horizon) -> epoch-partitioned sink -> batch compactor snapshot that is
-    whole-corpus exact. Same fixture as the TTL test: id 4 re-emits id 1's
-    fingerprint after eviction, so the SINK holds that fingerprint twice
-    and only the compactor restores one-row-per-fingerprint."""
-    import datetime
-
-    from dss_plugin_nlp_analysis_spark.streaming.compaction import (
-        compact_dedup_snapshot,
-        latest_snapshot,
-    )
-    from dss_plugin_nlp_analysis_spark.streaming.stateful_dedup import (
-        streaming_exact_dedup,
-    )
-    from dss_plugin_nlp_analysis_spark.streaming.stream_tagger import (
-        run_stream_to_parquet,
-        write_epoch,
-    )
-
-    src, sink, snaps = (str(tmp_path / d) for d in ("src", "sink", "snaps"))
-    schema = "id long, text string, ts timestamp"
-    for batch in (
-        [(1, "alpha beta", "2026-01-01 10:00:00"), (2, "gamma delta", "2026-01-01 10:00:00")],
-        [(3, "gamma delta", "2026-01-01 10:03:00")],   # in-horizon dup: suppressed
-        [(5, "epsilon", "2026-01-01 10:40:00")],       # advances the watermark
-        [(4, "alpha beta", "2026-01-01 10:45:00"), (6, "zeta", "2026-01-01 10:45:00")],
-    ):
-        spark.createDataFrame(
-            [(i, t, datetime.datetime.fromisoformat(s)) for i, t, s in batch], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    deduped = streaming_exact_dedup(
-        stream, "id", "text", ts_col="ts", watermark="5 minutes"
-    )
-    q = run_stream_to_parquet(deduped, sink, str(tmp_path / "ckpt"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # the sink really does hold id 1's fingerprint twice (ids 1 and 4)
-    raw = spark.read.parquet(sink)
-    assert sorted(r["id"] for r in raw.collect()) == [1, 2, 4, 5, 6]
-
-    path1 = compact_dedup_snapshot(spark, sink, snaps)
-    snap = {r["id"]: r["fingerprint"] for r in spark.read.parquet(path1).collect()}
-    # one row per fingerprint, keeping the FIRST sighting (id 1, not 4)
-    assert sorted(snap) == [1, 2, 5, 6]
-    assert len(set(snap.values())) == len(snap)
-
-    # idempotent: same sink state -> same snapshot path, same rows
-    assert compact_dedup_snapshot(spark, sink, snaps) == path1
-    assert latest_snapshot(spark, snaps).count() == 4
-
-    # sink grows a later epoch with yet another re-emit of 'alpha beta':
-    # a fresh compaction writes a NEW snapshot and latest_snapshot serves it
-    late = spark.createDataFrame(
-        [(9, snap[1], False)], "id long, fingerprint string, late boolean"
-    )
-    write_epoch(late, 99, sink)
-    path2 = compact_dedup_snapshot(spark, sink, snaps)
-    assert path2 != path1 and path2.endswith("_99")
-    assert sorted(r["id"] for r in latest_snapshot(spark, snaps).collect()) == [1, 2, 5, 6]

@@ -185,10 +185,7 @@ class TestResolveCanonical:
 
 class TestParseSitemap:
     def test_entries_fields_and_invalid(self, spark):
-        from dss_plugin_nlp_analysis_spark.sources.sitemap import (
-            parse_sitemap,
-            parse_sitemap_index,
-        )
+        from dss_plugin_nlp_analysis_spark.sources.sitemap import parse_sitemap
 
         xml = (
             "<urlset>"
@@ -208,8 +205,6 @@ class TestParseSitemap:
             (1, "https://a.example/1", "2026-01-02"),
             (1, "https://a.example/2", None),
         ]
-        idx = [(r.id, r.loc) for r in parse_sitemap_index(df, "id", "xml").collect()]
-        assert idx == [(1, "https://a.example/s.xml")]
 
     def test_zero_shuffle(self, spark):
         from dss_plugin_nlp_analysis_spark.sources.sitemap import parse_sitemap

@@ -3,33 +3,35 @@
 import pytest
 from pyspark.sql import functions as F
 
-from dss_plugin_nlp_analysis_spark.operators.sampling import (
-    deterministic_sample,
-    stratified_sample,
-)
+from dss_plugin_nlp_analysis_spark.operators.sampling import stratified_sample
+
+
+def _sample(df, fraction, seed=""):
+    """One stratum: every row is kept with ``default_fraction``."""
+    one = df.withColumn("stratum", F.lit("all"))
+    return stratified_sample(one, "doc_id", "stratum", {}, default_fraction=fraction, seed=seed)
 
 
 def test_deterministic_sample_reproducible_and_partition_stable(spark):
     df = spark.range(2000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in deterministic_sample(df, "doc_id", 0.3, seed="s").collect()}
-    b = {r["doc_id"] for r in
-         deterministic_sample(df.repartition(7), "doc_id", 0.3, seed="s").collect()}
+    a = {r["doc_id"] for r in _sample(df, 0.3, seed="s").collect()}
+    b = {r["doc_id"] for r in _sample(df.repartition(7), 0.3, seed="s").collect()}
     assert a == b                      # stable under repartitioning
     assert 0.2 < len(a) / 2000 < 0.4   # ~fraction
     # different seeds give (near-)independent samples
-    c = {r["doc_id"] for r in deterministic_sample(df, "doc_id", 0.3, seed="t").collect()}
+    c = {r["doc_id"] for r in _sample(df, 0.3, seed="t").collect()}
     assert a != c
     # nested property: a 0.1 sample is a subset of the 0.3 sample (same seed)
-    d = {r["doc_id"] for r in deterministic_sample(df, "doc_id", 0.1, seed="s").collect()}
+    d = {r["doc_id"] for r in _sample(df, 0.1, seed="s").collect()}
     assert d <= a
 
 
 def test_deterministic_sample_fraction_bounds(spark):
     df = spark.range(10).withColumnRenamed("id", "doc_id")
     with pytest.raises(ValueError):
-        deterministic_sample(df, "doc_id", 1.5)
-    assert deterministic_sample(df, "doc_id", 0.0).count() == 0
-    assert deterministic_sample(df, "doc_id", 1.0).count() == 10
+        _sample(df, 1.5)
+    assert _sample(df, 0.0).count() == 0
+    assert _sample(df, 1.0).count() == 10
 
 
 def test_stratified_sample_per_stratum_and_null(spark):

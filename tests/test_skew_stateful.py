@@ -1,4 +1,4 @@
-"""Salted two-phase aggregation + stateful streaming dedup."""
+"""Salted two-phase aggregation."""
 
 from pyspark.sql import functions as F
 
@@ -25,38 +25,3 @@ def test_salted_plan_has_two_aggregations(spark):
     plan = salted_distinct_stats(ev, "user_id", "event_type")._jdf.queryExecution().executedPlan().toString()
     # the salt column must appear in the first grouping
     assert "_salt" in plan
-
-
-def test_streaming_stateful_dedup(spark, tmp_path):
-    from dss_plugin_nlp_analysis_spark.streaming.stateful_dedup import streaming_exact_dedup
-
-    src = str(tmp_path / "src")
-    # two batches (files) with overlapping texts: batch2 repeats batch1
-    spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], "id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(3, "alpha beta"), (4, "epsilon zeta")], "id long, text string"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    deduped = streaming_exact_dedup(stream, "id", "text")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT id FROM dedup_out").collect()
-    ids = sorted(r["id"] for r in rows)
-    # one of {1,3} survives (same fingerprint), plus 2 and 4
-    assert len(ids) == 3 and 2 in ids and 4 in ids and (1 in ids) != (3 in ids)

@@ -37,18 +37,6 @@ def test_native_is_codegen_not_udf(spark):
     assert "BatchEvalPython" not in explained and "ArrowEvalPython" not in explained
 
 
-def test_clean_text_rows(spark):
-    # P7 (reference cleaning_utils.py:43-57): strip, ""→NULL, drop rows
-    df = spark.createDataFrame(
-        [("  a  ", "x"), ("", "y"), ("   ", "z"), ("b", None)],
-        "t string, u string",
-    )
-    from dss_plugin_nlp_analysis_spark.operators.textprep import clean_text_rows
-
-    got = [(r["t"], r["u"]) for r in clean_text_rows(df, ["t", "u"]).collect()]
-    assert got == [("a", "x")]
-
-
 def test_native_equals_kernel_random_batch(spark):
     # randomized equivalence over the \r\n/\r/\n classes, one Spark job
     import random
