@@ -38,7 +38,7 @@ Scale shape (what survives 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -64,47 +64,95 @@ __all__ = [
 ]
 
 
-def _rank_edge_prep(
-    edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared PageRank-family input prep: DISTINCT non-loop edges with
-    the iteration-invariant outdeg pre-joined (computed once, lineage cut
-    once, reused every round — outdeg >= 1 for every src by construction)
-    plus the node universe."""
-    e = (
+def _simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """DISTINCT non-loop ``(src, dst)`` edges. ``!=`` is NULL on a NULL
+    endpoint, so edges with a missing end drop out with the loops."""
+    return (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    nodes = (
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """The node universe of an edge frame: distinct ``src ∪ dst``."""
+    return (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    return e.join(outdeg, "src").localCheckpoint(), nodes
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple edge set as ``(a, b)`` with ``a < b``."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame, name: str = "deg") -> DataFrame:
+    """(node, ``name``): per-node degree of an ``_undirected`` edge set."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .union(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
+
+def _check_rank_args(
+    iterations: int, num: int, den: int, name: str, *, damping: bool
+) -> None:
+    """Reject bad rank-family parameters before any Spark job runs: the
+    ratio ``num/den`` must be a non-negative rational, and a damping
+    factor (``damping=True``) must also be at most 1 — above it the base
+    term goes negative and breaks the non-negative ``div`` contract."""
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    if num < 0 or den < 1 or (damping and num > den):
+        want = "in [0, 1]" if damping else "a non-negative rational"
+        raise ValueError(f"{name} must be {want}, got {num}/{den}")
 
 
 def _rank_fixpoint(
-    e_deg: DataFrame,
-    bases: DataFrame,
+    e: DataFrame,
+    share: str,
+    nodes: DataFrame,
+    base: Column,
+    rank0: Column,
     iterations: int,
-    damp_num: int,
-    damp_den: int,
+    num: int,
+    den: int,
 ) -> DataFrame:
-    """The ONE damped-sum integer fixpoint loop behind ``pagerank`` and
-    ``personalized_pagerank`` — parameterized by per-node (base, rank0)
-    columns in ``bases`` (already lineage-cut). Per iteration: edges ⋈
-    ranks equi-join, map-side-combinable sum, per-round localCheckpoint
-    (see module doc)."""
+    """The ONE damped-sum integer fixpoint loop, behind ``pagerank``,
+    ``personalized_pagerank``, ``katz_centrality`` and
+    ``weighted_pagerank``. Per iteration, all int64::
+
+        incoming(v) = sum(share(u -> v) for each edge u -> v)   (order-free)
+        rank'(v)    = base(v) + (num * incoming(v)) div den
+
+    ``e`` is the lineage-cut edge table (src, dst plus whatever ``share``
+    reads); ``share`` is a SQL expression over it and the source's
+    ``rank`` — ``rank div outdeg`` (PageRank), ``rank`` (Katz) or
+    ``(rank * w) div totw`` (weighted). ``base`` and ``rank0`` are
+    Columns over ``nodes``; the (node, base, rank0) table is cut once.
+    Per iteration: edges ⋈ ranks equi-join, map-side-combinable sum,
+    per-round localCheckpoint (see module doc). Returns (node, rank)."""
+    bases = nodes.select(
+        "node",
+        base.cast("long").alias("base"),
+        rank0.cast("long").alias("rank0"),
+    ).localCheckpoint()
     ranks = bases.select("node", F.col("rank0").alias("rank"))
     for _ in range(iterations):
         incoming = (
-            e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank div outdeg").alias("share"),
-            )
+            e.join(ranks.withColumnRenamed("node", "src"), "src")
+            .select(F.col("dst").alias("node"), F.expr(share).alias("share"))
             .groupBy("node")
             .agg(F.sum("share").alias("incoming"))
         )
@@ -115,9 +163,9 @@ def _rank_fixpoint(
                 (
                     F.col("base")
                     + F.expr(
-                        f"(cast({damp_num} as bigint)"
+                        f"(cast({num} as bigint)"
                         f" * coalesce(incoming, cast(0 as bigint)))"
-                        f" div cast({damp_den} as bigint)"
+                        f" div cast({den} as bigint)"
                     )
                 ).alias("rank"),
             )
@@ -151,16 +199,14 @@ def pagerank(
                     = ((damp_den - damp_num) * init) div damp_den
                       + (damp_num * incoming(v)) div damp_den
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e_deg, nodes = _rank_edge_prep(edges, src, dst)
+    _check_rank_args(iterations, damp_num, damp_den, "damping", damping=True)
+    e = _simple_edges(edges, src, dst)
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     base = (damp_den - damp_num) * init // damp_den
-    bases = nodes.select(
-        "node",
-        F.lit(base).cast("long").alias("base"),
-        F.lit(init).cast("long").alias("rank0"),
-    ).localCheckpoint()
-    return _rank_fixpoint(e_deg, bases, iterations, damp_num, damp_den)
+    return _rank_fixpoint(
+        e.join(outdeg, "src").localCheckpoint(), "rank div outdeg",
+        _endpoints(e), F.lit(base), F.lit(init), iterations, damp_num, damp_den,
+    )
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -170,11 +216,7 @@ def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFr
     Two map-side-combinable groupBys + one node-keyed outer join — the
     degree histogram a KG build reports per checkpoint (north rule:
     per-partition lineage + metrics)."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _simple_edges(edges, src, dst)
     out_d = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_degree")
     )
@@ -210,30 +252,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     orientation turns the celebrity-node O(d²) blowup into the graph-wide
     minimum. Three equi-joins total (wedge build + closing-edge probe),
     all map-side combinable into one final count."""
-    und, deg = _undirected_simple(edges, src, dst)
+    und = _undirected(edges, src, dst)
+    deg = _degrees(und)
     tri = _oriented_triangles(und, deg)
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-def _undirected_simple(
-    edges: DataFrame, src: str, dst: str
-) -> tuple[DataFrame, DataFrame]:
-    """(undirected simple edge set ``(a < b)``, per-node degree table)."""
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    return und, deg
 
 
 def _oriented_triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
@@ -330,19 +352,14 @@ def neighbor_jaccard(
     while making jaccard_ppm exact for every emitted pair (candidate
     recall is still capped).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    if max_hub_degree is not None and max_hub_degree < 1:
+        raise ValueError(f"max_hub_degree must be >= 1, got {max_hub_degree}")
+    und = _undirected(edges, src, dst)
     # symmetric adjacency (node, nbr)
     adj = und.select(
         F.col("a").alias("node"), F.col("b").alias("nbr")
     ).union(und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    deg = _degrees(und)
     pivots = adj.select(F.col("nbr").alias("via"), F.col("node"))
     if max_hub_degree is not None:
         ok = deg.where(F.col("deg") <= max_hub_degree).select(
@@ -432,24 +449,11 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def degrees(e: DataFrame) -> DataFrame:
-        adj = e.select(F.col("a").alias("node")).union(
-            e.select(F.col("b").alias("node"))
-        )
-        return adj.groupBy("node").agg(F.count(F.lit(1)).alias("core_degree"))
+    und = _undirected(edges, src, dst).localCheckpoint()
 
     def peel(e: DataFrame) -> DataFrame:
-        keep = degrees(e).where(F.col("core_degree") >= k).select("node")
+        keep = _degrees(e, "core_degree").where(F.col("core_degree") >= k)
+        keep = keep.select("node")
         return (
             e.join(keep.withColumnRenamed("node", "a"), "a")
             .join(keep.withColumnRenamed("node", "b"), "b")
@@ -460,7 +464,7 @@ def k_core(
         e = und
         for _ in range(fixed_rounds):
             e = peel(e).localCheckpoint()
-        return degrees(e).where(F.col("core_degree") >= k)
+        return _degrees(e, "core_degree").where(F.col("core_degree") >= k)
 
     e = und
     prev_edges = e.count()
@@ -468,7 +472,7 @@ def k_core(
         e = peel(e).localCheckpoint()
         n = e.count()
         if n == prev_edges:
-            return degrees(e).where(F.col("core_degree") >= k)
+            return _degrees(e, "core_degree").where(F.col("core_degree") >= k)
         prev_edges = n
     raise RuntimeError(
         f"k_core did not converge in {max_rounds} rounds; raise max_rounds"
@@ -520,18 +524,8 @@ def hits(
     (``localCheckpoint``; see module doc)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint()
+    nodes = _endpoints(e).localCheckpoint()
 
     def half_step(scores: DataFrame, col: str, out: str, key_from: str,
                   key_to: str) -> DataFrame:
@@ -603,12 +597,8 @@ def transitive_closure(
     emptiness probe (one narrow scan of the just-checkpointed frontier)
     still runs and ends the loop early once the frontier empties, since
     an empty frontier stays empty."""
-    e = (
-        edges.select(F.col(child).alias("child"), F.col(parent).alias("parent"))
-        .where(F.col("child") != F.col("parent"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, child, parent).toDF("child", "parent")
+    e = e.localCheckpoint()
     closure = e.select(
         F.col("child").alias("node"), F.col("parent").alias("ancestor")
     ).withColumn("depth", F.lit(1)).localCheckpoint()
@@ -669,12 +659,7 @@ def random_walks(
     struct makes the pick total-ordered anyway."""
     if steps < 0:
         raise ValueError(f"steps must be >= 0, got {steps}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint()
     cur = (
         seeds.select(F.col(node_col).alias("walk_id"))
         .distinct()
@@ -725,12 +710,7 @@ def k_hop(
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint()
     visited = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
@@ -776,31 +756,22 @@ def personalized_pagerank(
         rank'(v)  = [v in seeds] * ((damp_den-damp_num)*init div damp_den)
                     + (damp_num * incoming(v)) div damp_den
 
-    Scale shape matches ``pagerank`` (the two share ``_rank_fixpoint``
-    — one loop body to maintain); the seed flag is precomputed once as
-    a node-keyed column, so the seed set costs one join total, not one
-    per iteration."""
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e_deg, nodes = _rank_edge_prep(edges, src, dst)
+    Scale shape matches ``pagerank`` (both run ``_rank_fixpoint``); the
+    seed flag is precomputed once as a node-keyed column, so the seed set
+    costs one join total, not one per iteration."""
+    _check_rank_args(iterations, damp_num, damp_den, "damping", damping=True)
+    e = _simple_edges(edges, src, dst)
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     base = (damp_den - damp_num) * init // damp_den
     s = seeds.select(F.col(node_col).alias("node")).distinct()
-    bases = (
-        nodes.join(s.withColumn("_seed", F.lit(1)), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("_seed").isNotNull(), F.lit(base))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("base"),
-            F.when(F.col("_seed").isNotNull(), F.lit(init))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("rank0"),
-        )
-        .localCheckpoint()
+    flagged = _endpoints(e).join(s.withColumn("_seed", F.lit(1)), "node", "left")
+    seeded = F.col("_seed").isNotNull()
+    return _rank_fixpoint(
+        e.join(outdeg, "src").localCheckpoint(), "rank div outdeg", flagged,
+        F.when(seeded, F.lit(base)).otherwise(F.lit(0)),
+        F.when(seeded, F.lit(init)).otherwise(F.lit(0)),
+        iterations, damp_num, damp_den,
     )
-    return _rank_fixpoint(e_deg, bases, iterations, damp_num, damp_den)
 
 
 def label_propagation(
@@ -833,12 +804,8 @@ def label_propagation(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = (
-        fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(fwd.union(fwd.select("dst", "src")), "src", "dst")
+    e = e.localCheckpoint()
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -912,12 +879,7 @@ def node2vec_walks(
         raise ValueError(f"steps must be >= 0, got {steps}")
     if p < 1 or q < 1:
         raise ValueError(f"p and q must be integers >= 1, got p={p} q={q}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint()
     adj = e.select(
         F.col("src").alias("_prev"), F.col("dst").alias("_dst"),
         F.lit(1).alias("_adj"),
@@ -995,9 +957,8 @@ def _min_label_fixpoint(
     """(node, lbl) where lbl = min node id reachable from node along
     edge direction (reverse=True follows edges backwards), self
     included. Iterates min-propagation to convergence (probe: any
-    changed label?), capped at max_iters; returns the fixpoint and
-    whether it converged via an attached marker row count contract —
-    callers treat hitting the cap as non-convergence."""
+    changed label?) and returns the fixpoint; raises ValueError if
+    max_iters rounds pass without converging."""
     s, d = ("dst", "src") if reverse else ("src", "dst")
     lbl = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
     for _ in range(max_iters):
@@ -1072,18 +1033,17 @@ def strongly_connected_components(
     limit(1).count() over a just-checkpointed frame. Returns
     (node, scc_id); scc_id is the component's minimum node id.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    remaining = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _simple_edges(edges, src, dst).localCheckpoint()
+    remaining = _endpoints(e).localCheckpoint()
+
+    def restrict(live: DataFrame, nodes: DataFrame) -> DataFrame:
+        # keep the live edges whose endpoints both remain
+        return (
+            live.join(nodes.select(F.col("node").alias("src")), "src", "left_semi")
+            .join(nodes.select(F.col("node").alias("dst")), "dst", "left_semi")
+            .localCheckpoint()
+        )
+
     assigned: list[DataFrame] = []
     re = e
     for _ in range(max_peel_rounds):
@@ -1100,11 +1060,7 @@ def strongly_connected_components(
                 singles.select("node", F.col("node").alias("scc_id"))
             )
             remaining = remaining.join(singles, "node", "left_anti").localCheckpoint()
-            re = (
-                re.join(remaining.select(F.col("node").alias("src")), "src", "left_semi")
-                .join(remaining.select(F.col("node").alias("dst")), "dst", "left_semi")
-                .localCheckpoint()
-            )
+            re = restrict(re, remaining)
         if remaining.limit(1).count() == 0:
             break
         fwd = _min_label_fixpoint(
@@ -1124,11 +1080,7 @@ def strongly_connected_components(
         remaining = remaining.join(scc, "node", "left_anti").localCheckpoint()
         if remaining.limit(1).count() == 0:
             break
-        re = (
-            re.join(remaining.select(F.col("node").alias("src")), "src", "left_semi")
-            .join(remaining.select(F.col("node").alias("dst")), "dst", "left_semi")
-            .localCheckpoint()
-        )
+        re = restrict(re, remaining)
     else:
         if remaining.limit(1).count() > 0:
             raise ValueError(
@@ -1180,12 +1132,7 @@ def co_citation(
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     pivot, leaf = (src, dst) if mode == "cocitation" else (dst, src)
-    e = (
-        edges.select(F.col(pivot).alias("p"), F.col(leaf).alias("n"))
-        .where(F.col("p").isNotNull() & F.col("n").isNotNull())
-        .where(F.col("p") != F.col("n"))
-        .distinct()
-    )
+    e = _simple_edges(edges, pivot, leaf).toDF("p", "n")
     if max_hub_degree is not None:
         if max_hub_degree < 1:
             raise ValueError(
@@ -1226,7 +1173,8 @@ def local_clustering(
     one map-side-combinable aggregate — no windows, no caps needed
     because orientation already bounds the wedge blowup.
     """
-    und, deg = _undirected_simple(edges, src, dst)
+    und = _undirected(edges, src, dst)
+    deg = _degrees(und)
     tri = _oriented_triangles(und, deg)
     corners = (
         tri.select(F.col("u").alias("node"))
@@ -1270,12 +1218,7 @@ def reciprocity(
     Scale shape: one distinct, one self-equi-join on the reversed
     ``(dst, src)`` key, one map-side-combinable aggregate on src.
     """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .where(F.col("s").isNotNull() & F.col("d").isNotNull())
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-    )
+    e = _simple_edges(edges, src, dst).toDF("s", "d")
     rev = e.select(
         F.col("d").alias("s"), F.col("s").alias("d"), F.lit(1).alias("_r")
     )
@@ -1328,7 +1271,8 @@ def resource_allocation(
     """
     if min_score_ppm < 0:
         raise ValueError(f"min_score_ppm must be >= 0, got {min_score_ppm}")
-    und, deg = _undirected_simple(edges, src, dst)
+    und = _undirected(edges, src, dst)
+    deg = _degrees(und)
     adj = und.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("z"), F.col("a").alias("n"))
     )
@@ -1385,49 +1329,16 @@ def katz_centrality(
     as ``pagerank``'s module doc, documented rather than silently
     saturated. Returns ``(node, katz_micro)``.
 
-    Scale shape: identical to the PageRank loop — edges ⋈ ranks equi-join
-    + map-side-combinable sum per iteration, lineage cut per round.
+    Scale shape: this is the PageRank loop (``_rank_fixpoint``) with
+    share = rank and base = rank0 = init — edges ⋈ ranks equi-join +
+    map-side-combinable sum per iteration, lineage cut per round.
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if alpha_num < 0 or alpha_den < 1:
-        raise ValueError(
-            f"alpha must be a non-negative rational, got {alpha_num}/{alpha_den}"
-        )
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
+    _check_rank_args(iterations, alpha_num, alpha_den, "alpha", damping=False)
+    e = _simple_edges(edges, src, dst).localCheckpoint()
+    ranks = _rank_fixpoint(
+        e, "rank", _endpoints(e), F.lit(init), F.lit(init),
+        iterations, alpha_num, alpha_den,
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
-    for _ in range(iterations):
-        incoming = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("rank").alias("incoming"))
-        )
-        ranks = (
-            nodes.join(incoming, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(init).cast("long")
-                    + F.expr(
-                        f"(cast({alpha_num} as bigint)"
-                        f" * coalesce(incoming, cast(0 as bigint)))"
-                        f" div cast({alpha_den} as bigint)"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
     return ranks.select("node", F.col("rank").alias("katz_micro"))
 
 
@@ -1461,12 +1372,12 @@ def weighted_pagerank(
     weights up to ~10^6 on ~10^3-node mass concentrations are safe).
     Returns ``(node, rank)`` in integer units of ``init``.
 
-    Scale shape: identical to ``pagerank`` — the weight and totw columns
-    ride the same pre-joined edge table, lineage cut once; per iteration
-    one equi-join + one combinable sum.
+    Scale shape: this is the PageRank loop (``_rank_fixpoint``) with
+    share = (rank * w) div totw — the weight and totw columns ride the
+    pre-joined edge table, lineage cut once; per iteration one equi-join
+    + one combinable sum.
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    _check_rank_args(iterations, damp_num, damp_den, "damping", damping=True)
     e = (
         edges.select(
             F.col(src).alias("src"),
@@ -1478,39 +1389,10 @@ def weighted_pagerank(
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
     totw = e.groupBy("src").agg(F.sum("w").alias("totw"))
     e_w = e.join(totw, "src").localCheckpoint()
     base = (damp_den - damp_num) * init // damp_den
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
-    for _ in range(iterations):
-        incoming = (
-            e_w.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(rank * w) div totw").alias("share"),
-            )
-            .groupBy("node")
-            .agg(F.sum("share").alias("incoming"))
-        )
-        ranks = (
-            nodes.join(incoming, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr(
-                        f"(cast({damp_num} as bigint)"
-                        f" * coalesce(incoming, cast(0 as bigint)))"
-                        f" div cast({damp_den} as bigint)"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+    return _rank_fixpoint(
+        e_w, "(rank * w) div totw", _endpoints(e_w), F.lit(base), F.lit(init),
+        iterations, damp_num, damp_den,
+    )

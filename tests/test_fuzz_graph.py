@@ -1,14 +1,18 @@
-"""Hypothesis fuzz of the graph family (pagerank, triangle_count, k_hop)
-against brute-force pure-Python references on random small graphs —
-contract-level: the integer fixpoint, the triangle invariant under the
-degree orientation, and shortest-hop BFS including cycles."""
+"""Hypothesis fuzz of the graph family (the four rank functions,
+triangle_count, k_hop, neighbor_jaccard, k_core) against brute-force
+pure-Python references on random small graphs — contract-level: the
+integer fixpoints, the triangle invariant under the degree orientation,
+and shortest-hop BFS including cycles."""
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from dss_plugin_nlp_analysis_spark.operators.graph import (
     k_hop,
+    katz_centrality,
     pagerank,
+    personalized_pagerank,
     triangle_count,
+    weighted_pagerank,
 )
 from tests.test_graph import py_pagerank
 
@@ -30,6 +34,110 @@ def test_pagerank_fuzz_vs_python(spark, edges, iters):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {r["node"]: r["rank"] for r in pagerank(df, iterations=iters).collect()}
     assert got == py_pagerank(edges, iterations=iters)
+
+
+# Rank-family inputs with the cases every prep must drop: self-loops,
+# parallel edges, NULL endpoints and (for weights) NULL or non-positive
+# weights.
+MAYBE_NODE = st.one_of(st.none(), NODE)
+RAW_EDGES = st.lists(st.tuples(MAYBE_NODE, MAYBE_NODE), min_size=1, max_size=24)
+WEIGHTED_EDGES = st.lists(
+    st.tuples(MAYBE_NODE, MAYBE_NODE, st.one_of(st.none(), st.integers(-2, 5))),
+    min_size=1,
+    max_size=24,
+)
+DAMPING = st.integers(1, 100).flatmap(
+    lambda den: st.tuples(st.integers(0, den), st.just(den))
+)
+
+
+def _py_damped_sum(edges, share, base, rank0, iterations, num, den):
+    """Brute-force rank fixpoint over a dict {(u, v): payload}:
+    rank'(v) = base(v) + (num * sum(share(rank(u), u, payload))) // den."""
+    nodes = {n for edge in edges for n in edge}
+    rank = {n: rank0(n) for n in nodes}
+    for _ in range(iterations):
+        incoming = dict.fromkeys(nodes, 0)
+        for (u, v), payload in edges.items():
+            incoming[v] += share(rank[u], u, payload)
+        rank = {n: base(n) + num * incoming[n] // den for n in nodes}
+    return rank
+
+
+def _py_simple(edges):
+    return {(s, d): None for s, d in edges if None not in (s, d) and s != d}
+
+
+def _rank_of(df, col="rank"):
+    return {r["node"]: r[col] for r in df.collect()}
+
+
+@given(RAW_EDGES, st.integers(1, 3), st.integers(0, 3), st.integers(1, 4))
+@FUZZ
+def test_katz_fuzz_vs_python(spark, edges, iters, a_num, a_den):
+    init = 10**6
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = _rank_of(
+        katz_centrality(
+            df, iterations=iters, init=init, alpha_num=a_num, alpha_den=a_den
+        ),
+        "katz_micro",
+    )
+    want = _py_damped_sum(
+        _py_simple(edges), lambda r, u, _: r, lambda n: init, lambda n: init,
+        iters, a_num, a_den,
+    )
+    assert got == want
+
+
+@given(WEIGHTED_EDGES, st.integers(1, 3), DAMPING)
+@FUZZ
+def test_weighted_pagerank_fuzz_vs_python(spark, edges, iters, damping):
+    num, den = damping
+    init = 10**9
+    w = {}
+    for s, d, x in edges:
+        if None not in (s, d, x) and s != d and x > 0:
+            w[(s, d)] = w.get((s, d), 0) + x
+    totw = {}
+    for (s, _), x in w.items():
+        totw[s] = totw.get(s, 0) + x
+    df = spark.createDataFrame(edges, "src long, dst long, weight long")
+    got = _rank_of(
+        weighted_pagerank(df, iterations=iters, init=init, damp_num=num, damp_den=den)
+    )
+    base = (den - num) * init // den
+    want = _py_damped_sum(
+        w, lambda r, u, x: r * x // totw[u], lambda n: base, lambda n: init,
+        iters, num, den,
+    )
+    assert got == want
+
+
+@given(RAW_EDGES, st.sets(st.integers(0, 9), max_size=4), st.integers(1, 3), DAMPING)
+@FUZZ
+def test_personalized_pagerank_fuzz_vs_python(spark, edges, seeds, iters, damping):
+    num, den = damping
+    init = 10**12
+    e = _py_simple(edges)
+    outdeg = {}
+    for s, _ in e:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    df = spark.createDataFrame(edges, "src long, dst long")
+    sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
+    got = _rank_of(
+        personalized_pagerank(
+            df, sdf, iterations=iters, init=init, damp_num=num, damp_den=den
+        )
+    )
+    base = (den - num) * init // den
+    want = _py_damped_sum(
+        e, lambda r, u, _: r // outdeg[u],
+        lambda n: base if n in seeds else 0,
+        lambda n: init if n in seeds else 0,
+        iters, num, den,
+    )
+    assert got == want
 
 
 def _py_triangles(edges):

@@ -42,6 +42,49 @@ def test_pagerank_matches_python_reference(spark):
     assert got == py_pagerank(EDGES, iterations=3)
 
 
+_BAD_RANK_ARGS = [
+    (fn, kw, "iterations" if "iterations" in kw else "damping")
+    for fn in ("pagerank", "personalized_pagerank", "weighted_pagerank")
+    for kw in (
+        {"iterations": 0},
+        {"damp_den": 0},
+        {"damp_num": 120},
+        {"damp_num": -1},
+    )
+] + [
+    ("katz_centrality", kw, "iterations" if "iterations" in kw else "alpha")
+    for kw in ({"iterations": 0}, {"alpha_den": 0}, {"alpha_num": -1})
+]
+
+
+@pytest.mark.parametrize(
+    "fn,kwargs,match",
+    _BAD_RANK_ARGS,
+    ids=[f"{fn}-{k}={v}" for fn, kw, _ in _BAD_RANK_ARGS for k, v in kw.items()],
+)
+def test_rank_family_rejects_bad_args_before_any_job(spark, fn, kwargs, match):
+    """Bad iteration counts and ratios raise ValueError up front: no Spark
+    job runs (a zero denominator used to surface as ZeroDivisionError
+    after the prep checkpoints, and damping above 1 was accepted)."""
+    from dss_plugin_nlp_analysis_spark.operators import graph
+
+    df = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1)], "src long, dst long, weight long"
+    )
+    args = (df,)
+    if fn == "personalized_pagerank":
+        args += (spark.createDataFrame([(1,)], "node long"),)
+    sc = spark.sparkContext
+    group = f"rank-args-{fn}-{sorted(kwargs.items())}"
+    sc.setJobGroup(group, "rank argument check")
+    try:
+        with pytest.raises(ValueError, match=match):
+            getattr(graph, fn)(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_pagerank_dangling_and_isolated_semantics(spark):
     # node 4 has out-edges but no in-edges: rank stays at the teleport base
     df = spark.createDataFrame(EDGES, "src long, dst long")
@@ -393,6 +436,9 @@ def test_neighbor_jaccard_hub_cap_drops_pivot_not_pairs(spark):
     # 2 and still reports the hub's TRUE degree 5
     pair01 = next(r for r in capped if (r[0], r[1]) == (0, 1))
     assert (pair01[3], pair01[4]) == (5, 2)
+    # a cap below 1 is an error, as in co_citation / resource_allocation
+    with pytest.raises(ValueError, match="max_hub_degree"):
+        neighbor_jaccard(df, max_hub_degree=0)
 
 
 def py_k_core(edges, k, rounds=None):

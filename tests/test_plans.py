@@ -269,16 +269,24 @@ def test_top_ngrams_take_ordered_not_global_sort(spark, docs):
     assert "Sort " not in plan.replace("TakeOrderedAndProject", ""), plan
 
 
-def test_pagerank_iteration_lineage_is_cut(spark):
+@pytest.mark.parametrize(
+    "fn",
+    ["pagerank", "personalized_pagerank", "katz_centrality", "weighted_pagerank"],
+)
+def test_pagerank_iteration_lineage_is_cut(spark, fn):
     # each iteration ends in localCheckpoint: the final plan must be a
     # scan of checkpointed rows, not a 3-round join tree (lineage growth
     # is THE driver-killer for iterative DataFrame algorithms)
-    from dss_plugin_nlp_analysis_spark.operators.graph import pagerank
+    from dss_plugin_nlp_analysis_spark.operators import graph
 
     edges = spark.createDataFrame(
-        [(i % 7, (i * 3) % 5) for i in range(30)], "src long, dst long"
+        [(i % 7, (i * 3) % 5, i % 4 + 1) for i in range(30)],
+        "src long, dst long, weight long",
     )
-    out = pagerank(edges, iterations=3)
+    args = (edges,)
+    if fn == "personalized_pagerank":
+        args += (spark.createDataFrame([(0,), (3,)], "node long"),)
+    out = getattr(graph, fn)(*args, iterations=3)
     plan = plan_of(out)
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan
     assert "Join" not in plan, plan
@@ -447,22 +455,6 @@ def test_char_pair_counts_take_ordered_not_global_sort(spark, docs):
     plan = plan_of(char_pair_counts(docs, "text", k=10))
     assert "TakeOrderedAndProject" in plan, plan
     assert "Window" not in plan, plan
-
-
-def test_personalized_pagerank_lineage_cut(spark):
-    """Same contract as pagerank: the returned ranks scan checkpointed
-    rows, not the 3-round join tree."""
-    from dss_plugin_nlp_analysis_spark.operators.graph import (
-        personalized_pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [(i % 7, (i * 3) % 5) for i in range(30)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,), (3,)], "node long")
-    plan = plan_of(personalized_pagerank(edges, seeds, iterations=3))
-    assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan, plan
-    assert "Join" not in plan, plan
 
 
 def test_transition_counts_single_user_window_no_cartesian(spark):

@@ -6,6 +6,9 @@ outside ``tests/``: ``__spark_entry__.py``, ``bench.py``, ``scripts/``,
 ``perfbench/`` or the package itself. A public name that only tests call
 is dead code with a test attached; delete both, or give it a line in
 ``TEST_ONLY`` saying why it stays.
+
+Private top-level helpers (``_name``) follow the same rule with no
+exceptions: a helper that lost its last caller outside ``tests/`` goes.
 """
 
 import ast
@@ -50,24 +53,34 @@ def _referenced_names() -> set[str]:
     return names
 
 
-def _public_definitions() -> dict[str, str]:
-    """name → ``module.py:line`` for every public top-level def/class."""
-    defs = {}
+def _definitions() -> list[tuple[str, str]]:
+    """(name, ``module.py:line``) for every top-level def/class."""
+    defs = []
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = ast.parse(path.read_text(encoding="utf-8"))
         for node in tree.body:
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
-                defs[node.name] = f"{path.relative_to(PACKAGE)}:{node.lineno}"
+            ):
+                defs.append(
+                    (node.name, f"{path.relative_to(PACKAGE)}:{node.lineno}")
+                )
     return defs
 
 
 def test_public_engine_names_have_non_test_callers():
     refs = _referenced_names()
-    defs = _public_definitions()
+    defs = {n: w for n, w in _definitions() if not n.startswith("_")}
     unreferenced = {n: where for n, where in defs.items() if n not in refs}
     test_only = sorted(f"{w} {n}" for n, w in unreferenced.items() if n not in TEST_ONLY)
     assert not test_only, f"public names only tests reference: {test_only}"
     stale = sorted(n for n in TEST_ONLY if n not in unreferenced)
     assert not stale, f"TEST_ONLY entries that are gone or now used: {stale}"
+
+
+def test_private_engine_helpers_have_non_test_callers():
+    refs = _referenced_names()
+    orphans = sorted(
+        f"{w} {n}" for n, w in _definitions() if n.startswith("_") and n not in refs
+    )
+    assert not orphans, f"private helpers with no caller outside tests: {orphans}"
