@@ -4236,6 +4236,9 @@ from dss_plugin_nlp_analysis_spark.operators.url import (  # noqa: E402
 from dss_plugin_nlp_analysis_spark.operators.textstats import (  # noqa: E402
     SCRIPT_RANGES as _SCRIPTS,
 )
+from dss_plugin_nlp_analysis_spark.functions.tokclass import (  # noqa: E402
+    EMOJI_PATTERN as _TOK_EMOJI,
+)
 from dss_plugin_nlp_analysis_spark.operators.kg import (  # noqa: E402
     DATELIKE_PATTERN as _KG_DATELIKE,
     DECIMAL_PATTERN as _KG_DEC,
@@ -9252,6 +9255,7 @@ def _oracle_dict(pat, onto, lm_values, lm_oov, thr_case) -> dict[str, str]:
                        OR regexp_matches(tok, '^\d{1,2}:\d{2}(:\d{2})?$') THEN 'datetime'
                      WHEN regexp_matches(lower(tok), '^\d+(\.\d+)?(km|m|cm|mm|kg|g|mg|lb|oz|mi|ft|in|%|°c|°f|°)$') THEN 'measure'
                      WHEN regexp_matches(tok, '^[$€£¥%©®™§±×÷=+<>^~|]+$') THEN 'symbol'
+                     WHEN regexp_matches(tok, '""" + _TOK_EMOJI + r"""') THEN 'emoji'
                      WHEN regexp_matches(tok, '^\s+$') THEN 'space'
                      ELSE 'word'
                    END AS cls,

@@ -324,9 +324,10 @@ def run_skew() -> dict:
     domain — the realistic ingest layout of a crawl — with one domain
     holding ~50% of all documents, then runs the triple-extraction job
     twice on the SAME cached input: once inheriting the skewed layout
-    (one straggler task carries half the corpus) and once with
-    ``repartition_by_url`` (an xxhash64(url) exchange before the match
-    stage; urls are distinct per doc, so the hot domain spreads evenly).
+    (one straggler task carries half the corpus) and once after
+    ``repartition(n, xxhash64(url))`` (the exchange
+    ``run_checkpointed_build`` puts before the match stage; urls are
+    distinct per doc, so the hot domain spreads evenly).
     Reports both walls and the speedup — the measured value of the salt
     exchange, not a design claim."""
     spark = make_spark(CPUS)
@@ -358,9 +359,10 @@ def run_skew() -> dict:
         onto = kg_oracle_ontology_df(spark)
 
         def job(salt: int | None):
+            src = docs.repartition(salt, F.xxhash64("url")) if salt else docs
             build_triples(
-                docs, onto, url_col="url", lang_col="lang", ts_col=None,
-                category_col=None, languages=LANGS, repartition_by_url=salt,
+                src, onto, url_col="url", lang_col="lang", ts_col=None,
+                category_col=None, languages=LANGS,
             ).select(F.count("*")).collect()
 
         out: dict[str, dict] = {}

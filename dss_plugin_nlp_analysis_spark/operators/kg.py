@@ -11,6 +11,15 @@ tag→canonical map ships in the ontology's broadcast, applied per match
 by the kernel UDF's triples emitter — no iterative distributed CC and no
 join is needed (a billion-node alias graph would need both;
 ``canonical_map`` is the one place that would change).
+
+The operators over the triple table share their preps, so each has one
+definition: ``_facts`` (the non-NULL (subj, pred, obj[, ts]) rows under
+the standard names), ``_doc_mentions`` (distinct document mentions),
+``_co_mentions`` (the ``obj_a < obj_b`` self-join of a mention frame on
+its document or sentence key), ``_sentence_relations`` (the connector
+between two entities co-mentioned in one sentence, for
+``relation_patterns`` and ``relation_extract``) and ``url.source_host``
+(the source key of a url subject).
 """
 
 from __future__ import annotations
@@ -22,6 +31,7 @@ from pyspark.sql import types as T
 from ..functions.textnorm import normalize_text
 from .ontology import TagOptions, broadcast_ontology, collect_ontology
 from .tagger import doc_udf
+from .url import source_host
 
 __all__ = [
     "canonical_map",
@@ -147,20 +157,19 @@ def build_triples(
     languages: list[str] | None = None,
     canonicalize: bool = True,
     skip_unknown: bool = True,
-    repartition_by_url: int | None = None,
 ) -> DataFrame:
     """Emit the triples table (one row per mention, no-match docs dropped).
 
-    Physical plan: optional repartition by ``xxhash64(url)`` (defuses
-    hot-domain skew before the embarrassingly-parallel match stage), one
-    ``tagger.doc_udf`` pass whose ``_triple_rows`` emitter resolves each
-    match's sentence and maps its tag to the canonical node, then one
-    codegen'd explode. The tag→canonical map (driver-computed,
-    ontology-sized) rides the ontology's broadcast instead of a
-    broadcast-join dimension, so the plan has zero joins, and zero
-    exchanges beyond the optional repartition.
-    ``plans.checkpoint.run_checkpointed_build`` does that repartition
-    itself before calling its ``triple_fn``.
+    Physical plan: one ``tagger.doc_udf`` pass whose ``_triple_rows``
+    emitter resolves each match's sentence and maps its tag to the
+    canonical node, then one codegen'd explode. The tag→canonical map
+    (driver-computed, ontology-sized) rides the ontology's broadcast
+    instead of a broadcast-join dimension, so the plan has zero joins and
+    zero exchanges. Hot-domain skew is defused upstream:
+    ``plans.checkpoint.run_checkpointed_build`` repartitions each bucket
+    group by ``xxhash64(url)`` before calling its ``triple_fn``; a direct
+    caller with a domain-partitioned input does the same repartition
+    itself.
 
     A streaming ``docs_df`` runs the same plan per micro-batch; it needs
     ``languages`` (or ``lang_col=None``), since the distinct-language
@@ -181,9 +190,6 @@ def build_triples(
         category_col is not None, state_key=("canonical_map", canonicalize),
         state=lambda: (canonical_map(rows) if canonicalize else {},),
     )
-
-    if repartition_by_url:
-        docs_df = docs_df.repartition(repartition_by_url, F.xxhash64(F.col(url_col)))
 
     udf = doc_udf(ref, _TRIPLE_ROWS_SCHEMA, _triple_rows, language, skip_unknown)
     lang_expr = F.col(lang_col) if lang_col else F.lit(language)
@@ -255,37 +261,59 @@ def tag_cooccurrence(
     token-level pairing would; AQE skew-splits tag-dense documents. The
     final count is map-side combinable on (obj_a, obj_b).
     """
-    d = triples.select(
-        F.col(subj).alias("s"), F.col(obj).alias("o")
-    ).distinct()
-    left = d.select("s", F.col("o").alias("obj_a"))
-    right = d.select("s", F.col("o").alias("obj_b"))
     return (
-        left.join(right, "s")
-        .where(F.col("obj_a") < F.col("obj_b"))
+        _co_mentions(_doc_mentions(triples, subj, obj), ["s"])
         .groupBy("obj_a", "obj_b")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= min_count)
     )
 
 
-def _distinct_facts(
-    triples: DataFrame, subj: str, pred: str, obj: str
-) -> DataFrame:
-    """The distinct ``(subj, pred, obj)`` facts of ``triples`` that have no
-    NULL component."""
+def _doc_mentions(triples: DataFrame, subj: str, obj: str) -> DataFrame:
+    """The distinct (s, obj) document mentions of ``triples`` with a
+    non-NULL object."""
     return (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
+        triples.select(F.col(subj).alias("s"), F.col(obj).alias("obj"))
+        .where(F.col("obj").isNotNull())
         .distinct()
+    )
+
+
+def _co_mentions(m: DataFrame, keys: list[str]) -> DataFrame:
+    """Self-join of the mention frame ``m`` on ``keys`` (``["s"]``: one
+    document, ``["s", "si"]``: one sentence). Every other column of ``m``
+    comes out twice, suffixed ``_a`` and ``_b``; each unordered pair of
+    distinct objects appears once, as ``obj_a < obj_b`` (a NULL object
+    never pairs)."""
+    rest = [c for c in m.columns if c not in keys]
+
+    def side(suffix: str) -> DataFrame:
+        return m.select(*keys, *[F.col(c).alias(c + suffix) for c in rest])
+
+    return side("_a").join(side("_b"), keys).where(
+        F.col("obj_a") < F.col("obj_b")
+    )
+
+
+def _facts(
+    triples: DataFrame,
+    subj: str,
+    pred: str,
+    obj: str,
+    ts_col: str | None = None,
+) -> DataFrame:
+    """The rows of ``triples`` with no NULL subj, pred or obj (nor ts, when
+    ``ts_col`` is given), projected to ``subj``/``pred``/``obj``[/``ts``].
+    One row per input row: callers that need distinct facts add
+    ``.distinct()``. The filter runs BEFORE the renaming projection: the
+    original Column refs resolve even if the input carries duplicate
+    names (after the select they would need analyzer rescue)."""
+    cols = [subj, pred, obj] + ([ts_col] if ts_col is not None else [])
+    keep = F.col(subj).isNotNull()
+    for c in cols[1:]:
+        keep = keep & F.col(c).isNotNull()
+    return triples.where(keep).select(
+        *[F.col(c).alias(n) for c, n in zip(cols, ("subj", "pred", "obj", "ts"))]
     )
 
 
@@ -349,7 +377,7 @@ def negative_samples(
     ents_idx = triples.sparkSession.createDataFrame(
         [(i, e) for i, e in enumerate(ents)], ["_idx", "neg_obj"]
     )
-    base = _distinct_facts(triples, subj, pred, obj)
+    base = _facts(triples, subj, pred, obj).distinct()
     ranks = F.explode(F.array(*[F.lit(i) for i in range(n_per)])).alias(
         "neg_rank"
     )
@@ -484,7 +512,7 @@ def transe_ranks(
     """
     if dims < 1:
         raise ValueError(f"dims must be >= 1, got {dims}")
-    base = _distinct_facts(triples, subj, pred, obj)
+    base = _facts(triples, subj, pred, obj).distinct()
     ents = base.select(F.col("obj").alias("cand")).distinct()
 
     cands = base.join(F.broadcast(ents))
@@ -604,20 +632,7 @@ def triple_delta(
     """
 
     def keys(t: DataFrame, marker: str) -> DataFrame:
-        return (
-            t.select(
-                F.col(subj).alias("subj"),
-                F.col(pred).alias("pred"),
-                F.col(obj).alias("obj"),
-            )
-            .where(
-                F.col(subj).isNotNull()
-                & F.col(pred).isNotNull()
-                & F.col(obj).isNotNull()
-            )
-            .distinct()
-            .withColumn(marker, F.lit(1))
-        )
+        return _facts(t, subj, pred, obj).distinct().withColumn(marker, F.lit(1))
 
     o = keys(old, "_in_old")
     n = keys(new, "_in_new")
@@ -709,18 +724,7 @@ def predicate_profile(
     map-side-combinable groupBys joined on ``pred`` (predicate-count
     rows, effectively a dimension join; AQE broadcasts it). No windows,
     no collects."""
-    d = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-    )
+    d = _facts(triples, subj, pred, obj)
     dd = d.distinct()
     per_subj = dd.groupBy("pred", "subj").agg(
         F.count(F.lit(1)).alias("n_obj")
@@ -839,7 +843,7 @@ def linearize_triples(
     cap upstream if a subject fans out pathologically). The sort happens
     per-row inside ``sort_array`` after aggregation — no global or
     per-key shuffle sort."""
-    d = _distinct_facts(triples, subj, pred, obj)
+    d = _facts(triples, subj, pred, obj).distinct()
     return (
         d.groupBy("subj")
         .agg(F.sort_array(F.collect_set(F.struct("pred", "obj"))).alias("ps"))
@@ -884,23 +888,10 @@ def current_facts(
     collapse, then a per-(s,p) max-struct argmax. No windows over the
     mention stream, no collects."""
     h = (
-        triples.where(  # filter BEFORE the renaming projection: the
-            # original Column refs disambiguate even if the input carries
-            # duplicate names (post-select they'd need analyzer rescue)
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-            & F.col(ts_col).isNotNull()
-        )
-        .select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-            F.col(ts_col).alias("_ts"),
-        )
+        _facts(triples, subj, pred, obj, ts_col)
         .groupBy("subj", "pred", "obj")
         .agg(
-            F.max("_ts").alias("last_seen"),
+            F.max("ts").alias("last_seen"),
             F.count(F.lit(1)).alias("n_mentions"),
         )
     )
@@ -1100,27 +1091,22 @@ def ntriples_lines(
 
     Returns (subj, pred, obj, line).
     """
-    t = triples.where(
-        F.col(subj).isNotNull() & F.col(pred).isNotNull() & F.col(obj).isNotNull()
-    )
-    s_iri = F.concat(F.lit("<"), _chain_replace(F.col(subj), _NT_IRI_ESCAPES), F.lit(">"))
+    s_iri = F.concat(F.lit("<"), _chain_replace(F.col("subj"), _NT_IRI_ESCAPES), F.lit(">"))
     p_iri = F.concat(
         F.lit("<"), F.lit(pred_namespace),
-        _chain_replace(F.col(pred), _NT_IRI_ESCAPES), F.lit(">"),
+        _chain_replace(F.col("pred"), _NT_IRI_ESCAPES), F.lit(">"),
     )
     if obj_namespace is None:
         o_term = F.concat(
-            F.lit('"'), _chain_replace(F.col(obj), _NT_LIT_ESCAPES), F.lit('"')
+            F.lit('"'), _chain_replace(F.col("obj"), _NT_LIT_ESCAPES), F.lit('"')
         )
     else:
         o_term = F.concat(
             F.lit("<"), F.lit(obj_namespace),
-            _chain_replace(F.col(obj), _NT_IRI_ESCAPES), F.lit(">"),
+            _chain_replace(F.col("obj"), _NT_IRI_ESCAPES), F.lit(">"),
         )
-    return t.select(
-        F.col(subj).alias("subj"),
-        F.col(pred).alias("pred"),
-        F.col(obj).alias("obj"),
+    return _facts(triples, subj, pred, obj).select(
+        "subj", "pred", "obj",
         F.concat_ws(" ", s_iri, p_iri, o_term, F.lit(".")).alias("line"),
     )
 
@@ -1188,6 +1174,63 @@ def hearst_patterns(
     )
 
 
+def _sentence_relations(triples: DataFrame, max_connector_chars: int) -> DataFrame:
+    """(subj, sent_idx, connector, obj_a, obj_b, head, tail) for every pair
+    of distinct entities co-mentioned in one sentence of the
+    ``build_triples`` stream, ``connector`` being the normalized text
+    between their surface forms (``relation_patterns`` states the
+    contract). ``head`` is the entity whose surface form occurs first."""
+    if max_connector_chars < 1:
+        raise ValueError(
+            f"max_connector_chars must be >= 1, got {max_connector_chars}"
+        )
+    m = (
+        triples.select(
+            F.col("subj").alias("s"), F.col("sent_idx").alias("si"),
+            "sentence", "obj", "keyword",
+        )
+        .where(F.col("obj").isNotNull() & F.col("si").isNotNull())
+        .distinct()
+    )
+    low = F.lower(F.col("sentence_a"))
+    pos_a = F.instr(low, F.lower(F.col("keyword_a")))
+    pos_b = F.instr(low, F.lower(F.col("keyword_b")))
+    a_first = pos_a <= pos_b
+    # direction-normalized: first surface occurrence speaks first
+    first_end = F.when(a_first, pos_a + F.length("keyword_a")).otherwise(
+        pos_b + F.length("keyword_b")
+    )
+    second_start = F.greatest(pos_a, pos_b)
+    # greatest(…, 0): overlapping surface forms would make the gap
+    # negative — '' in Spark but an error in ANSI substr, so clamp in both
+    connector = F.regexp_replace(
+        F.trim(
+            F.substring(
+                low, first_end, F.greatest(second_start - first_end, F.lit(0))
+            )
+        ),
+        r"\s+",
+        " ",
+    )
+    return (
+        _co_mentions(m, ["s", "si"])
+        .where((pos_a > 0) & (pos_b > 0))
+        .select(
+            F.col("s").alias("subj"),
+            F.col("si").alias("sent_idx"),
+            connector.alias("connector"),
+            "obj_a",
+            "obj_b",
+            F.when(a_first, F.col("obj_a")).otherwise(F.col("obj_b")).alias("head"),
+            F.when(a_first, F.col("obj_b")).otherwise(F.col("obj_a")).alias("tail"),
+        )
+        .where(
+            (F.col("connector") != "")
+            & (F.length("connector") <= max_connector_chars)
+        )
+    )
+
+
 def relation_patterns(
     triples: DataFrame,
     *,
@@ -1218,58 +1261,9 @@ def relation_patterns(
     ``tag_cooccurrence`` — then one combinable groupBy(connector) with
     a distinct-pair count. No windows, no cartesians.
     """
-    if max_connector_chars < 1:
-        raise ValueError(
-            f"max_connector_chars must be >= 1, got {max_connector_chars}"
-        )
-    m = (
-        triples.select("subj", "sent_idx", "sentence", "obj", "keyword")
-        .where(F.col("obj").isNotNull() & F.col("sent_idx").isNotNull())
-        .distinct()
-    )
-    a = m.select(
-        F.col("subj").alias("s"), F.col("sent_idx").alias("si"),
-        F.col("sentence").alias("sent"),
-        F.col("obj").alias("obj_a"), F.col("keyword").alias("kw_a"),
-    )
-    b = m.select(
-        F.col("subj").alias("s"), F.col("sent_idx").alias("si"),
-        F.col("obj").alias("obj_b"), F.col("keyword").alias("kw_b"),
-    )
-    low = F.lower(F.col("sent"))
-    pos_a = F.instr(low, F.lower(F.col("kw_a")))
-    pos_b = F.instr(low, F.lower(F.col("kw_b")))
-    # direction-normalized: first surface occurrence speaks first
-    first_end = F.when(pos_a <= pos_b, pos_a + F.length("kw_a")).otherwise(
-        pos_b + F.length("kw_b")
-    )
-    second_start = F.greatest(pos_a, pos_b)
-    # greatest(…, 0): overlapping surface forms would make the gap
-    # negative — '' in Spark but an error in ANSI substr, so clamp in both
-    connector = F.regexp_replace(
-        F.trim(
-            F.substring(
-                low, first_end, F.greatest(second_start - first_end, F.lit(0))
-            )
-        ),
-        r"\s+",
-        " ",
-    )
-    pairs = (
-        a.join(b, ["s", "si"])
-        .where(F.col("obj_a") < F.col("obj_b"))
-        .where((pos_a > 0) & (pos_b > 0))
-        .select(
-            connector.alias("connector"),
-            F.col("obj_a"), F.col("obj_b"),
-        )
-        .where(
-            (F.col("connector") != "")
-            & (F.length("connector") <= max_connector_chars)
-        )
-    )
     return (
-        pairs.groupBy("connector")
+        _sentence_relations(triples, max_connector_chars)
+        .groupBy("connector")
         .agg(
             F.count(F.lit(1)).alias("n_mentions"),
             F.count_distinct(F.col("obj_a"), F.col("obj_b")).alias("n_pairs"),
@@ -1288,7 +1282,7 @@ def fact_support(
     KG-confidence signal (and the spam-resistance counterpart of
     ``domain_policy``). Input is the ``build_triples`` mention stream;
     ``domain_col`` names a source-domain column, or (default) the domain
-    is derived from the url in ``subj`` via the url_table rule.
+    is ``url.source_host`` of ``subj``.
 
     Returns per undirected co-mentioned entity pair (obj_a < obj_b):
     n_mentions (co-mention sentences), n_docs, n_domains, and
@@ -1301,16 +1295,7 @@ def fact_support(
     count-distincts (Spark expands these map-side; the pair key count is
     ontology²-bounded). No windows.
     """
-    if domain_col is None:
-        dom = F.regexp_extract(
-            F.lower(F.col("subj")),
-            r"^[a-z][a-z0-9+.-]*://([^/:?#@]*@)?([^/:?#]+)",
-            2,
-        )
-        # bare doc-id subj (no scheme): the id itself is the source key
-        dom = F.when(dom != "", dom).otherwise(F.lower(F.col("subj")))
-    else:
-        dom = F.col(domain_col)
+    dom = source_host(F.col("subj")) if domain_col is None else F.col(domain_col)
     m = (
         triples.select(
             F.col("subj").alias("s"),
@@ -1318,18 +1303,16 @@ def fact_support(
             F.col("obj"),
             dom.alias("dom"),
         )
-        .where(F.col("obj").isNotNull() & F.col("sent_idx").isNotNull())
+        .where(F.col("obj").isNotNull() & F.col("si").isNotNull())
         .distinct()
     )
-    a = m.select("s", "si", "dom", F.col("obj").alias("obj_a"))
-    b = m.select("s", "si", F.col("obj").alias("obj_b"))
-    pairs = a.join(b, ["s", "si"]).where(F.col("obj_a") < F.col("obj_b"))
     return (
-        pairs.groupBy("obj_a", "obj_b")
+        _co_mentions(m, ["s", "si"])
+        .groupBy("obj_a", "obj_b")
         .agg(
             F.count(F.lit(1)).alias("n_mentions"),
             F.count_distinct(F.col("s")).alias("n_docs"),
-            F.count_distinct(F.col("dom")).alias("n_domains"),
+            F.count_distinct(F.col("dom_a")).alias("n_domains"),
         )
         .withColumn(
             "diversity_ppm",
@@ -1337,12 +1320,12 @@ def fact_support(
         )
     )
 
+
 def relation_extract(
     triples: DataFrame,
     connectors: DataFrame,
     *,
     max_connector_chars: int = 40,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Second half of the distant-supervision loop ``relation_patterns``
     opens: apply a vetted connector lexicon back over the mention stream
@@ -1359,77 +1342,22 @@ def relation_extract(
     read in surface order: "X was founded by Y" → (x, was founded by,
     y)), deduplicated per sentence.
 
-    Scale shape: the same distinct-projection + sentence-keyed
-    self-equi-join as ``relation_patterns`` (pair blowup bounded by
+    Scale shape: the same sentence pairs as ``relation_patterns``
+    (``_sentence_relations``: pair blowup bounded by
     mentions-per-sentence), then a BROADCAST equi-join against the
     connector dim — the lexicon is human-curated, i.e. thousands of
-    rows, never corpus-sized (``broadcast_dim=False`` falls back to a
-    shuffled equi-join when the dim is an unbounded mined aggregate
-    instead). One distinct on the ontology²-bounded
-    output. No windows.
+    rows, never corpus-sized, so the broadcast hint is fixed. One
+    distinct on the ontology²-bounded output. No windows.
     """
-    if max_connector_chars < 1:
-        raise ValueError(
-            f"max_connector_chars must be >= 1, got {max_connector_chars}"
+    dim = F.broadcast(connectors.select("connector").distinct())
+    return (
+        _sentence_relations(triples, max_connector_chars)
+        .join(dim, "connector")
+        .select(
+            "subj", "sent_idx", "head", F.col("connector").alias("relation"), "tail"
         )
-    m = (
-        triples.select("subj", "sent_idx", "sentence", "obj", "keyword")
-        .where(F.col("obj").isNotNull() & F.col("sent_idx").isNotNull())
         .distinct()
     )
-    a = m.select(
-        F.col("subj").alias("s"), F.col("sent_idx").alias("si"),
-        F.col("sentence").alias("sent"),
-        F.col("obj").alias("obj_a"), F.col("keyword").alias("kw_a"),
-    )
-    b = m.select(
-        F.col("subj").alias("s"), F.col("sent_idx").alias("si"),
-        F.col("obj").alias("obj_b"), F.col("keyword").alias("kw_b"),
-    )
-    low = F.lower(F.col("sent"))
-    pos_a = F.instr(low, F.lower(F.col("kw_a")))
-    pos_b = F.instr(low, F.lower(F.col("kw_b")))
-    first_end = F.when(pos_a <= pos_b, pos_a + F.length("kw_a")).otherwise(
-        pos_b + F.length("kw_b")
-    )
-    second_start = F.greatest(pos_a, pos_b)
-    connector = F.regexp_replace(
-        F.trim(
-            F.substring(
-                low, first_end, F.greatest(second_start - first_end, F.lit(0))
-            )
-        ),
-        r"\s+",
-        " ",
-    )
-    head = F.when(pos_a <= pos_b, F.col("obj_a")).otherwise(F.col("obj_b"))
-    tail = F.when(pos_a <= pos_b, F.col("obj_b")).otherwise(F.col("obj_a"))
-    pairs = (
-        a.join(b, ["s", "si"])
-        .where(F.col("obj_a") < F.col("obj_b"))
-        .where((pos_a > 0) & (pos_b > 0))
-        .select(
-            F.col("s").alias("subj"),
-            F.col("si").alias("sent_idx"),
-            connector.alias("relation"),
-            head.alias("head"),
-            tail.alias("tail"),
-        )
-        .where(
-            (F.col("relation") != "")
-            & (F.length("relation") <= max_connector_chars)
-        )
-    )
-    # broadcast_dim=True fits the documented contract (human-curated
-    # lexicon, thousands of rows); pass False when the dim is itself a
-    # corpus-mined aggregate whose size the caller can't bound — the
-    # join then falls back to a shuffled equi-join on the connector key
-    dim = connectors.select(F.col("connector").alias("relation")).distinct()
-    if broadcast_dim:
-        dim = F.broadcast(dim)
-    return pairs.join(dim, "relation").select(
-        "subj", "sent_idx", "head", "relation", "tail"
-    ).distinct()
 
 
 def cooccurrence_lift(
@@ -1461,24 +1389,17 @@ def cooccurrence_lift(
     pair table by entity key — both broadcastable (|ontology| rows).
     No windows.
     """
-    d = (
-        triples.select(F.col(subj).alias("s"), F.col(obj).alias("o"))
-        .where(F.col(obj).isNotNull())
-        .distinct()
-    )
-    ent = d.groupBy("o").agg(F.count(F.lit(1)).alias("n"))
+    d = _doc_mentions(triples, subj, obj)
+    ent = d.groupBy("obj").agg(F.count(F.lit(1)).alias("n"))
     corpus = d.select(F.count_distinct("s").alias("n_corpus"))
-    left = d.select("s", F.col("o").alias("obj_a"))
-    right = d.select("s", F.col("o").alias("obj_b"))
     pairs = (
-        left.join(right, "s")
-        .where(F.col("obj_a") < F.col("obj_b"))
+        _co_mentions(d, ["s"])
         .groupBy("obj_a", "obj_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
         .where(F.col("n_ab") >= min_pair_docs)
     )
-    na = F.broadcast(ent.select(F.col("o").alias("obj_a"), F.col("n").alias("n_a")))
-    nb = F.broadcast(ent.select(F.col("o").alias("obj_b"), F.col("n").alias("n_b")))
+    na = F.broadcast(ent.select(F.col("obj").alias("obj_a"), F.col("n").alias("n_a")))
+    nb = F.broadcast(ent.select(F.col("obj").alias("obj_b"), F.col("n").alias("n_b")))
     return (
         pairs.join(na, "obj_a")
         .join(nb, "obj_b")
@@ -1518,8 +1439,8 @@ def truth_discovery(
     contested fact.
 
     ``domain_col`` names the source-domain column; by default the
-    domain is derived from the url in ``source`` (url_table rule,
-    falling back to the bare source id).
+    domain is ``url.source_host`` of ``source`` (the url's host, or the
+    bare source id).
 
     Scale shape: two stacked combinable groupBys — (entity, attr,
     value) with two count-distincts, then (entity, attr) where the
@@ -1527,15 +1448,9 @@ def truth_discovery(
     counts + value — no window, no sort). Output is slot-bounded, far
     below the assertion count.
     """
-    if domain_col is None:
-        dom = F.regexp_extract(
-            F.lower(F.col(source_col)),
-            r"^[a-z][a-z0-9+.-]*://([^/:?#@]*@)?([^/:?#]+)",
-            2,
-        )
-        dom = F.when(dom != "", dom).otherwise(F.lower(F.col(source_col)))
-    else:
-        dom = F.col(domain_col)
+    dom = (
+        source_host(F.col(source_col)) if domain_col is None else F.col(domain_col)
+    )
     votes = (
         facts.select(
             F.col(entity_col).alias("entity"),
@@ -1673,18 +1588,7 @@ def constraint_violations(
     countDistinct-shaped aggregate on (subj, pred), joined back by the
     same key. No windows, no collects.
     """
-    base = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-    )
+    base = _facts(triples, subj, pred, obj)
     r = rules.select(
         F.col(rule_pred_col).alias("pred"),
         F.col(pattern_col).alias("_pat"),
@@ -1747,20 +1651,7 @@ def decayed_fact_scores(
         raise ValueError(
             f"max_halvings must be in [0, 62], got {max_halvings}"
         )
-    base = (
-        triples.select(
-            F.col(subj).alias("subj"),
-            F.col(pred).alias("pred"),
-            F.col(obj).alias("obj"),
-            F.col(ts_col).alias("ts"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-            & F.col(ts_col).isNotNull()
-        )
-    )
+    base = _facts(triples, subj, pred, obj, ts_col)
     max_ts = base.agg(F.max("ts").alias("_max_ts"))
     aged = base.crossJoin(F.broadcast(max_ts)).withColumn(
         "_age",
@@ -1812,28 +1703,21 @@ def inverse_predicates(
     if min_support < 1:
         raise ValueError(f"min_support must be >= 1, got {min_support}")
     t = (
-        triples.select(
-            F.col(subj).alias("s"),
-            F.col(pred).alias("p"),
-            F.col(obj).alias("o"),
-        )
-        .where(
-            F.col(subj).isNotNull()
-            & F.col(pred).isNotNull()
-            & F.col(obj).isNotNull()
-        )
-        .where(F.col(subj) != F.col(obj))
+        _facts(triples, subj, pred, obj)
+        .where(F.col("subj") != F.col("obj"))
         .distinct()
     )
     rev = t.select(
-        F.col("o").alias("s"), F.col("p").alias("q"), F.col("s").alias("o")
+        F.col("obj").alias("subj"),
+        F.col("pred").alias("inv_pred"),
+        F.col("subj").alias("obj"),
     )
     pairs = (
-        t.join(rev, ["s", "o"])
-        .groupBy(F.col("p").alias("pred"), F.col("q").alias("inv_pred"))
+        t.join(rev, ["subj", "obj"])
+        .groupBy("pred", "inv_pred")
         .agg(F.count(F.lit(1)).cast("long").alias("support"))
     )
-    n_p = t.groupBy(F.col("p").alias("pred")).agg(
+    n_p = t.groupBy("pred").agg(
         F.count(F.lit(1)).cast("long").alias("n_facts")
     )
     return (

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "normalize_url",
     "url_table",
+    "source_host",
     "extract_links",
     "anchor_text_index",
     "snapshot_diff",
@@ -54,6 +55,8 @@ _FRAGMENT = r"#.*$"
 _UTM_MID = r"([?&])(?:utm_[a-z]+=[^&#]*&)+"
 _UTM_END = r"[?&]utm_[a-z]+=[^&#]*$"
 _SCHEME_HOST = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*"
+# group 2: the host of a lowercased url (userinfo and port dropped)
+_HOST = r"^[a-z][a-z0-9+.-]*://([^/:?#@]*@)?([^/:?#]+)"
 
 
 def normalize_url(col: Column) -> Column:
@@ -77,7 +80,7 @@ def url_table(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     .co.uk — swap in a PSL table via broadcast join when exactness
     matters)."""
     norm = normalize_url(F.col(url_col))
-    host = F.regexp_extract(norm, r"^[a-z][a-z0-9+.-]*://([^/:?#@]*@)?([^/:?#]+)", 2)
+    host = F.regexp_extract(norm, _HOST, 2)
     domain = F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
     return df.select(
         F.col(id_col).alias("id"),
@@ -85,6 +88,16 @@ def url_table(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
         host.alias("host"),
         domain.alias("domain"),
     )
+
+
+def source_host(col: Column) -> Column:
+    """The source key of a url: the lowercased url's host, or the
+    lowercased value itself when it has no scheme (a bare doc id is its
+    own source). The per-source count-distincts of ``fact_support``,
+    ``truth_discovery`` and ``crawl_frontier`` key on it."""
+    low = F.lower(col)
+    host = F.regexp_extract(low, _HOST, 2)
+    return F.when(host != "", host).otherwise(low)
 
 
 def extract_links(df: DataFrame, id_col: str, html_col: str) -> DataFrame:
@@ -307,19 +320,8 @@ def crawl_frontier(
     ).where(F.col(dst_col).isNotNull() & F.col(src_col).isNotNull())
     fetched = crawled.select(F.col(url_col).alias("dst")).distinct()
     frontier = e.join(fetched, "dst", "left_anti")
-    src_dom = F.regexp_extract(
-        F.lower(F.col("src")),
-        r"^[a-z][a-z0-9+.-]*://([^/:?#@]*@)?([^/:?#]+)",
-        2,
-    )
     return (
-        frontier.select(
-            "dst",
-            F.col("src"),
-            F.when(src_dom != "", src_dom)
-            .otherwise(F.lower(F.col("src")))
-            .alias("src_dom"),
-        )
+        frontier.select("dst", "src", source_host(F.col("src")).alias("src_dom"))
         .groupBy(F.col("dst").alias("url"))
         .agg(
             F.count(F.lit(1)).alias("n_inlinks"),

@@ -912,3 +912,78 @@ def test_new_session_never_receives_the_old_broadcast(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.strip().endswith("ok")
+
+
+def _ts(day):
+    import datetime
+
+    return datetime.datetime(2024, 1, day)
+
+
+# (subj, pred, obj, ts): clean facts (a repeated mention, an inverse pair,
+# a self-loop), then one row with each component NULL; the NULL-ts row
+# is a clean fact for the callers that take no timestamp
+_FACT_ROWS = [
+    ("https://a.example/1", "p", "x", _ts(1)),
+    ("https://a.example/1", "p", "y", _ts(3)),
+    ("https://a.example/1", "q", "x", _ts(2)),
+    ("x", "q", "https://a.example/1", _ts(20)),
+    ("https://b.example/2", "p", "x", _ts(1)),
+    ("https://b.example/2", "p", "x", _ts(10)),
+    ("y", "p", "https://b.example/2", _ts(5)),
+    ("y", "q", "y", _ts(6)),
+    (None, "p", "x", _ts(1)),
+    ("https://a.example/1", None, "y", _ts(2)),
+    ("https://a.example/1", "p", None, _ts(3)),
+    ("https://b.example/2", "q", "y", None),
+]
+
+
+def _fact_callers():
+    from dss_plugin_nlp_analysis_spark.operators import kg
+
+    def rules(t):
+        return t.sparkSession.createDataFrame(
+            [("p", "[xy]", 1), ("q", "x", 0)], "pred string, obj_pattern string, functional int"
+        )
+
+    return {
+        "negative_samples": (False, lambda t, **k: kg.negative_samples(t, **k, n_per=2)),
+        "transe_ranks": (False, kg.transe_ranks),
+        "triple_delta": (False, lambda t, **k: kg.triple_delta(
+            t.where(F.col(k.get("pred", "pred")) != "q"), t, **k
+        )),
+        "predicate_profile": (False, kg.predicate_profile),
+        "linearize_triples": (False, kg.linearize_triples),
+        "current_facts": (True, kg.current_facts),
+        "ntriples_lines": (False, kg.ntriples_lines),
+        "constraint_violations": (False, lambda t, **k: kg.constraint_violations(t, rules(t), **k)),
+        "decayed_fact_scores": (True, kg.decayed_fact_scores),
+        "inverse_predicates": (False, kg.inverse_predicates),
+    }
+
+
+@pytest.mark.parametrize("caller", sorted(_fact_callers()))
+def test_fact_callers_ignore_names_and_null_rows(spark, caller):
+    """Every caller of the shared fact prep gives the same rows on input
+    with other column names (and decoy columns under the default names)
+    that carries NULL subj, pred, obj and ts rows, as on the same rows
+    cleaned beforehand under the default names."""
+    uses_ts, fn = _fact_callers()[caller]
+    raw = spark.createDataFrame(
+        [(*r, "decoy", "decoy") for r in _FACT_ROWS],
+        "u string, rel string, val string, t timestamp, subj string, pred string",
+    )
+    width = 4 if uses_ts else 3
+    clean = spark.createDataFrame(
+        [r for r in _FACT_ROWS if None not in r[:width]],
+        "subj string, pred string, obj string, warc_ts timestamp",
+    )
+    names = dict(subj="u", pred="rel", obj="val") | ({"ts_col": "t"} if uses_ts else {})
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(fn(clean))
+    assert want
+    assert rows(fn(raw, **names)) == want

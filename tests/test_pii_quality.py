@@ -144,6 +144,26 @@ def test_normalize_url_contract(spark):
     assert out[7]["url_norm"] == "relative/no/scheme"  # untouched but lower-noop
 
 
+def test_source_host_contract(spark):
+    """The source key of fact_support, truth_discovery and crawl_frontier:
+    the lowercased url's host, else the lowercased value itself."""
+    from pyspark.sql import functions as F
+
+    from dss_plugin_nlp_analysis_spark.operators.url import source_host
+
+    want = {
+        "HTTPS://WWW.Example.COM/Path?q=1": "www.example.com",
+        "https://User@Host.Example.net:8080/P": "host.example.net",
+        "DOC-7": "doc-7",
+        "doc-8": "doc-8",
+        "http:///no-host": "http:///no-host",
+        None: None,
+    }
+    df = spark.createDataFrame([(u,) for u in want], "u string")
+    got = {r["u"]: r["h"] for r in df.select("u", source_host(F.col("u")).alias("h")).collect()}
+    assert got == want
+
+
 def test_dedup_lines_in_doc(spark):
     from dss_plugin_nlp_analysis_spark.operators.webclean import (
         dedup_lines_in_doc,

@@ -549,23 +549,6 @@ def test_group_capped_sample_no_window_single_shuffle(spark, docs):
     assert "MapInPandas" in plan, plan
 
 
-def test_triples_salt_repartition_exchange_present(spark, docs):
-    """repartition_by_url (the north-rule hot-domain salt) must insert
-    exactly one round-robin-defusing hash exchange on xxhash64(url)
-    before the match stage — and stay absent by default (bench --skew
-    measures its value; this pins the physical shape)."""
-    urls = docs.withColumn("url", F.concat(F.lit("https://h/"), F.col("doc_id").cast("string")))
-    salted = build_triples(
-        urls, kg_oracle_ontology_df(spark), url_col="url", lang_col="lang",
-        ts_col=None, category_col=None, languages=LANGS,
-        repartition_by_url=8,
-    )
-    plan = plan_of(salted)
-    assert "Exchange hashpartitioning(xxhash64" in plan, plan
-    # still exactly one non-broadcast exchange: the salt itself
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
 def test_skipgram_zero_shuffle(spark, docs):
     """Skip-gram generation is a pure map + explode: the token array is
     materialized once and both HOF lambdas index into it — no exchange

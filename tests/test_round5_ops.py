@@ -453,17 +453,6 @@ class TestRelationExtract:
         plan = plan_of(relation_extract(m, dim))
         assert "BroadcastHashJoin" in plan, plan
 
-    def test_unbounded_dim_opt_out(self, spark):
-        from dss_plugin_nlp_analysis_spark.operators.kg import relation_extract
-
-        m = _mentions(spark, [("d", 0, "a x b", "a", "a"), ("d", 0, "a x b", "b", "b")])
-        dim = spark.createDataFrame([("x",)], ["connector"])
-        # no broadcast HINT on the dim (AQE may still pick broadcast for a
-        # tiny side at runtime — that's fine); values must be identical
-        rows = {(r.head, r.relation, r.tail)
-                for r in relation_extract(m, dim, broadcast_dim=False).collect()}
-        assert rows == {("a", "x", "b")}
-
     def test_validation(self, spark):
         from dss_plugin_nlp_analysis_spark.operators.kg import relation_extract
 
